@@ -3,7 +3,8 @@
 Runs the headline catalog queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}.  ``SPARK_GRAFT_CPUS`` defaults to
+the machine's CPU count.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect, no disk write) — the honest measure of plan cost.
@@ -311,7 +312,7 @@ def _write_full_artifact(payload: dict) -> None:
 
         by_rows = max(driver_rows.LAST_GREEN.values(), default=0) + 1
         rnd = str(_detect_round(here, by_rows))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     suffix = "" if cpus == 32 else f"_c{cpus}"
     name = f"BENCH_FULL_r{int(rnd):02d}{suffix}.json"
     out = os.path.join(here, name)

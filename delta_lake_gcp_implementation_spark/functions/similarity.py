@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..checkpoints import checkpoint
+
 
 def as_double(vec: Column) -> Column:
     """Cast array<float> -> array<double> (matches oracle DOUBLE[])."""
@@ -149,16 +151,20 @@ def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     SQL text parses to the same HOF tree (zip_with/aggregate with a
     0D double accumulator, integer CASE weights), so bucket values are
     bit-identical to the per-plane Column path, which remains the
-    fallback for Column inputs or non-finite planes."""
+    fallback for Column inputs or non-finite planes.  The name is
+    backtick-quoted into the SQL text; a name containing a backtick
+    raises ``ValueError``."""
     finite = planes and all(
         r and all(math.isfinite(float(v)) for v in r) for r in planes
     )
     if isinstance(vec, str) and finite:
+        if "`" in vec:
+            raise ValueError(f"lsh_bucket: unsupported column name {vec!r}")
         terms = []
         for j, plane in enumerate(planes):
             arr = "array(" + ",".join(_sql_double(v) for v in plane) + ")"
             d = (
-                f"aggregate(zip_with({vec}, {arr}, (x, y) -> x * y), "
+                f"aggregate(zip_with(`{vec}`, {arr}, (x, y) -> x * y), "
                 "0D, (acc, x) -> acc + x)"
             )
             terms.append(f"(CASE WHEN {d} > 0 THEN {2 ** j}L ELSE 0L END)")
@@ -192,22 +198,12 @@ def project_vectors(
     project once and pass the frame down — otherwise each operator
     re-scans, re-casts, and pins its own copy in executor storage.
 
-    Block ownership (ADVICE r12): the ``localCheckpoint`` pins RDD
-    blocks in executor storage for the LIFETIME OF THE RDD REFERENCE,
-    not of the query — they sit outside the SQL cache, so
-    ``spark.catalog.clearCache()`` does not free them.  The CALLER
-    owns the blocks: a long-lived session issuing repeated catalog
-    calls should drop every reference to the returned frame when done
-    and let the ContextCleaner collect them (a JVM ``System.gc()``
-    forces the enqueue — the sweep tool's pattern).  Catalog builders
-    are per-call scopes, so their references die with the call; only
-    a driver program that CACHES returned frames across calls
-    accumulates blocks."""
+    The checkpoint belongs to the caller's scope (``checkpoints``)."""
     from ..tables import scale_out
 
     return scale_out(vectors).select(
         F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("v")
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
 
 def kmeans_fit(
@@ -391,7 +387,7 @@ def ivf_topk(
             "cell",
         )
         .withColumn("cn", norm(F.col("cv_vec")))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
@@ -617,7 +613,7 @@ def pq_fit(
 
     v = scale_out(vectors).select(
         F.col(id_col).alias("_pid"), as_double(F.col(vec_col)).alias("_pv")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     init = sorted(v.orderBy("_pid").limit(k).collect(), key=lambda r: r._pid)
     books = {
         s: [

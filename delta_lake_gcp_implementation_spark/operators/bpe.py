@@ -40,6 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint
+
 #: end-of-word sentinel symbol (kept multi-char so it can never collide
 #: with a real character or a merged pair of them).
 EOW = "</w>"
@@ -132,7 +134,7 @@ def bpe_train(
     Per iteration: one distributed pair-count (top row collected), one
     distributed fold, one localCheckpoint — nothing else leaves the
     cluster."""
-    state = init_symbols(vocab).localCheckpoint(eager=True)
+    state = init_symbols(vocab).transform(checkpoint)
     merges: list[Merge] = []
     for r in range(1, n_merges + 1):
         top = (
@@ -145,9 +147,7 @@ def bpe_train(
             break
         t = top[0]
         merges.append(Merge(r, t.left, t.right, int(t.cnt)))
-        state = apply_merge(state, t.left, t.right).localCheckpoint(
-            eager=True
-        )
+        state = apply_merge(state, t.left, t.right).transform(checkpoint)
     return merges, state
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint
+
 # broadcast-vs-partition decision shared with the TableStore MERGE
 # primitives; kept under the old private name for in-module callers
 from .sizing import fits_broadcast as _fits_broadcast
@@ -280,11 +282,11 @@ def connected_components_groups(
             F.col(id_col).alias("id"), F.col(group_col).alias("grp")
         )
         .distinct()
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     labels = ids.select(
         F.col(id_col).alias("id"), F.col(id_col).alias("component")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     bcast = _fits_broadcast(labels)
     for rnd in range(max_iterations):
         grp_min = (
@@ -372,7 +374,7 @@ def _finish_cc_round(labels, nbr_min, bcast, jump):
             obs,
             F.sum(F.col("__changed").cast("long")).alias("n_changed"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     changed = int(obs.get["n_changed"] or 0)
     return new_labels.drop("__changed"), changed
@@ -545,7 +547,7 @@ def ngram_jaccard_pairs(
     # the full shingle aggregation (the dominant cost of the operator)
     sets = sh.groupBy(id_col).agg(
         F.collect_set(F.xxhash64("shingle")).alias("sh_set")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     if candidates is None:
         ids = df.select(F.col(id_col))
         if not allow_quadratic:
@@ -636,11 +638,11 @@ def connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     labels = ids.select(
         F.col(id_col).alias("id"), F.col(id_col).alias("component")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     # labels are one row per doc — usually broadcastable, which keeps
     # the (much larger) edge table in place with zero shuffle on the
     # join side; fall back to a shuffled join at corpus scale
@@ -910,7 +912,7 @@ def substring_dup_positions(
             F.col("__toks"),
         )
         .select(F.col(id_col), "p", gh.alias("gh"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     occ = pos.groupBy("gh").agg(F.count(F.lit(1)).alias("n_occ"))
     return pos.join(occ, "gh").select(

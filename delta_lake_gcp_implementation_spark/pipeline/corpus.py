@@ -98,8 +98,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint, owned_checkpoints
 from ..operators import dedup as dedup_ops
-from . import storage as storage_mod
 from .storage import TableStore
 
 #: Persisted-index parameters — MUST match plans.textops
@@ -299,12 +299,9 @@ def ingest_batch(
     """Dedup ``batch`` against itself and the persisted corpus, append
     the survivors + their index rows, return the accounting dict.
 
-    Constant-memory contract (r14): the batch ``localCheckpoint``s six
-    intermediates; they are RELEASED (storage.release_checkpoints_since,
-    scoped by a pre-batch snapshot, in a finally so even a crashed
-    attempt cleans up) before returning — without this a long-running
-    stream pins every batch's blocks until a JVM GC that never comes,
-    and 1M-doc micro-batches died in BroadcastExchange by batch 3.
+    Constant-memory contract: the batch owns the intermediates
+    it checkpoints and frees them before returning, even when it
+    fails (``checkpoints``).
 
     ``doc_id`` values must be globally unique across batches (the
     caller's ingest contract, same as any CDC key).
@@ -338,15 +335,12 @@ def ingest_batch(
     contract — every later batch follows a fully committed one), so a
     long-running stream passes True once and False thereafter instead
     of paying four directory walks per micro-batch (r13 review)."""
-    pre_rdds = storage_mod.snapshot_persistent_rdds(store.spark)
-    try:
+    with owned_checkpoints():
         return _ingest_batch_impl(
             store, batch, id_col=id_col, text_col=text_col,
             max_bucket=max_bucket, txn=txn,
             discard_residue=discard_residue,
         )
-    finally:
-        storage_mod.release_checkpoints_since(store.spark, pre_rdds)
 
 
 def _ingest_batch_impl(
@@ -358,8 +352,8 @@ def _ingest_batch_impl(
     txn: tuple[str, int] | None,
     discard_residue: bool,
 ) -> dict:
-    """Body of :func:`ingest_batch` (see its docstring); split out so
-    the checkpoint release runs in a finally around every return."""
+    """Body of :func:`ingest_batch` (see its docstring), run inside
+    the batch's checkpoint-owning scope."""
     sigs_applied = bands_applied = False
     if txn is not None:
         app_id, ver = txn[0], int(txn[1])
@@ -406,7 +400,7 @@ def _ingest_batch_impl(
             F.sum("__n").alias("n_batch"),
             F.count(F.lit(1)).alias("n_uniq"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     n_batch = int(obs_w.get["n_batch"] or 0)
     n_exact_batch = n_batch - int(obs_w.get["n_uniq"] or 0)
@@ -427,14 +421,14 @@ def _ingest_batch_impl(
     obs_f = Observation()
     fresh = fresh.observe(
         obs_f, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     n_exact_corpus = n_batch - n_exact_batch - int(obs_f.get["n"] or 0)
 
     # 3. near-dup candidates via LSH band incidence
-    sigs_new = _signatures(fresh, "doc_id", "text").localCheckpoint()
+    sigs_new = _signatures(fresh, "doc_id", "text").transform(checkpoint)
     bands_new = dedup_ops.minhash_band_incidence(
         sigs_new, "doc_id", n_hashes=MH_N, band_size=MH_BAND
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
     stored_bands = store.read(BANDS) if store.exists(BANDS) else None
     if bands_applied and stored_bands is not None:
@@ -489,7 +483,7 @@ def _ingest_batch_impl(
         # already checkpointed above)
         bands_joinable = bands_new.join(
             small, "bucket", "left_semi"
-        ).localCheckpoint()
+        ).transform(checkpoint)
 
     # batch-vs-corpus: equi-join against the STORED incidence list.
     # The id inequality is a no-op under the unique-id contract but
@@ -525,7 +519,7 @@ def _ingest_batch_impl(
     # the incidence joins + DISTINCT (r15)
     candidates = (
         intra if cross is None else intra.unionByName(cross).distinct()
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
     # 4. precision filter + exact verify on the candidate slice only
     if store.exists(SIGS):
@@ -563,7 +557,7 @@ def _ingest_batch_impl(
     accepted = (
         fresh.join(near_ids, "doc_id", "left_anti")
         .observe(obs_a, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     n_near = n_batch - n_exact_batch - n_exact_corpus - int(
         obs_a.get["n"] or 0
@@ -575,7 +569,7 @@ def _ingest_batch_impl(
     # sum vs the incidence list holds per batch
     keep_ids = accepted.select("doc_id")
     kept_sigs = sigs_new.join(keep_ids, "doc_id", "left_semi")
-    kept_bands = bands_new.join(keep_ids, "doc_id", "left_semi").localCheckpoint()
+    kept_bands = bands_new.join(keep_ids, "doc_id", "left_semi").transform(checkpoint)
     _ensure_bucket_counts(store)
 
     # the per-table appends are independent Spark jobs on distinct
@@ -698,7 +692,7 @@ def rebuild_index(store: TableStore) -> dict:
     the rows the incremental path would have written — the constants
     are shared module-level literals."""
     docs = store.read(DOCS)
-    sigs = _signatures(docs, "doc_id", "text").localCheckpoint()
+    sigs = _signatures(docs, "doc_id", "text").transform(checkpoint)
     n_sigs = store.overwrite(SIGS, sigs)
     n_bands = store.overwrite(
         BANDS,

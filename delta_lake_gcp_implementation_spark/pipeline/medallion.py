@@ -41,8 +41,8 @@ from datetime import date, datetime
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint, owned_checkpoints
 from ..operators import dedup as dedup_ops
-from . import storage as storage_mod
 from .storage import TableStore
 
 # ---------------------------------------------------------------- shared helpers
@@ -277,48 +277,17 @@ def _batch_cutoff():
     return F.lit(datetime.utcnow().strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
 
 
-
-
-#: _scoped_checkpoints concurrency state: the gold dimension tier runs
-#: scoped stages concurrently (run_incremental), and the snapshot/
-#: release discipline is single-writer — one stage's exit release
-#: would free a sibling's in-flight checkpoint blocks.  Overlapping
-#: scopes therefore merge: the first entering scope takes the
-#: snapshot, the LAST exiting scope releases everything since it.
-#: Sequential callers (every scoped stage outside the tier) see the
-#: exact per-stage release as before.
-_SCOPE_LOCK = threading.Lock()
-_SCOPE_STATE: dict = {"active": 0, "snapshot": None}
-
-
 def _scoped_checkpoints(fn):
-    """Release a stage's localCheckpoint blocks when it exits (ADVICE
-    r15): the SCD2 rollup / validation-slice checkpoints are consumed
-    entirely inside their stage, but without an explicit release the
-    pinned RDD blocks wait for a JVM GC + ContextCleaner pass that a
-    long-lived driver never runs in time (the same leak ingest_batch
-    and media.ingest already scope away).  Snapshot-scoped, so blocks
-    owned by the caller — protected memo checkpoints included — are
-    untouched.  Concurrent scopes merge (see ``_SCOPE_STATE``)."""
+    """Free a stage's localCheckpoint blocks when it exits: the SCD2
+    rollup / validation-slice checkpoints are consumed entirely inside
+    their stage, and a long-lived driver never GCs them in time.  The
+    stage owns only the checkpoints it made, so the gold-tier stages
+    running side by side cannot free each other's (``checkpoints``)."""
 
     @functools.wraps(fn)
-    def wrapper(store, *args, **kwargs):
-        with _SCOPE_LOCK:
-            _SCOPE_STATE["active"] += 1
-            if _SCOPE_STATE["active"] == 1:
-                _SCOPE_STATE["snapshot"] = (
-                    storage_mod.snapshot_persistent_rdds(store.spark)
-                )
-        try:
-            return fn(store, *args, **kwargs)
-        finally:
-            with _SCOPE_LOCK:
-                _SCOPE_STATE["active"] -= 1
-                if _SCOPE_STATE["active"] == 0:
-                    storage_mod.release_checkpoints_since(
-                        store.spark, _SCOPE_STATE["snapshot"]
-                    )
-                    _SCOPE_STATE["snapshot"] = None
+    def wrapper(*args, **kwargs):
+        with owned_checkpoints():
+            return fn(*args, **kwargs)
 
     return wrapper
 
@@ -354,7 +323,7 @@ def validate_bronze(
     # is the most expensive per-row work in the stage — recomputing it
     # per sink doubles the validation scan (the 100 TB version of this
     # is a persisted staging table; localCheckpoint is the local twin)
-    typed = typed.localCheckpoint()
+    typed = typed.transform(checkpoint)
 
     cutoff = _batch_cutoff()
     t1 = _tier1_pred(cutoff)
@@ -535,7 +504,7 @@ def backfill_bronze(
     deduped = (
         dedup_ops.keep_first_version(kept, ["transaction_id", "updated_at"])
         .select(*BRONZE_COLS)
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     n = deduped.count()
     if n:  # empty date slice: skip the MERGE (see load_bronze)
@@ -897,7 +866,7 @@ def scd2_dim_customer(store: TableStore, batch_id: str) -> dict:
     # detection) inside one staging plan — materialize it once instead
     # of re-running the silver aggregation per branch (r15; the frame
     # is |customers| rows, literal-scale next to the silver scan)
-    agg = agg.localCheckpoint()
+    agg = agg.transform(checkpoint)
     dim = store.read(dim_name)
     current = dim.filter(F.col("is_current") == True)  # noqa: E712
 
@@ -1026,7 +995,7 @@ def scd2_dim_merchant(store: TableStore, batch_id: str) -> dict:
     # best-record feeds BOTH insert branches inside one staging plan —
     # materialize the silver rollup + window once instead of per branch
     # (r15; |merchants| rows, literal-scale next to the silver scan)
-    best = best.localCheckpoint()
+    best = best.transform(checkpoint)
     dim = store.read(dim_name)
     current = dim.filter(F.col("is_current") == True)  # noqa: E712
     max_key = dim.agg(
@@ -1080,7 +1049,7 @@ def scd2_dim_merchant(store: TableStore, batch_id: str) -> dict:
         .filter(F.col("is_current") == True)  # noqa: E712
         .join(staged.select("merchant_id"), "merchant_id", "left_semi")
         .select("merchant_key")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     store.delete_matched(dim_name, same_day, ["merchant_key"])
     store.append(dim_name, staged)

@@ -38,8 +38,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint, owned_checkpoints
 from ..operators import multimodal as mm
-from . import storage as storage_mod
 from .storage import TableStore
 
 BLOBS = "media.blobs"
@@ -56,16 +56,12 @@ def ingest_media_batch(
     """Dedup ``media_df`` (MEDIA_SCHEMA) against itself and the stored
     blob corpus, decode the survivors, append features then blobs.
     Returns the accounting dict.  ``media_id`` values must be globally
-    unique across batches (the caller's ingest contract).  The batch's
-    localCheckpoint is released before returning (constant-memory
-    stream contract — see corpus.ingest_batch)."""
-    pre_rdds = storage_mod.snapshot_persistent_rdds(store.spark)
-    try:
+    unique across batches (the caller's ingest contract).  The batch
+    owns its checkpoint and frees it before returning (``checkpoints``)."""
+    with owned_checkpoints():
         return _ingest_media_batch_impl(
             store, media_df, fake_decode, txn, discard_residue
         )
-    finally:
-        storage_mod.release_checkpoints_since(store.spark, pre_rdds)
 
 
 def _ingest_media_batch_impl(
@@ -115,7 +111,7 @@ def _ingest_media_batch_impl(
     # materialize: the decode, both appends, and the accounting all
     # consume this slice (and appends must not re-plan over a table
     # the same batch is mutating)
-    fresh = fresh.localCheckpoint()
+    fresh = fresh.transform(checkpoint)
     n_exact_corpus = n_batch - n_exact_batch - fresh.count()
 
     feats = mm.decode_media(

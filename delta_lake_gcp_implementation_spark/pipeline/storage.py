@@ -75,6 +75,7 @@ scan and self-heals.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import shutil
@@ -84,7 +85,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..checkpoints import checkpoint, owned_checkpoints
 from ..operators.sizing import maybe_broadcast
+
+_log = logging.getLogger(__name__)
 
 #: Key types whose parquet footer min/max stats are trustworthy for
 #: file pruning.  Floats are excluded (NaN poisons parquet ordering
@@ -100,79 +104,6 @@ _PRUNABLE_KEY_TYPES = (
     T.StringType,
     T.DateType,
 )
-
-
-def snapshot_persistent_rdds(spark: SparkSession) -> set[int]:
-    """IDs of the RDDs currently holding storage blocks — take before
-    a batch that ``localCheckpoint``s intermediates, pass to
-    :func:`release_checkpoints_since` after."""
-    out: set[int] = set()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        out.add(it.next()._1())
-    return out
-
-
-#: RDD ids owned by session-shared memo frames (e.g. the BPE
-#: train/encode memos in ``plans.bpeq``) — ``release_checkpoints_since``
-#: must never free these even when they were first materialized inside
-#: a batch's snapshot/release scope (r14 verdict "what's wrong" #3:
-#: a memo built during an ingest batch would otherwise be unpersisted
-#: while the memo dict still references it, and the next consumer
-#: would fail on dead blocks).  Ids are (applicationId, rdd_id) so a
-#: fresh session never inherits stale protections.
-_PROTECTED_RDD_IDS: set[tuple[str, int]] = set()
-
-
-def protect_checkpoints_since(
-    spark: SparkSession, before: set[int]
-) -> set[int]:
-    """Mark every RDD persisted AFTER the ``before`` snapshot as owned
-    by a session-shared memo: :func:`release_checkpoints_since` will
-    skip them.  Call immediately after materializing a memo frame so
-    ownership is recorded no matter whose scope the build ran inside.
-    Returns the newly protected raw RDD ids."""
-    app = spark.sparkContext.applicationId
-    fresh: set[int] = set()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        rid = it.next()._1()
-        if rid not in before:
-            fresh.add(rid)
-            _PROTECTED_RDD_IDS.add((app, rid))
-    return fresh
-
-
-def release_checkpoints_since(spark: SparkSession, before: set[int]) -> int:
-    """Unpersist every RDD that started holding blocks AFTER the
-    ``before`` snapshot — the deterministic release for a batch's
-    ``localCheckpoint`` intermediates.
-
-    Why this exists (r14): ``DataFrame.unpersist()`` only talks to the
-    SQL CacheManager and does NOT drop localCheckpoint blocks; those
-    are freed when the JVM GCs the RDD and the ContextCleaner runs —
-    which on a long-running stream simply never happens in time.  At
-    62k-doc micro-batches the pinned blocks were invisible; at 1M-doc
-    batches each ingest pinned ~1-2 GB and the third batch died in
-    BroadcastExchange with notEnoughMemoryToBuildAndBroadcastTable.
-    The snapshot discipline keeps the release SCOPED: checkpoints the
-    caller made earlier (session-shared memo frames, a surrounding
-    pipeline's intermediates) are untouched.  Single-writer contract:
-    no concurrent thread may be checkpointing while the batch runs
-    (foreachBatch is single-threaded per query).  Returns the number
-    of RDDs released.  RDDs registered via
-    :func:`protect_checkpoints_since` (session-shared memo frames
-    first built inside this scope) are skipped."""
-    app = spark.sparkContext.applicationId
-    released = 0
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        kv = it.next()
-        rid = kv._1()
-        if rid not in before and (app, rid) not in _PROTECTED_RDD_IDS:
-            kv._2().unpersist(False)
-            released += 1
-    return released
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -271,11 +202,11 @@ class TableStore:
                 self._registered[name] = schema
             else:
                 self._registered.pop(name, None)
-        except Exception:
+        except Exception as exc:
             # registration is a convenience surface; never fail a write
             # over catalog limitations (e.g. a foreachBatch worker
             # session without catalog access)
-            pass
+            _log.warning("catalog registration of %s failed: %r", name, exc)
 
     def exists(self, name: str) -> bool:
         return os.path.isdir(self.path(name))
@@ -1397,118 +1328,105 @@ class TableStore:
         once so the bounds probe, the exact touched-file test, and the
         rewrite's match predicate all see the SAME keys — a
         nondeterministic key re-evaluation can therefore no longer
-        leave a stale matched row in an unpruned file.  The checkpoint
-        is released via the scoped snapshot discipline before
-        returning."""
+        leave a stale matched row in an unpruned file.  This call
+        owns that checkpoint and frees it on return (``checkpoints``)."""
         stats = self._file_key_stats(name, keys, source)
         if stats is None:
             return None
         boxes, unprunable, rows_by_file, files, prune_keys = stats
-        snap = snapshot_persistent_rdds(self.spark)
-        try:
-            return self._pruned_mutation_inner(
-                name, source, keys, op, rewrite, txn, insert_rows,
-                boxes, unprunable, rows_by_file, files, prune_keys,
+        with owned_checkpoints():
+            src_keys = (
+                source.select(*keys).distinct().transform(checkpoint)
             )
-        finally:
-            release_checkpoints_since(self.spark, snap)
-
-    def _pruned_mutation_inner(
-        self, name, source, keys, op, rewrite, txn, insert_rows,
-        boxes, unprunable, rows_by_file, files, prune_keys,
-    ) -> tuple[int, int, int] | None:
-        src_keys = (
-            source.select(*keys).distinct().localCheckpoint(eager=True)
-        )
-        touched = set(unprunable)
-        n_src = None
-        if boxes:
-            # tier 1: ONE cheap bounds agg over the pinned source keys
-            # (min/max/count) -> candidate boxes driver-side.  Without
-            # it, a full-overlap merge (the medallion's 9M-row daily
-            # re-merge) would pay a 9M-rows x 64-boxes exact test just
-            # to learn that everything is touched — measured +5 s per
-            # stage at 100x.  (``n_src`` is now the DISTINCT key count
-            # — a strictly tighter budget input than the raw row count.)
-            kp = src_keys.select(*prune_keys)
-            probe = kp.agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[F.min(k).alias(f"__mn_{k}") for k in prune_keys],
-                *[F.max(k).alias(f"__mx_{k}") for k in prune_keys],
-            ).first()
-            n_src = probe["__n"]
-            cand = [] if n_src == 0 else [
-                b for b in boxes
-                if all(
-                    probe[f"__mn_{k}"] is not None
-                    and not (
-                        b[f"__min_{k}"] > probe[f"__mx_{k}"]
-                        or b[f"__max_{k}"] < probe[f"__mn_{k}"]
+            touched = set(unprunable)
+            n_src = None
+            if boxes:
+                # tier 1: ONE cheap bounds agg over the pinned source keys
+                # (min/max/count) -> candidate boxes driver-side.  Without
+                # it, a full-overlap merge (the medallion's 9M-row daily
+                # re-merge) would pay a 9M-rows x 64-boxes exact test just
+                # to learn that everything is touched — measured +5 s per
+                # stage at 100x.  (``n_src`` is now the DISTINCT key count
+                # — a strictly tighter budget input than the raw row count.)
+                kp = src_keys.select(*prune_keys)
+                probe = kp.agg(
+                    F.count(F.lit(1)).alias("__n"),
+                    *[F.min(k).alias(f"__mn_{k}") for k in prune_keys],
+                    *[F.max(k).alias(f"__mx_{k}") for k in prune_keys],
+                ).first()
+                n_src = probe["__n"]
+                cand = [] if n_src == 0 else [
+                    b for b in boxes
+                    if all(
+                        probe[f"__mn_{k}"] is not None
+                        and not (
+                            b[f"__min_{k}"] > probe[f"__mx_{k}"]
+                            or b[f"__max_{k}"] < probe[f"__mn_{k}"]
+                        )
+                        for k in prune_keys
                     )
-                    for k in prune_keys
+                ]
+                if cand:
+                    # tier 2: the exact some-key-in-box test, but only when
+                    # its cost (n_src x |candidates| predicate evals) is
+                    # bounded — a 100-id GDPR delete spanning the key range
+                    # NEEDS it (tier 1 candidates = every file, exact test
+                    # prunes to the 1-2 files that hold the ids), while a
+                    # 9M-row batch uses the tier-1 candidates as the
+                    # conservative answer (already a superset of touched)
+                    if n_src * len(cand) <= 64_000_000:
+                        touched |= self._touched_files(kp, cand, prune_keys)
+                    else:
+                        touched |= {b["__file__"] for b in cand}
+            merge_stats = {
+                "files_rewritten": len(touched),
+                "files_total": len(files),
+            }
+            before = self.count(name)
+            final = self.path(name)
+            if not touched:
+                if insert_rows is None or n_src == 0:
+                    # delete/update matching nothing, or an EMPTY source
+                    # (n_src == 0 distinct keys proves zero rows): commit
+                    # the no-op mutation for history fidelity, touch no
+                    # data file — appending a 0-row file would pollute the
+                    # directory with a schema-only fragment
+                    self._save_count(name, before)
+                    self._commit(
+                        name, op, before, new_lineage=False, txn=txn,
+                        extra=merge_stats,
+                    )
+                    if txn is not None:
+                        self._txn_sidecar_fastpath(name, txn)
+                    return 0, 0, before
+                # insert-only merge: no live file can contain any source
+                # key, so MERGE degenerates to the O(batch) append
+                rows = self._write_counted(
+                    self._optimize_write(insert_rows), final, "append"
                 )
-            ]
-            if cand:
-                # tier 2: the exact some-key-in-box test, but only when
-                # its cost (n_src x |candidates| predicate evals) is
-                # bounded — a 100-id GDPR delete spanning the key range
-                # NEEDS it (tier 1 candidates = every file, exact test
-                # prunes to the 1-2 files that hold the ids), while a
-                # 9M-row batch uses the tier-1 candidates as the
-                # conservative answer (already a superset of touched)
-                if n_src * len(cand) <= 64_000_000:
-                    touched |= self._touched_files(kp, cand, prune_keys)
-                else:
-                    touched |= {b["__file__"] for b in cand}
-        merge_stats = {
-            "files_rewritten": len(touched),
-            "files_total": len(files),
-        }
-        before = self.count(name)
-        final = self.path(name)
-        if not touched:
-            if insert_rows is None or n_src == 0:
-                # delete/update matching nothing, or an EMPTY source
-                # (n_src == 0 distinct keys proves zero rows): commit
-                # the no-op mutation for history fidelity, touch no
-                # data file — appending a 0-row file would pollute the
-                # directory with a schema-only fragment
-                self._save_count(name, before)
+                after = before + rows
+                self._save_count(name, after)
                 self._commit(
-                    name, op, before, new_lineage=False, txn=txn,
-                    extra=merge_stats,
+                    name, op, after, new_lineage=False, txn=txn, extra=merge_stats
                 )
                 if txn is not None:
                     self._txn_sidecar_fastpath(name, txn)
-                return 0, 0, before
-            # insert-only merge: no live file can contain any source
-            # key, so MERGE degenerates to the O(batch) append
-            rows = self._write_counted(
-                self._optimize_write(insert_rows), final, "append"
+                self.spark.catalog.refreshByPath(final)
+                return 0, rows, after
+            if len(touched) >= len(files):
+                return None  # nothing pruned: the full path is strictly simpler
+            tdf = self.spark.read.parquet(
+                *[os.path.join(final, f) for f in sorted(touched)]
             )
-            after = before + rows
-            self._save_count(name, after)
-            self._commit(
-                name, op, after, new_lineage=False, txn=txn, extra=merge_stats
+            out = rewrite(tdf, src_keys)
+            stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
+            staged_rows = self._write_counted(out, stage, "overwrite")
+            rows_touched = sum(rows_by_file[f] for f in touched)
+            after = before - rows_touched + staged_rows
+            self._publish_partial(
+                name, stage, touched, after, op, txn, merge_stats
             )
-            if txn is not None:
-                self._txn_sidecar_fastpath(name, txn)
-            self.spark.catalog.refreshByPath(final)
-            return 0, rows, after
-        if len(touched) >= len(files):
-            return None  # nothing pruned: the full path is strictly simpler
-        tdf = self.spark.read.parquet(
-            *[os.path.join(final, f) for f in sorted(touched)]
-        )
-        out = rewrite(tdf, src_keys)
-        stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
-        staged_rows = self._write_counted(out, stage, "overwrite")
-        rows_touched = sum(rows_by_file[f] for f in touched)
-        after = before - rows_touched + staged_rows
-        self._publish_partial(
-            name, stage, touched, after, op, txn, merge_stats
-        )
-        return rows_touched, staged_rows, after
+            return rows_touched, staged_rows, after
 
     def upsert(
         self,
@@ -1695,7 +1613,7 @@ class TableStore:
                 F.sum((~matched).cast("bigint")), F.lit(0).cast("bigint")
             ).alias("bad"),
         )
-        staged = staged.localCheckpoint(eager=True)  # force observation
+        staged = staged.transform(checkpoint)  # force observation
         bad = int(viol.get["bad"])
         if bad:
             raise ValueError(
@@ -1775,7 +1693,7 @@ class TableStore:
         snap = self.read_version(name, version)
         # materialize before _replace swaps the live dir out from under
         # the snapshot's file listing (the TableStore lineage rule)
-        snap = snap.localCheckpoint(eager=True)
+        snap = snap.transform(checkpoint)
         self._replace(name, snap)
         return self.current_version(name)
 

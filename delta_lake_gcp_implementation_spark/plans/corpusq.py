@@ -27,6 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint
 from ..operators import dedup as dedup_ops
 from ..pipeline.corpus import (
     DOCS,
@@ -66,7 +67,7 @@ def q_corpus_ingest_verdict(spark: SparkSession, sf: str) -> DataFrame:
                 (F.col("doc_id") % 2).cast("int").alias("batch_no"),
                 F.coalesce("accepted", F.lit(False)).alias("accepted"),
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

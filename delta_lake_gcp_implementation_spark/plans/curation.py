@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint
 from ..functions import text as T
 from ..operators import curation as cur_ops
 from ..tables import load_table
@@ -227,7 +228,7 @@ def q_contamination_check(spark: SparkSession, sf: str) -> DataFrame:
     d = load_table(spark, sf, "documents")
     sh = cur_ops.shingle_hashes(
         d, "text", "doc_id", CONTAM_K
-    ).localCheckpoint()
+    ).transform(checkpoint)
     eval_sh = sh.filter(F.col("doc_id") % CONTAM_EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_id"), "sh"
     )
@@ -576,7 +577,7 @@ def q_mix_weights_temperature(spark: SparkSession, sf: str) -> DataFrame:
     d = load_table(spark, sf, "documents")
     per = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     all_rows = Window.partitionBy()
     n_tot = F.sum("n_docs").over(all_rows).cast("bigint")
     share = F.col("n_docs").cast("double") / n_tot.cast("double")
@@ -736,7 +737,7 @@ def q_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     d = load_table(spark, sf, "documents")
     per = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     tot = F.broadcast(per.agg(F.sum("n_docs").cast("bigint").alias("n_tot")))
     share = F.col("n_docs").cast("double") / F.col("n_tot").cast("double")
     w = per.crossJoin(tot).select(
@@ -746,7 +747,7 @@ def q_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
         F.floor(F.sqrt(share) * F.lit(float(_MIX_SCALE)))
         .cast("bigint")
         .alias("wq"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     denom = F.broadcast(w.agg(F.sum("wq").cast("bigint").alias("wq_tot")))
     rates = w.crossJoin(denom).select(
         "lang",

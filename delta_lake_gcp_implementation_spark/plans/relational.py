@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint
 from ..operators import aggregates as agg_ops
 from ..operators import cms as cms_ops
 from ..operators import dedup as dedup_ops
@@ -2146,7 +2147,7 @@ def q_fuzzy_name_match(spark: SparkSession, sf: str) -> DataFrame:
             F.levenshtein("name_a", "name_b").cast("bigint").alias("edit_dist"),
         )
         .filter(F.col("edit_dist") <= _FUZZY_MAX_DIST)
-        .localCheckpoint()  # distinct-name pairs: tiny, feeds two joins
+        .transform(checkpoint)  # distinct-name pairs: tiny, feeds two joins
     )
     a_side = ids.select(
         F.col("p_partkey").alias("key_a"), F.col("p_name").alias("name_a")
@@ -2451,7 +2452,7 @@ def q_dq_expectations(spark: SparkSession, sf: str) -> DataFrame:
     o_stats = o.agg(
         one.alias("checked"),
         viol_sum(F.col("o_orderstatus").isNull()).alias("nn_viol"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     li_stats = li.agg(
         one.alias("checked"),
         viol_sum(
@@ -2459,11 +2460,11 @@ def q_dq_expectations(spark: SparkSession, sf: str) -> DataFrame:
             | (F.col("l_quantity") < 1)
             | (F.col("l_quantity") > 50)
         ).alias("rng_viol"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     c_stats = c.agg(
         one.alias("checked"),
         viol_sum(~F.col("c_mktsegment").isin(*_DQ_SEGMENTS)).alias("seg_viol"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
     def row(name: str, checked, violations):
         return (
@@ -2772,7 +2773,7 @@ def q_equi_depth_bins(spark: SparkSession, sf: str) -> DataFrame:
     ranged = (
         vals.repartitionByRange("cents", "o_orderkey")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     sizes = ranged.groupBy("pid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_part")
@@ -3537,7 +3538,7 @@ def q_max_concurrency(spark: SparkSession, sf: str) -> DataFrame:
     bounds = (
         starts.union(ends)
         .withColumn("day", F.to_date("t"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     sweep = Window.partitionBy("day").orderBy(
         "t", F.col("delta").desc(), "user_id"
@@ -4065,7 +4066,7 @@ def q_rolling_wau_hll(spark: SparkSession, sf: str) -> DataFrame:
         rows.select("day", "bucket", rank.alias("r"))
         .groupBy("day", "bucket")
         .agg(F.max("r").alias("M"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     offsets = spark.range(7).select(F.col("id").cast("int").alias("off"))
     bounds = F.broadcast(
@@ -4085,7 +4086,7 @@ def q_rolling_wau_hll(spark: SparkSession, sf: str) -> DataFrame:
         )
         .groupBy("as_of_day", "bucket")
         .agg(F.max("M").alias("M"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     # days*256 rows on both sides: broadcast (stats don't reveal the
     # bounded size, so Catalyst would sort-merge otherwise)
@@ -4475,7 +4476,7 @@ def q_incremental_rollup_verdict(spark: SparkSession, sf: str) -> DataFrame:
                 ),
                 F.col("n_rows").cast("bigint").alias("n_rows"),
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..checkpoints import checkpoint
 from ..functions import similarity as sim
 from ..functions import text as T
 from ..operators import bloom as bloom_ops
@@ -253,7 +254,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # eagerly materialized: the band self-join consumes the signature
     # subtree twice, and lazy .cache() still races when concurrent
     # broadcast jobs all find it cold (measured recompute at sf0.1)
-    sig = q_minhash_signatures(spark, sf).localCheckpoint()
+    sig = q_minhash_signatures(spark, sf).transform(checkpoint)
     return dedup_ops.minhash_candidate_pairs(
         sig,
         "doc_id",
@@ -371,7 +372,7 @@ def q_corpus_curation(spark: SparkSession, sf: str) -> DataFrame:
             *T.quality_metrics(F.col("text")),
         )
         .select("doc_id", "lang_pred", "quality_bucket")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     clusters = q_dup_clusters(spark, sf)
     return (
@@ -450,7 +451,7 @@ def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     # does not share identical subtrees across joins, and lazy .cache()
     # races when concurrent broadcast jobs find it cold (measured 5x
     # wall-clock at sf0.1)
-    sig = q_minhash_signatures(spark, sf).localCheckpoint()
+    sig = q_minhash_signatures(spark, sf).transform(checkpoint)
     cands = dedup_ops.minhash_candidate_pairs(
         sig, "doc_id", n_hashes=_MH_N, band_size=_MH_BAND,
         max_bucket=_LSH_MAX_BUCKET,
@@ -582,7 +583,7 @@ def q_simhash_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     mega-bucket members are near-identical boilerplate already resolved
     by the linear incidence-CC path (``dup_clusters``)."""
     # eagerly materialized (see q_minhash_lsh_pairs)
-    sig = q_simhash_signatures(spark, sf).localCheckpoint()
+    sig = q_simhash_signatures(spark, sf).transform(checkpoint)
     return dedup_ops.simhash_hamming_pairs(
         sig, "doc_id", bits=_SH_BITS, n_bands=_SH_BANDS,
         max_hamming=_SH_MAXHAM, max_bucket=_LSH_MAX_BUCKET,
@@ -769,7 +770,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     assigned = (
         v.select("vec_id", "v", best["cid"].alias("cell"))
         .withColumn("nrm", sim.norm(F.col("v")))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     q = assigned.filter(F.col("vec_id") < _Q_CUT).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
@@ -857,10 +858,10 @@ def q_ann_ivf_trained(spark: SparkSession, sf: str) -> DataFrame:
     approx = sim.ivf_topk(
         e, q, cents, "vec_id", "embedding", k=3, nprobe=2,
         corpus_projected=pv,
-    ).select("query_id", "neighbor_id").localCheckpoint()
+    ).select("query_id", "neighbor_id").transform(checkpoint)
     exact = sim.brute_force_topk(
         e, q, "vec_id", "embedding", k=3
-    ).select("query_id", "neighbor_id").localCheckpoint()
+    ).select("query_id", "neighbor_id").transform(checkpoint)
     hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     return (
         exact.agg(
@@ -1000,7 +1001,7 @@ def _tuned_near_dup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # members) — unchecked, each re-ran the embeddings scan +
     # projection + bucket/norm compute (8 parquet scans, 0 reuse in
     # the executed plan; the r8 plan-audit scans/reused columns)
-    cs = c.join(sizes, "bucket").localCheckpoint()
+    cs = c.join(sizes, "bucket").transform(checkpoint)
     a_cols = [
         F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
         F.col("bucket"), F.col("nrm").alias("na"),
@@ -1347,7 +1348,7 @@ def q_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
     tf = (
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = tf.agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -1449,7 +1450,7 @@ def q_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.when(F.col("token") == t, F.lit(1))).alias(f"tf_{i}")
             for i, t in enumerate(BM25_TERMS)
         ],
-    ).localCheckpoint()
+    ).transform(checkpoint)
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_tokens")
     )
@@ -1578,7 +1579,7 @@ def q_bigram_pmi_topk(spark: SparkSession, sf: str) -> DataFrame:
         F.posexplode(
             F.split(F.trim(F.lower(F.col("text"))), r"[ \t\n\x0B\f\r]+")
         ).alias("pos", "tok"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     w = Window.partitionBy("doc_id").orderBy("pos")
     big = (
         toks.withColumn("nxt", F.lead("tok").over(w))
@@ -1679,11 +1680,11 @@ def q_ann_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < _Q_CUT)
     exact = sim.brute_force_topk(e, q, "vec_id", "embedding", k=_RECALL_K).select(
         "query_id", "neighbor_id"
-    ).localCheckpoint()
+    ).transform(checkpoint)
     approx = sim.lsh_topk(
         e, q, "vec_id", "embedding",
         k=_RECALL_K, n_planes=_ANN_PLANES, dim=_ANN_DIM,
-    ).select("query_id", "neighbor_id").localCheckpoint()
+    ).select("query_id", "neighbor_id").transform(checkpoint)
     hits = (
         exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
         .groupBy("query_id")
@@ -1877,7 +1878,7 @@ def q_dup_ngram_fraction(spark: SparkSession, sf: str) -> DataFrame:
     # feeds the document-frequency agg AND the join probe — materialize
     # once so tokenize/explode/md5 doesn't run twice (the fixed-width
     # (doc_id, gh) table is far smaller than the text it derives from)
-    ).localCheckpoint()
+    ).transform(checkpoint)
     gdocs = gh.groupBy("gh").agg(F.count(F.lit(1)).alias("gdocs"))
     return (
         gh.join(gdocs, "gh")
@@ -1952,7 +1953,7 @@ def q_substring_dedup(spark: SparkSession, sf: str) -> DataFrame:
     d = load_table(spark, sf, "documents").select("doc_id", "text")
     flagged = dedup_ops.substring_dup_positions(
         d, "text", "doc_id", k=_SUBSTR_K
-    ).localCheckpoint()  # feeds the run window AND the per-doc totals
+    ).transform(checkpoint)  # feeds the run window AND the per-doc totals
     runs = (
         flagged.filter(F.col("is_dup"))
         .withColumn(
@@ -2152,7 +2153,7 @@ def q_ann_sq8_topk(spark: SparkSession, sf: str) -> DataFrame:
             )
             - 127,
         ).alias("q"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     qs = coded.filter(F.col("vec_id") < _Q_CUT).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv")
     )
@@ -2242,7 +2243,7 @@ def q_ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
             "vec_id",
             F.transform("v", lambda x: x / F.col("_n")).alias("u"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     q = u.filter(F.col("vec_id") < _Q_CUT)
     # codebooks train on a deterministic 1/4 sample — the FAISS recipe:
@@ -2263,10 +2264,10 @@ def q_ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
         codes, u, q, "vec_id", "u", books,
         k=_RECALL_K, shortlist=_PQ_SHORTLIST,
         m_sub=_PQ_M, d_sub=_ANN_DIM // _PQ_M,
-    ).select("query_id", "neighbor_id").localCheckpoint()
+    ).select("query_id", "neighbor_id").transform(checkpoint)
     exact = sim.brute_force_topk(
         e, e.filter(F.col("vec_id") < _Q_CUT), "vec_id", "embedding", k=_RECALL_K
-    ).select("query_id", "neighbor_id").localCheckpoint()
+    ).select("query_id", "neighbor_id").transform(checkpoint)
     hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     return (
         exact.agg(
@@ -2337,7 +2338,7 @@ def q_winnowing_containment(spark: SparkSession, sf: str) -> DataFrame:
         # consumed by three subtrees below (eligibility agg, both join
         # sides, per-doc totals) — materialize once, same rule as the
         # minhash signature table
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     eligible = (
         fp.groupBy("fingerprint")
@@ -2437,7 +2438,7 @@ def q_lang_confusion(spark: SparkSession, sf: str) -> DataFrame:
         )
         .groupBy("lang_labeled", "lang_pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     totals = cells.groupBy("lang_labeled").agg(
         F.sum("n_docs").cast("bigint").alias("_t")
@@ -2699,7 +2700,7 @@ def q_domain_kl(spark: SparkSession, sf: str) -> DataFrame:
     )
     per_src = tok.groupBy("source", "token").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt_sw")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     vocab = per_src.groupBy("token").agg(
         F.sum("cnt_sw").cast("bigint").alias("cnt_w")
     )
@@ -2823,14 +2824,14 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf: str) -> DataFrame:
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     df_tbl = terms.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )
     kept = terms.join(
         F.broadcast(df_tbl.filter(F.col("df") <= _SC_DF_CAP)), "term"
-    ).select("doc_id", "term", "tf").localCheckpoint()
+    ).select("doc_id", "term", "tf").transform(checkpoint)
     norms = kept.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).cast("bigint").alias("norm_sq")
     )
@@ -3028,7 +3029,7 @@ def q_token_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     token keys — the standard Pregel-style message pass expressed
     relationally; localCheckpoint keeps the plan flat.  The vocab is
     bounded; the corpus-sized work (edge building) happens once."""
-    edges = _pr_edges(spark, sf).localCheckpoint(eager=True)
+    edges = _pr_edges(spark, sf).transform(checkpoint)
     strength = edges.groupBy("a").agg(
         F.sum("w").cast("bigint").alias("str")
     )
@@ -3037,7 +3038,7 @@ def q_token_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # the strength aggregation and its join from scratch — one shuffle
     # and one join per iteration of pure recomputation.  Exact-integer
     # weights, so the checkpoint changes nothing downstream.
-    e = edges.join(strength, "a").localCheckpoint(eager=True)
+    e = edges.join(strength, "a").transform(checkpoint)
     pr = strength.select(
         F.col("a").alias("token"), F.lit(_PR_SCALE).cast("bigint").alias("pr")
     )
@@ -3062,7 +3063,7 @@ def q_token_pagerank(spark: SparkSession, sf: str) -> DataFrame:
                     + F.expr("(85 * coalesce(contrib, 0)) DIV 100")
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     return pr
 
@@ -3143,7 +3144,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf: str) -> DataFrame:
     materialized frame."""
     e = load_table(spark, sf, "embeddings").select(
         "vec_id", "embedding"
-    ).localCheckpoint()
+    ).transform(checkpoint)
     q = e.filter(F.col("vec_id") < _Q_CUT)
     exact = sim.brute_force_topk(e, q, "vec_id", "embedding", k=_RRF_ARM_K).select(
         "query_id", "neighbor_id", F.col("rank").alias("rank_exact")
@@ -3377,7 +3378,7 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf: str) -> DataFrame:
     shingle sets are disjoint get exact_jaccard 0.0 via the left
     join's coalesce."""
     d = load_table(spark, sf, "documents")
-    sig = q_minhash_signatures(spark, sf).localCheckpoint()
+    sig = q_minhash_signatures(spark, sf).transform(checkpoint)
     # eagerly materialized: the candidate list feeds THREE consumers
     # (the estimate lookup join, the exact arm, and the final left
     # join); a lazy plan re-runs the banded self-join + DISTINCT per
@@ -3385,7 +3386,7 @@ def q_minhash_jaccard_estimate(spark: SparkSession, sf: str) -> DataFrame:
     cands = dedup_ops.minhash_candidate_pairs(
         sig, "doc_id", n_hashes=_MH_N, band_size=_MH_BAND,
         max_bucket=_LSH_MAX_BUCKET,
-    ).localCheckpoint()
+    ).transform(checkpoint)
     est = dedup_ops.minhash_jaccard_estimates(cands, sig, "doc_id", _MH_N)
     exact = dedup_ops.ngram_jaccard_pairs(
         d, "text", "doc_id", k=_MH_K, threshold=0.0, candidates=cands
@@ -3556,7 +3557,7 @@ def q_lsh_dedup_recall(spark: SparkSession, sf: str) -> DataFrame:
             d, "text", "doc_id", k=_MH_K, threshold=0.5
         )
         .select("id_a", "id_b")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     sig = q_minhash_signatures(spark, sf)
     cands = (
@@ -3571,7 +3572,7 @@ def q_lsh_dedup_recall(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("id_a") < _RECALL_CUT_DOCS)
             & (F.col("id_b") < _RECALL_CUT_DOCS)
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     hits = truth.join(cands, ["id_a", "id_b"], "left_semi")
     t = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs"))

@@ -41,10 +41,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Local test default is ``local[$SPARK_GRAFT_CPUS]``; on a cluster pass
+    Local test default is ``local[$SPARK_GRAFT_CPUS]``, or one slot per
+    CPU when that is unset; on a cluster pass
     ``master=None`` with a pre-set spark-submit master.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)

@@ -124,3 +124,25 @@ def test_full_artifact_skips_non_driver_sf(tmp_path, monkeypatch):
     bench._write_full_artifact({"metric": "m", "value": 1.0, "unit": "sec",
                                 "queries": {}, "sf": 0.01})
     assert not list(tmp_path.glob("BENCH_FULL_*"))
+
+
+def test_full_artifact_defaults_cpus_to_machine_count(tmp_path, monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the artifact records the machine's
+    CPU count, and any count other than 32 gets the ``_c{n}`` suffix."""
+    import json
+    import os
+
+    import bench
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "16")
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    payload = {"metric": "m", "value": 1.5, "unit": "sec",
+               "queries": {"q1": 1.5}, "sf": 0.1}
+
+    for n in (32, 6):
+        monkeypatch.setattr(os, "cpu_count", lambda n=n: n)
+        bench._write_full_artifact(payload)
+        suffix = "" if n == 32 else f"_c{n}"
+        art = tmp_path / f"BENCH_FULL_r16{suffix}.json"
+        assert json.loads(art.read_text())["cpus"] == n

@@ -563,26 +563,85 @@ def test_permanent_stage_failure_recorded_failed_after_max_retries(
     assert medallion.read_watermark(store, "bronze") is None
 
 
-def test_run_incremental_releases_stage_checkpoints(spark, tmp_path):
-    """r16: the gold dimension tier runs its four stages concurrently
-    and each checkpointing stage is snapshot/release-scoped.  After
-    run_incremental returns, no stage checkpoint blocks may remain
-    pinned (the ADVICE r15 leak), and the merged-scope release must not
-    have freed anything a sibling stage still needed mid-run (the run
-    itself completing with correct outputs pins that)."""
-    from delta_lake_gcp_implementation_spark.pipeline import storage as storage_mod
+def _persistent_rdd_ids(spark) -> set[int]:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    out = set()
+    while it.hasNext():
+        out.add(it.next()._1())
+    return out
 
-    pre = storage_mod.snapshot_persistent_rdds(spark)
+
+def test_run_incremental_releases_stage_checkpoints(spark, tmp_path):
+    """The gold dimension tier runs its four stages concurrently and
+    each checkpointing stage owns its checkpoints.  After
+    run_incremental returns, no stage checkpoint blocks may remain
+    pinned (a long-lived driver never GCs them); the run completing
+    with correct outputs pins that no stage freed a sibling's blocks
+    mid-run."""
+    pre = _persistent_rdd_ids(spark)
     store = TableStore(spark, str(tmp_path / "wh_release"))
     raw = fixtures.generate_day_spark(spark, 1, 2_000)
     r = medallion.run_incremental(store, raw)
     assert r["fact"]["merged"] > 0
-    post = storage_mod.snapshot_persistent_rdds(spark)
-    app = spark.sparkContext.applicationId
-    leaked = {
-        rid for rid in post - pre
-        if (app, rid) not in storage_mod._PROTECTED_RDD_IDS
-    }
+    leaked = _persistent_rdd_ids(spark) - pre
     assert leaked == set(), f"stage checkpoints leaked: {leaked}"
-    # scope bookkeeping returned to idle
-    assert medallion._SCOPE_STATE == {"active": 0, "snapshot": None}
+
+
+def test_concurrent_gold_tier_with_pruned_merges(
+    spark, tmp_path, monkeypatch
+):
+    """With file pruning forced on, the SCD2 MERGEs
+    take the pruned path, which checkpoints its source keys in its own
+    scope, while the sibling gold stages run in other threads.  No
+    pruned MERGE may free a sibling's in-flight blocks: three
+    consecutive days run without a single stage retry, the dims and
+    fact keep their invariants, and no checkpoint blocks are left
+    behind."""
+    import threading
+
+    from delta_lake_gcp_implementation_spark.pipeline import storage as storage_mod
+
+    pre = _persistent_rdd_ids(spark)
+    store = TableStore(spark, str(tmp_path / "wh_pruned_tier"))
+    store.prune_min_table_bytes = 0
+    pruned_threads = set()
+    inner = storage_mod.checkpoint
+
+    def tracked(df):
+        pruned_threads.add(threading.current_thread().name)
+        return inner(df)
+
+    monkeypatch.setattr(storage_mod, "checkpoint", tracked)
+    n_fact = 0
+    for day in (1, 2, 3):
+        raw = fixtures.generate_day_spark(spark, day, 2_000)
+        r = medallion.run_incremental(store, raw)
+        assert all(v == 0 for v in r["fact"]["null_fk"].values()), r
+        n_fact += r["fact"]["records_inserted"]
+    # pruned MERGEs really checkpointed inside the concurrent tier
+    assert pruned_threads - {threading.current_thread().name}
+
+    jc = store.read("job_control")
+    assert jc.filter(F.col("retry_count") != 0).count() == 0
+    assert jc.filter(F.col("status") != "SUCCESS").count() == 0
+    for dim, key, sk in (
+        ("gold.dim_customer", "customer_id", "customer_key"),
+        ("gold.dim_merchant", "merchant_id", "merchant_key"),
+    ):
+        d = store.read(dim)
+        cur = d.filter(F.col("is_current") == True)  # noqa: E712
+        assert cur.groupBy(key).count().filter(F.col("count") > 1).count() == 0
+        assert d.select(sk).distinct().count() == d.count()
+        closed = d.filter(F.col("is_current") == False)  # noqa: E712
+        assert closed.filter(
+            F.col("effective_end_date") == "9999-12-31"
+        ).count() == 0
+    # the merchant dim's same-day guard keeps every version well-formed
+    assert store.read("gold.dim_merchant").filter(
+        F.col("effective_end_date") < F.col("effective_start_date")
+    ).count() == 0
+    fact = store.read("gold.fact_transactions")
+    assert fact.count() == n_fact
+    assert fact.select("transaction_id").distinct().count() == fact.count()
+    leaked = _persistent_rdd_ids(spark) - pre
+    assert leaked == set(), f"checkpoints leaked: {leaked}"

@@ -206,6 +206,33 @@ def test_store_reattaches_existing_tables(spark, tmp_path):
     assert not any("stage" in t for t in tables)
 
 
+def test_failed_catalog_registration_is_logged_not_raised(
+    spark, store, monkeypatch, caplog
+):
+    """Catalog registration is a convenience surface: when it fails the
+    write still commits, and the failure leaves a warning naming the
+    table and the error."""
+    import logging
+
+    def broken_sql(*args, **kwargs):
+        raise RuntimeError("catalog unavailable")
+
+    monkeypatch.setattr(spark, "sql", broken_sql)
+    with caplog.at_level(
+        logging.WARNING,
+        logger="delta_lake_gcp_implementation_spark.pipeline.storage",
+    ):
+        n = store.append("db.unregistered", spark.range(5))
+    monkeypatch.undo()
+    assert n == 5
+    assert store.count("db.unregistered") == 5
+    assert any(
+        "db.unregistered" in r.getMessage()
+        and "catalog unavailable" in r.getMessage()
+        for r in caplog.records
+    )
+
+
 # -------------------------------------------------- write-time row stats
 
 
@@ -1042,22 +1069,33 @@ def test_last_version_hint_resolves_head_without_listing(spark, store):
 # ---------------------------------------------- memo vs scoped release
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    out = set()
+    while it.hasNext():
+        out.add(it.next()._1())
+    return out
+
+
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
 def test_memo_checkpoint_survives_batch_scoped_release(
     spark, sf_dir, tmp_path
 ):
     """r14 verdict "what's wrong" #3: a session-shared memo frame
-    (the BPE train/encode memos) first materialized INSIDE an ingest
-    batch's snapshot/release scope must survive
-    ``release_checkpoints_since`` — without the ownership registry the
-    release would unpersist the memo's localCheckpoint blocks while
-    the memo dict still references the frame, and the next BPE catalog
-    key would fail on dead blocks."""
+    (the BPE train/encode memos) first materialized INSIDE a batch's
+    checkpoint-owning scope must survive that scope's release — the
+    memo dict still references the frame, and freeing its blocks would
+    make the next BPE catalog key fail.  A plain checkpoint made in the
+    same scope is freed."""
     import os
     import shutil
 
-    from delta_lake_gcp_implementation_spark.pipeline.storage import (
-        release_checkpoints_since,
-        snapshot_persistent_rdds,
+    from delta_lake_gcp_implementation_spark.checkpoints import (
+        checkpoint,
+        owned_checkpoints,
     )
     from delta_lake_gcp_implementation_spark.plans import bpeq
 
@@ -1072,15 +1110,15 @@ def test_memo_checkpoint_survives_batch_scoped_release(
             os.path.join(sf_copy, f"{t}.parquet"),
         )
 
-    snap = snapshot_persistent_rdds(spark)
-    # an UNPROTECTED checkpoint made in the same scope — the batch
-    # intermediate the release exists to free
-    victim = spark.range(64).localCheckpoint(eager=True)
-    memo_frame = bpeq.encode_frame(spark, sf_copy)  # builds + protects
-    expected = memo_frame.count()
-    released = release_checkpoints_since(spark, snap)
-    assert released >= 1  # the victim (at least) was freed
-    # cached memo still evaluates from its (protected) blocks
+    with owned_checkpoints():
+        # the batch intermediate the scope exists to free
+        victim = checkpoint(spark.range(64))
+        memo_frame = bpeq.encode_frame(spark, sf_copy)  # builds the memo
+        expected = memo_frame.count()
+    live = _persistent_rdd_ids(spark)
+    assert _rdd_id(victim) not in live
+    assert _rdd_id(memo_frame) in live
+    # cached memo still evaluates from its blocks
     assert bpeq.encode_frame(spark, sf_copy).count() == expected
     # cleanup so later tests see no stray memo entries for tmp dirs
     bpeq._ENCODE_MEMO.pop(

@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_gcp_implementation_spark.functions import similarity as sim
@@ -1268,6 +1269,26 @@ def test_lsh_bucket_sql_text_matches_column_path(spark):
     # non-finite planes fall back even for a name input
     bad = [[float("nan")] * 8]
     assert df.select(sim.lsh_bucket("v", bad)).collect()
+
+
+def test_lsh_bucket_sql_path_quotes_column_name(spark):
+    """The SQL fast path backtick-quotes the column name: a name with a
+    space gives the same buckets as the Column path, and a name with a
+    backtick (which the quoting cannot carry) is refused."""
+    planes = sim.hyperplanes(8, 4)
+    df = spark.createDataFrame(
+        [(0, [1.0, -2.0, 0.5, 3.0]), (1, [-1.0, 0.0, 2.0, -0.5])],
+        "vec_id int, `my vec` array<double>",
+    )
+    got = df.select(
+        "vec_id",
+        sim.lsh_bucket("my vec", planes).alias("b_sql"),
+        sim.lsh_bucket(F.col("`my vec`"), planes).alias("b_col"),
+    ).collect()
+    for r in got:
+        assert r.b_sql == r.b_col, (r.vec_id, r.b_sql, r.b_col)
+    with pytest.raises(ValueError, match="unsupported column name"):
+        sim.lsh_bucket("my`vec", planes)
 
 
 def test_sql_text_literals_bit_exact(spark):
