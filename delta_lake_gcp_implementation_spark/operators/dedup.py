@@ -617,8 +617,8 @@ def connected_components(
     on id, no driver-side graph state, so it scales like any shuffle
     join (this is the standard label-propagation CC used at corpus
     scale; GraphFrames' algorithm is the same idea plus star
-    contractions).  Each iteration is ``localCheckpoint``-ed: iterative
-    lineage otherwise grows the plan exponentially.
+    contractions).  Each iteration is ``localCheckpoint``-ed: the
+    iterated plan otherwise grows exponentially.
 
     Rounds past ``_JUMP_FROM`` do edge propagation THEN pointer
     jumping (``label <- label(label)``, the shortcutting half of

@@ -79,11 +79,10 @@ list, and a sync sidecar (the committed BANDS version the log
 reflects, written only after the bookkeeping it describes) lets
 ``_ensure_bucket_counts`` detect a crash between the BANDS append and
 the counts append and self-heal by the same recount (ADVICE r9;
-version-keyed rather than count-keyed, and manifest-less orphan data
-files are adopted into committed state first, per ADVICE r10 — see
-``_save_counts_sync``).  Compaction triggers on row growth OR append
-count, so small-file accumulation is bounded even when batches are
-tiny relative to the bucket population.  The invariant (per-bucket SUM
+version-keyed rather than count-keyed — see ``_write_counts_sync``).
+Compaction triggers on row growth OR append count, so small-file
+accumulation is bounded even when batches are tiny relative to the
+bucket population.  The invariant (per-bucket SUM
 of the log == GROUP BY over the incidence list) is asserted by
 ``tests/test_corpus_counts.py`` after multiple batches, crashes, and
 compactions.
@@ -144,10 +143,10 @@ def _recount_buckets(bands: DataFrame) -> DataFrame:
 _COUNTS_COMPACT_FACTOR = 4
 #: Secondary compaction trigger (ADVICE r10): compact after this many
 #: APPENDS since the last compaction regardless of row growth.  Each
-#: append adds a parquet file-set + commit manifest, so many small
+#: append adds a parquet file-set + commit, so many small
 #: batches over a large bucket population would otherwise accumulate
 #: thousands of small files before the row-factor trigger ever fires;
-#: this bounds file/manifest count independently of row count.
+#: this bounds file/commit count independently of row count.
 _COUNTS_COMPACT_APPENDS = 32
 
 
@@ -155,7 +154,7 @@ def _counts_sync_path(store: TableStore) -> str:
     return store.path(COUNTS) + ".__sync__.json"
 
 
-def _load_counts_sync(store: TableStore) -> dict | None:
+def _read_counts_sync(store: TableStore) -> dict | None:
     import json
 
     try:
@@ -165,7 +164,7 @@ def _load_counts_sync(store: TableStore) -> dict | None:
         return None
 
 
-def _save_counts_sync(
+def _write_counts_sync(
     store: TableStore, base_rows: int, appends: int = 0
 ) -> None:
     """Record (a) the committed BANDS version the COUNTS log reflects,
@@ -177,15 +176,9 @@ def _save_counts_sync(
     a crash between the BANDS append and the counts bookkeeping used
     to understate the cap forever with no self-heal).
 
-    The sync key is ``store.current_version(BANDS)`` — COMMITTED
-    state — not the meta-sidecar row count (ADVICE r10): the count
-    answers from a sidecar written after the parquet job commits, so
-    a crash in between leaves orphan data files that ``read()`` sees
-    but ``count()`` does not, and a count-keyed check would pass while
-    the counts-vs-incidence invariant silently broke.  Versions only
-    advance on a durable manifest commit, and ``_ensure_bucket_counts``
-    separately adopts any manifest-less orphan files (which itself
-    advances the version and forces the recount)."""
+    The sync key is ``store.current_version(BANDS)``: every BANDS
+    commit advances it, and nothing else changes what ``read()``
+    returns (ADVICE r10)."""
     import json
 
     with open(_counts_sync_path(store), "w") as f:
@@ -217,20 +210,12 @@ def _ensure_bucket_counts(store: TableStore) -> None:
     * stale log (ADVICE r9 self-heal): the sync sidecar records which
       committed BANDS version the log reflects; a crash between the
       BANDS append and the counts bookkeeping leaves them out of sync,
-      so a sidecar/manifest mismatch (both O(1) metadata reads)
+      so a sidecar/head-version mismatch (both O(1) metadata reads)
       triggers the same recount instead of silently understating the
-      cap forever;
-    * orphaned data files (ADVICE r10, the narrower crash class): a
-      crash BETWEEN the BANDS parquet job commit and its manifest
-      write leaves files that ``read()`` sees but committed state does
-      not — neither a count- nor a version-keyed check alone would
-      notice.  ``adopt_uncommitted`` folds them into committed state
-      first (advancing the version), so the version check below then
-      forces the recount and both sides see the same rows again."""
+      cap forever."""
     if not store.exists(BANDS):
         return
-    store.adopt_uncommitted(BANDS)
-    sync = _load_counts_sync(store)
+    sync = _read_counts_sync(store)
     if (
         store.exists(COUNTS)
         and sync is not None
@@ -239,7 +224,7 @@ def _ensure_bucket_counts(store: TableStore) -> None:
         return
     compacted = _recount_buckets(store.read(BANDS))
     n = store.overwrite(COUNTS, compacted)
-    _save_counts_sync(store, base_rows=n)
+    _write_counts_sync(store, base_rows=n)
 
 
 def _add_bucket_counts(store: TableStore, new_bands: DataFrame) -> None:
@@ -269,10 +254,10 @@ def _add_bucket_counts(store: TableStore, new_bands: DataFrame) -> None:
         # made any >4-bucket first batch immediately rewrite the table
         # it just wrote, a no-op compaction on every fresh store)
         n = store.overwrite(COUNTS, delta)
-        _save_counts_sync(store, base_rows=n)
+        _write_counts_sync(store, base_rows=n)
         return
     store.append(COUNTS, delta)
-    sync = _load_counts_sync(store) or {}
+    sync = _read_counts_sync(store) or {}
     base = max(int(sync.get("base_rows", 0)), 1)
     appends = int(sync.get("appends", 0)) + 1
     log_rows = store.count(COUNTS)
@@ -284,7 +269,7 @@ def _add_bucket_counts(store: TableStore, new_bands: DataFrame) -> None:
         appends = 0
     else:
         base = sync.get("base_rows", log_rows)
-    _save_counts_sync(store, base_rows=base, appends=appends)
+    _write_counts_sync(store, base_rows=base, appends=appends)
 
 
 def ingest_batch(
@@ -294,7 +279,6 @@ def ingest_batch(
     text_col: str = "text",
     max_bucket: int | None = MAX_BUCKET,
     txn: tuple[str, int] | None = None,
-    discard_residue: bool = True,
 ) -> dict:
     """Dedup ``batch`` against itself and the persisted corpus, append
     the survivors + their index rows, return the accounting dict.
@@ -318,8 +302,6 @@ def ingest_batch(
     the silent hole the old absorb-only idempotency hid).  With it:
 
     * fully-applied batches (DOCS txn marker) return in O(1);
-    * crashed-append residue is discarded first (the source
-      re-delivers, so deletion — not adoption — is lossless here);
     * appends run INDEX-FIRST / DOCS-LAST, each marker-skipped, so
       every crash window replays to the same final state: the compute
       is deterministic given the batch + committed DOCS, and DOCS —
@@ -330,16 +312,13 @@ def ingest_batch(
       whose version-keyed sync sidecar already recounts from BANDS
       whenever they diverge.
 
-    ``discard_residue=False`` skips the residue sweep: crash residue
-    can only exist on the FIRST batch after a (re)start (single-writer
-    contract — every later batch follows a fully committed one), so a
-    long-running stream passes True once and False thereafter instead
-    of paying four directory walks per micro-batch (r13 review)."""
+    A crashed append leaves no residue to clean up: before its commit
+    claim the table is untouched, after it the table store rolls the
+    commit forward on the next access."""
     with owned_checkpoints():
         return _ingest_batch_impl(
             store, batch, id_col=id_col, text_col=text_col,
             max_bucket=max_bucket, txn=txn,
-            discard_residue=discard_residue,
         )
 
 
@@ -350,7 +329,6 @@ def _ingest_batch_impl(
     text_col: str,
     max_bucket: int | None,
     txn: tuple[str, int] | None,
-    discard_residue: bool,
 ) -> dict:
     """Body of :func:`ingest_batch` (see its docstring), run inside
     the batch's checkpoint-owning scope."""
@@ -368,9 +346,6 @@ def _ingest_batch_impl(
                 "near_dups": 0, "accepted": 0,
                 "corpus_size": store.count(DOCS), "replayed": True,
             }
-        if discard_residue:
-            for t in (DOCS, SIGS, BANDS, COUNTS):
-                store.discard_uncommitted(t)
         # a replay whose index appends already committed must see the
         # PRE-BATCH index (its own committed rows filtered back out),
         # or the recompute diverges from the original attempt — e.g.
@@ -573,10 +548,10 @@ def _ingest_batch_impl(
     _ensure_bucket_counts(store)
 
     # the per-table appends are independent Spark jobs on distinct
-    # tables (separate dirs, manifests, schema-cache keys), so they
+    # tables (separate dirs and commit logs), so they
     # overlap from driver threads (guide §2.6): each append's write
     # job back-fills the executor tail of the others', and the
-    # driver-side commit bookkeeping (manifest link, catalog refresh)
+    # driver-side commit bookkeeping (footer reads, commit claim)
     # interleaves instead of serializing — the batch was ~12 s of
     # ~50 sub-second driver-latency-bound jobs at sf0.1.
     def _append_sigs() -> None:
@@ -662,20 +637,13 @@ def ingest_stream(
             os.path.abspath(checkpoint_dir).encode()
         ).hexdigest()[:16]
         app_id = f"stream::corpus_ingest::{digest}"
-    # crash residue can only exist on the first batch after a restart
-    # (single-writer contract), so sweep once per stream start instead
-    # of walking four table directories every micro-batch
-    state = {"swept": False}
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         ingest_batch(
             store, batch_df, id_col=id_col, text_col=text_col,
             txn=(app_id, int(batch_id)),
-            discard_residue=not state["swept"],
         )
-        state["swept"] = True
 
     q = (
         stream_df.writeStream.foreachBatch(handle)
@@ -701,7 +669,7 @@ def rebuild_index(store: TableStore) -> dict:
         ),
     )
     n_counts = store.overwrite(COUNTS, _recount_buckets(store.read(BANDS)))
-    _save_counts_sync(store, base_rows=n_counts)
+    _write_counts_sync(store, base_rows=n_counts)
     return {
         "docs": store.count(DOCS),
         "sigs": n_sigs,

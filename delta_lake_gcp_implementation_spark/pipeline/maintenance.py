@@ -20,19 +20,22 @@ import os
 
 from pyspark.sql import functions as F
 
-from .storage import TableStore
+from .storage import TableStore, _stat_value
+
+
+def _files(store: TableStore, name: str) -> dict[str, dict]:
+    """The head snapshot's file entries (relative path -> rows, bytes,
+    key stats); hive-partitioned files keep their ``col=value``
+    dirs."""
+    head = store.snapshot(name)
+    if head is None:
+        raise FileNotFoundError(f"{name}: no such table under {store.root}")
+    return head["files"]
 
 
 def file_count(store: TableStore, name: str) -> int:
-    """Count parquet part files, walking hive-partitioned subdirs too
-    (a top-level-only listing reports 0 for write_partitioned
-    layouts)."""
-    return sum(
-        1
-        for _dir, _subdirs, files in os.walk(store.path(name))
-        for f in files
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
+    """Number of data files in the table's head snapshot."""
+    return len(_files(store, name))
 
 
 def compact(store: TableStore, name: str, target_files: int = 8) -> int:
@@ -63,21 +66,9 @@ def write_partitioned(
 ) -> None:
     """Overwrite as a hive-partitioned layout (e.g. Bronze by event
     date): the watermark/date-range scans then prune whole partitions
-    (visible as ``PartitionFilters`` in the plan)."""
-    final = store.path(name)
-    tmp = f"{final}.__stage__part"
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    import shutil
-
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.rename(tmp, final)
-    # this write bypasses the TableStore counted path: drop the row-count
-    # sidecar so store.count() self-heals with one scan
-    meta = store._meta_path(name)
-    if os.path.exists(meta):
-        os.remove(meta)
-    store.spark.catalog.refreshByPath(final)
+    (visible as ``PartitionFilters`` in the plan).  One ordinary
+    replace commit, so history, counts and time travel stay exact."""
+    store._replace(name, df, partition_by=tuple(partition_cols))
 
 
 def write_bucketed(
@@ -155,43 +146,34 @@ def refresh_agg_incremental(
             F.sum(count_col).cast("bigint").alias(count_col),
         )
     )
-    # upsert's write-observed count is the post-fold answer; counting
-    # ``merged`` AFTER the swap would read the replaced lineage (the
+    # upsert's committed count is the post-fold answer; counting
+    # ``merged`` AFTER the commit would read files it moved out (the
     # stale-file-listing trap the storage layer docs call out)
     return store.upsert(agg_name, merged, keys, txn=txn)
 
 
 def file_stats(store: TableStore, name: str, column: str) -> list[dict]:
-    """Per-file [min, max] for ``column`` read from parquet FOOTERS —
-    the statistics Delta keeps in its commit log.  Local metadata reads
-    (no data pages touched); at cluster scale this listing itself lives
-    in the manifest, written once per commit."""
-    import pyarrow.parquet as pq
-
+    """Per-file [min, max] for ``column`` from the head snapshot — the
+    statistics Delta keeps in its commit log, recorded once per file
+    when its commit was written.  ``None`` bounds mean the file's
+    stats prove nothing for this column (unprunable type, all-NULL,
+    or too long a string)."""
+    files = _files(store, name)
+    dtype = store.read(name).schema[column].dataType
     out = []
-    root = store.path(name)
-    for fname in sorted(os.listdir(root)):
-        if not fname.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(root, fname)).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        if column not in idx:
-            continue
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx[column]).statistics
-            if st is None or not st.has_min_max:
-                lo = hi = None
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        out.append({"file": fname, "min": lo, "max": hi})
+    for fname, entry in sorted(files.items()):
+        lo, hi = entry["stats"].get(column) or (None, None)
+        out.append({
+            "file": fname,
+            "min": None if lo is None else _stat_value(lo, dtype),
+            "max": None if hi is None else _stat_value(hi, dtype),
+        })
     return out
 
 
 def scan_pruned(store: TableStore, name: str, column: str, lo, hi):
     """Data skipping (Delta file-pruning parity): read only the files
-    whose footer [min, max] for ``column`` overlaps [lo, hi] — on a
+    whose recorded [min, max] for ``column`` overlaps [lo, hi] — on a
     ``cluster_by``-laid-out table a narrow range scan touches one file
     instead of all of them, the difference between reading 100 TB and
     reading one range's worth.  Files with missing stats are kept
@@ -201,39 +183,19 @@ def scan_pruned(store: TableStore, name: str, column: str, lo, hi):
     files_read, files_total)``."""
     stats = file_stats(store, name, column)
     root = store.path(name)
+    table = store.read(name)
     keep = [
         s["file"]
         for s in stats
         if s["min"] is None or not (s["max"] < lo or s["min"] > hi)
     ]
     if not keep:
-        return store.read(name).limit(0), 0, len(stats)
-    pruned = store.spark.read.option("basePath", root).parquet(
-        *[os.path.join(root, f) for f in keep]
-    )
+        return table.limit(0), 0, len(stats)
+    pruned = store.spark.read.schema(table.schema).option(
+        "basePath", root
+    ).parquet(*[os.path.join(root, f) for f in keep])
     df = pruned.filter((F.col(column) >= lo) & (F.col(column) <= hi))
     return df, len(keep), len(stats)
-
-
-def _empty_like(store: TableStore, name: str):
-    """Zero-row frame for a table whose directory holds no part files
-    (an empty-DataFrame overwrite can emit only ``_SUCCESS``).  Parquet
-    schema inference needs at least one footer, so fall back to the
-    catalog registration (which snapshots the schema at write time),
-    then to a zero-column frame."""
-    from pyspark.sql.types import StructType
-
-    try:
-        return store.read(name).limit(0)
-    except Exception:
-        pass
-    db, dot, tbl = name.partition(".")
-    if not dot:
-        db, tbl = "default", name
-    try:
-        return store.spark.table(f"`{db}`.`{tbl}`").limit(0)
-    except Exception:
-        return store.spark.createDataFrame([], StructType([]))
 
 
 def build_file_bloom(
@@ -327,27 +289,15 @@ def scan_bloom_pruned(
     absent (no false negatives), so skipped files cannot lose rows; the
     returned frame still carries the predicate — pruning is IO-only.
     Files missing from the index are kept (never prune on absence).
-    Walks hive-partitioned subdirs like ``file_count`` (a top-level-only
-    listing would silently return 0 rows for ``write_partitioned``
-    layouts); the index is keyed by path relative to the table root to
-    match ``build_file_bloom`` (basenames collide across hive partition
-    dirs).  A table directory that exists but holds zero part files (an
-    empty-DataFrame overwrite can emit only ``_SUCCESS``) returns an
-    empty frame; ``FileNotFoundError`` is reserved for a missing root.
+    The file set is the head snapshot's, hive-partitioned files
+    included, keyed by path relative to the table root to match
+    ``build_file_bloom`` (basenames collide across hive partition
+    dirs).  A table with no data files returns an empty frame;
+    ``FileNotFoundError`` is reserved for a table that does not exist.
     Returns ``(df, files_read, files_total)``."""
+    files = sorted(_files(store, name))
     root = store.path(name)
-    if not os.path.isdir(root):
-        raise FileNotFoundError(
-            f"scan_bloom_pruned: table root missing: {root}"
-        )
-    files = sorted(
-        os.path.relpath(os.path.join(d, f), root)
-        for d, _subdirs, fs in os.walk(root)
-        for f in fs
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
-    if not files:
-        return _empty_like(store, name), 0, 0
+    table = store.read(name)
     keep = [
         f
         for f in files
@@ -355,8 +305,8 @@ def scan_bloom_pruned(
         or _py_bloom_hit(str(value), index[f], m_bits, k_hash)
     ]
     if not keep:
-        return store.read(name).limit(0), 0, len(files)
-    df = store.spark.read.option("basePath", root).parquet(
-        *[os.path.join(root, f) for f in keep]
-    )
+        return table.limit(0), 0, len(files)
+    df = store.spark.read.schema(table.schema).option(
+        "basePath", root
+    ).parquet(*[os.path.join(root, f) for f in keep])
     return df.filter(F.col(column) == value), len(keep), len(files)

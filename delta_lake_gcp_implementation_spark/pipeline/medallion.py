@@ -113,7 +113,7 @@ DEFAULT_STAGE_RETRIES = 2
 
 #: job_control is the one table every stage appends to; with the gold
 #: dimension tier running stages concurrently (run_incremental), its
-#: single-writer-per-table manifest contract needs this lock.
+#: single-writer-per-table commit contract needs this lock.
 _JOB_CONTROL_LOCK = threading.Lock()
 
 #: Ambient (retry_count, max_retries) for the CURRENTLY running stage,
@@ -179,7 +179,7 @@ def write_job_control(
     if max_retries is None:
         max_retries = _STAGE_RETRY.get()[1]
     # concurrent gold-tier stages (run_incremental) both append here;
-    # manifest versions are single-writer per table, so serialize the
+    # commit versions are single-writer per table, so serialize the
     # one shared-table write
     now = datetime.utcnow()
     wm_ts = (
@@ -1040,7 +1040,7 @@ def scd2_dim_merchant(store: TableStore, batch_id: str) -> dict:
     # Materialize the key set BEFORE delete_matched mutates the dim —
     # localCheckpoint pins the pre-mutation snapshot without the table
     # commit the old sameday_keys staging table paid (write job +
-    # manifest + register + read-back, ~4 driver jobs per run; r16).
+    # commit + register + read-back, ~4 driver jobs per run; r16).
     # Unlike the insert staging table this set is never re-read after
     # the stage, so durability buys nothing: a retried stage recomputes
     # it from the dim it is about to mutate, exactly as before.

@@ -21,8 +21,9 @@ re-delivery) is skipped in O(1) off the BLOBS marker; a crash between
 the FEATURES and BLOBS appends replays to the identical final state
 (the decode is deterministic given the batch + committed BLOBS, and
 transient orphan feature rows are invisible — features join back to
-committed blobs).  Crashed-append residue is discarded up front (the
-source re-delivers, so deletion is the lossless repair).
+committed blobs).  A crashed append leaves nothing to clean up: the
+table store rolls a claimed commit forward and ignores an unclaimed
+one.
 
 Scale: dedup is digest-hash work, linear in the batch; the decode is
 Arrow-batched Python bounded by ``arrow.maxRecordsPerBatch``; nothing
@@ -51,7 +52,6 @@ def ingest_media_batch(
     media_df: DataFrame,
     fake_decode: bool = False,
     txn: tuple[str, int] | None = None,
-    discard_residue: bool = True,
 ) -> dict:
     """Dedup ``media_df`` (MEDIA_SCHEMA) against itself and the stored
     blob corpus, decode the survivors, append features then blobs.
@@ -59,9 +59,7 @@ def ingest_media_batch(
     unique across batches (the caller's ingest contract).  The batch
     owns its checkpoint and frees it before returning (``checkpoints``)."""
     with owned_checkpoints():
-        return _ingest_media_batch_impl(
-            store, media_df, fake_decode, txn, discard_residue
-        )
+        return _ingest_media_batch_impl(store, media_df, fake_decode, txn)
 
 
 def _ingest_media_batch_impl(
@@ -69,7 +67,6 @@ def _ingest_media_batch_impl(
     media_df: DataFrame,
     fake_decode: bool,
     txn: tuple[str, int] | None,
-    discard_residue: bool,
 ) -> dict:
     feats_applied = False
     if txn is not None:
@@ -85,9 +82,6 @@ def _ingest_media_batch_impl(
                 "accepted": 0, "corpus_size": store.count(BLOBS),
                 "replayed": True,
             }
-        if discard_residue:
-            for t in (BLOBS, FEATS):
-                store.discard_uncommitted(t)
         feats_applied = _applied(FEATS)
 
     batch = media_df.withColumn("sha256", F.sha2(F.col("content"), 256))
@@ -147,17 +141,13 @@ def ingest_media_stream(
             os.path.abspath(checkpoint_dir).encode()
         ).hexdigest()[:16]
         app_id = f"stream::media_ingest::{digest}"
-    state = {"swept": False}
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         ingest_media_batch(
             store, batch_df, fake_decode=fake_decode,
             txn=(app_id, int(batch_id)),
-            discard_residue=not state["swept"],
         )
-        state["swept"] = True
 
     q = (
         stream_df.writeStream.foreachBatch(handle)

@@ -1,86 +1,36 @@
-"""Parquet/Delta table store with MERGE semantics.
-
-The reference addresses Delta tables through a Hive metastore
-(``bronze.transactions`` etc., ``load_bronze.py:66-109``).  Locally we
-map ``db.table`` names to parquet directories under a root path and
-provide the same four mutation primitives:
-
-- append            (S5  — ``INSERT INTO``)
-- overwrite         (S6  — ``INSERT OVERWRITE``, schema-preserving)
-- upsert            (S7/S8 — ``MERGE INTO ... WHEN MATCHED UPDATE
-                     WHEN NOT MATCHED INSERT``)
-- delete_matched    (S9  — ``MERGE ... WHEN MATCHED THEN DELETE``)
-- update_where      (S10 — in-place ``UPDATE ... SET ... WHERE``)
-
-All mutations use a join-rewrite over parquet: target ⟕ source
-anti-join (rows the merge would keep unchanged) unioned with the
-source (rows inserted/updated).  This sandbox has no ``delta-spark``
-package, so the Delta MERGE/UPDATE branch is intentionally NOT
-implemented — the parquet fallback is the only path, and the pipeline
-stays storage-agnostic through this module's five primitives (swap in
-Delta/Iceberg implementations at deployment).  Verified 2026-08-13:
-``import delta`` fails, and ``pip`` cannot reach any index (DNS
-resolution fails — no network), so neither the Python package nor the
-Delta JVM jars (normally fetched from Maven via
-``spark.jars.packages`` at session start) are obtainable here.  The
-Delta branch therefore cannot be built or tested in this environment,
-by constraint rather than by choice.  Delta's multi-match
-MERGE error semantics are available via ``upsert(...,
-require_unique_source=True)``, which raises like Delta does when two
-source rows hit one target key; the pipeline itself guarantees unique
-source keys by W1/W2 dedup upstream, exactly like the reference
-(``docs/KNOWN_ISSUES.md:355-364``).
-
-Scale notes: key-matched mutations (upsert / delete_matched /
-update_matched) take a FILE-GRANULAR path, Delta's actual MERGE
-behavior: parquet-footer min/max key stats decide which live files can
-possibly contain a source key, only those are rewritten (untouched
-files stay in place byte-for-byte), and a merge whose keys land beyond
-every file's range degrades to an O(batch) append — so a 0.1%
-incremental batch never costs a full-table write.  The full staged
-rewrite remains the fallback for schema evolution, partitioned
-layouts, unprunable key types, and all-files-touched merges.  At
-100 TB the same stats live in the commit log (Delta's per-AddFile
-``stats``) instead of being footer-read on demand.  Writes land in a
-staging dir then swap atomically-enough for local runs; cluster
-deployments swap via metastore table rename or Delta's own commit
-protocol.
-
-Versioned commit manifests (the local stand-in for ``_delta_log``):
-every mutation commits a JSON manifest — monotonically numbered, file
-list + write-observed row count + op — under
-``<table>.__log__/<version>.json``.  A replace ARCHIVES the previous
-live directory under ``<table>.__v__/<lineage>`` instead of deleting
-it, and appends add files without touching old ones, so
-``read_version(n)`` reconstructs any retained snapshot from its
-manifest's exact file list (time travel), ``versions(name)`` lists the
-history, and ``vacuum(retain_versions=k)`` deletes only archived
-lineages no retained manifest references.  Manifest resolution prefers
-the live dir and falls back to the archive when the listed files are
-not where the latest manifest says — which makes reads correct at
-every crash point of the two-rename swap (archive-then-promote).
-
-Row-count accounting mirrors Delta's commit-log stats: every write
-observes its own row count DURING the write action (``df.observe`` —
-zero extra jobs, exactly-once across task retries) and persists it to
-a per-table meta sidecar; ``count()`` answers from the sidecar.  The
-alternative — re-scanning the table after each MERGE just to report
-counts — is a full metadata pass over millions of files at 100 TB and
-measurably dominates small-batch pipeline latency locally.  Invariant:
-all mutations go through this class (true for pipeline, streaming
-foreachBatch, and tests); a missing/invalid sidecar falls back to one
-scan and self-heals.
+"""Parquet table store whose commit log is the table (Delta Lake,
+VLDB 2020): ``db.table`` maps to ``<root>/<db>__<t>/``, the live dir,
+which holds exactly the head snapshot's data files;
+``<db>__<t>.__stage__<hex>/`` holds one write's output until it is
+applied; ``<db>__<t>.__log__/NNNNNNNN.json`` is one commit — a complete
+snapshot (every file with its rows, bytes and key min/max, the schema,
+the txn map) plus that commit's add/remove lists; and
+``<db>__<t>.__v__/<relpath>`` keeps the files some commit removed, for
+time travel until ``vacuum``.  Every write goes through ``_publish``:
+write the stage, claim version head+1 with ``os.link`` (which fails if
+any commit landed after the head was read), then apply the stage —
+move its files into the live dir and the removed files out to
+``__v__``.  A crash therefore has exactly two cases: before the claim
+the live dir is untouched and the stage is garbage ``vacuum``
+removes; after the claim the next access finds the head's stage still
+present and rolls the apply forward.  Counts, txn markers, schema,
+pruning stats and time travel are all answered from one commit file,
+never from a directory listing or a footer re-read.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import logging
 import os
 import re
 import shutil
+import time
 import uuid
+from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -104,12 +54,89 @@ _PRUNABLE_KEY_TYPES = (
     T.StringType,
     T.DateType,
 )
+#: a string min/max longer than this is not recorded (it would bloat
+#: every later snapshot); the file is then unprunable on that column
+_MAX_STAT_CHARS = 64
 
 
 class ConcurrentWriteError(RuntimeError):
-    """Raised when a commit loses the optimistic-concurrency race:
-    either its version slot was claimed by another writer, or a commit
-    landed after the caller's ``expected_version`` read."""
+    """Raised when a commit loses the optimistic-concurrency race: its
+    version slot was claimed by another writer, or a file it removes
+    is no longer in the head."""
+
+
+def _footer_stats(md, schema: T.StructType) -> dict:
+    """``{column: [min, max]}`` over every row group of one parquet
+    footer, for each prunable column; ``None`` when every value is
+    NULL (no key can match); the column is left out when its stats
+    cannot prove anything."""
+    index = {
+        md.schema.column(j).path: j for j in range(md.num_columns)
+    }
+    out: dict = {}
+    for field in schema.fields:
+        j = index.get(field.name)
+        if j is None or not isinstance(field.dataType, _PRUNABLE_KEY_TYPES):
+            continue
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(j).statistics
+            if st is not None and st.has_min_max:
+                try:
+                    mn, mx = st.min, st.max
+                except Exception:
+                    break
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+            elif not (
+                st is not None
+                and st.has_null_count
+                and st.null_count == rg.num_rows
+            ):
+                break
+        else:
+            if lo is None:
+                out[field.name] = None
+            elif isinstance(lo, datetime.date):
+                out[field.name] = [lo.isoformat(), hi.isoformat()]
+            elif isinstance(lo, int) or (
+                isinstance(lo, str)
+                and max(len(lo), len(hi)) <= _MAX_STAT_CHARS
+            ):
+                out[field.name] = [lo, hi]
+    return out
+
+
+def _stat_value(value, dtype):
+    """A recorded min/max back as the Python value Spark compares."""
+    if isinstance(dtype, T.DateType):
+        return datetime.date.fromisoformat(value)
+    return value
+
+
+def _nullable(dtype):
+    """``dtype`` with every level nullable — what a parquet read gives
+    back whatever the written frame declared."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dtype.fields
+        ])
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            _nullable(dtype.keyType), _nullable(dtype.valueType), True
+        )
+    return dtype
+
+
+def _move(src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst`` unless that was already done."""
+    if os.path.exists(src):
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
 
 
 class TableStore:
@@ -129,42 +156,28 @@ class TableStore:
         self.spark = spark
         self.root = root
         #: tables smaller than this take the plain full-rewrite path —
-        #: the file-granular prune decision (footer scan + bounds agg,
-        #: ~1 s of fixed job cost locally) costs more than rewriting a
-        #: sub-256MB table whole at local NVMe throughput, and every
-        #: real table at the target scale is orders of magnitude above
-        #: the floor.  Calibrate per storage medium at deployment
-        #: (object-store economics favor a much lower floor); tests
-        #: set 0 to engage the path on test-sized tables
+        #: the file-granular prune decision (bounds agg + exact
+        #: containment test, ~1 s of fixed job cost locally) costs
+        #: more than rewriting a sub-256MB table whole at local NVMe
+        #: throughput, and every real table at the target scale is
+        #: orders of magnitude above the floor.  Calibrate per storage
+        #: medium at deployment (object-store economics favor a much
+        #: lower floor); tests set 0 to engage the path on test-sized
+        #: tables
         self.prune_min_table_bytes = 256 << 20
-        #: (name -> (committed version, schema)) — Delta keeps the
-        #: schema in its transaction log so a read never re-infers it
-        #: from parquet footers; this cache is the same idea keyed on
-        #: the manifest head (O(1) ``_last_version`` probe).  Every
-        #: mutation commits a new version, so staleness is impossible
-        #: under the documented single-writer contract, and appends
-        #: refuse schema drift so crash residue in the live dir always
-        #: matches the committed schema (r15: footer re-inference was
-        #: one driver job per ``read()`` — the medallion stages issue
-        #: dozens).
-        self._schema_cache: dict[str, tuple[int, object]] = {}
+        #: (name -> head commit) — ``_head`` probes forward from it, so
+        #: commits made through other instances stay visible
+        self._heads: dict[str, dict] = {}
         #: (name -> schema registered in the session catalog by THIS
         #: instance) — lets ``_register`` skip the drop-and-recreate
         #: when an overwrite kept the schema (see ``_register``).
         self._registered: dict[str, object] = {}
         os.makedirs(root, exist_ok=True)
-        # re-attach tables persisted by a previous session over this
-        # root, so read-only consumers get the spark.sql surface too.
-        # Only 'db__table'-shaped dirs are real tables: a crashed
-        # replace leaves 'db__table.__stage__<hex>' dirs behind, whose
-        # '.' would mismap the name and register a junk catalog entry.
+        # re-attach tables committed by a previous session over this
+        # root, so read-only consumers get the spark.sql surface too
         for d in sorted(os.listdir(root)):
-            if (
-                "__" in d
-                and "." not in d
-                and os.path.isdir(os.path.join(root, d))
-            ):
-                self._register(d.replace("__", ".", 1))
+            if d.endswith(".__log__"):
+                self._register(d[: -len(".__log__")].replace("__", ".", 1))
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name.replace(".", "__"))
@@ -185,8 +198,11 @@ class TableStore:
         if not dot:
             db, tbl = "default", name
         try:
-            schema = self.read(name).schema if self.exists(name) else None
-            if schema is not None and self._registered.get(name) == schema:
+            head = self._head(name)
+            if head is None:
+                return
+            schema = self._schema(head)
+            if self._registered.get(name) == schema:
                 try:
                     self.spark.sql(f"REFRESH TABLE `{db}`.`{tbl}`")
                     return
@@ -198,93 +214,14 @@ class TableStore:
                 f"CREATE TABLE `{db}`.`{tbl}` USING parquet "
                 f"LOCATION '{self.path(name)}'"
             )
-            if schema is not None:
-                self._registered[name] = schema
-            else:
-                self._registered.pop(name, None)
+            self._registered[name] = schema
         except Exception as exc:
             # registration is a convenience surface; never fail a write
             # over catalog limitations (e.g. a foreachBatch worker
             # session without catalog access)
             _log.warning("catalog registration of %s failed: %r", name, exc)
 
-    def exists(self, name: str) -> bool:
-        return os.path.isdir(self.path(name))
-
-    def _heal(self, name: str) -> None:
-        """Crash recovery for the two-rename swap: if the live dir is
-        missing but the latest manifest names a lineage that sits in
-        the archive (the replace crashed between archive and promote),
-        promote it back.  Idempotent, metadata-only."""
-        final = self.path(name)
-        if os.path.isdir(final):
-            return
-        latest = self._latest_manifest(name)
-        if latest is None:
-            return
-        archived = os.path.join(
-            self._versions_dir(name), str(latest["lineage"])
-        )
-        if os.path.isdir(archived):
-            os.rename(archived, final)
-            self.spark.catalog.refreshByPath(final)
-
-    def read(self, name: str) -> DataFrame:
-        self._heal(name)
-        ver = self.current_version(name)
-        if ver > 0:
-            hit = self._schema_cache.get(name)
-            if hit is not None and hit[0] == ver:
-                return self.spark.read.schema(hit[1]).parquet(
-                    self.path(name)
-                )
-            df = self.spark.read.parquet(self.path(name))
-            self._schema_cache[name] = (ver, df.schema)
-            return df
-        return self.spark.read.parquet(self.path(name))
-
-    def count(self, name: str) -> int:
-        """Row count from the write-time meta sidecar (commit-log
-        stats, O(1)); falls back to one scan and self-heals when the
-        sidecar is missing."""
-        self._heal(name)
-        if not self.exists(name):
-            return 0
-        cached = self._load_count(name)
-        if cached is not None:
-            return cached
-        n = self.read(name).count()
-        self._save_count(name, n)
-        return n
-
-    # ------------------------------------------------------- meta sidecar
-
-    def _meta_path(self, name: str) -> str:
-        return self.path(name) + ".__meta__.json"
-
-    def _save_count(self, name: str, rows: int) -> None:
-        with open(self._meta_path(name), "w") as f:
-            json.dump({"row_count": int(rows)}, f)
-
-    def _load_count(self, name: str) -> int | None:
-        try:
-            with open(self._meta_path(name)) as f:
-                v = json.load(f).get("row_count")
-            return int(v) if v is not None else None
-        except Exception:
-            return None
-
-    @staticmethod
-    def _write_counted(df: DataFrame, path: str, mode: str) -> int:
-        """Write ``df`` and return its row count, observed during the
-        write action itself (no second pass over the data)."""
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            mode
-        ).parquet(path)
-        return int(obs.get["rows"])
-
-    # ----------------------------------------------- commit manifests
+    # ------------------------------------------------------ the commit log
 
     def _log_dir(self, name: str) -> str:
         return self.path(name) + ".__log__"
@@ -292,523 +229,135 @@ class TableStore:
     def _versions_dir(self, name: str) -> str:
         return self.path(name) + ".__v__"
 
-    def _list_data_files(self, base: str) -> list[str]:
-        """Relative paths of the data files under ``base`` (skips
-        _SUCCESS/_committed/hidden artifacts); partition subdirs keep
-        their ``col=value`` path components."""
-        out: list[str] = []
-        for dirpath, _dirs, files in os.walk(base):
-            rel = os.path.relpath(dirpath, base)
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                out.append(f if rel == "." else os.path.join(rel, f))
-        return sorted(out)
-
-    def _manifest_path(self, name: str, version: int) -> str:
+    def _commit_path(self, name: str, version: int) -> str:
         return os.path.join(self._log_dir(name), f"{version:08d}.json")
 
-    def _load_manifest(self, name: str, version: int) -> dict:
-        with open(self._manifest_path(name, version)) as f:
+    def _load(self, name: str, version: int) -> dict:
+        with open(self._commit_path(name, version)) as f:
             return json.load(f)
 
-    def _latest_manifest(self, name: str) -> dict | None:
-        """Latest committed manifest, resolved in O(1) via the
-        ``_last_version`` hint file (Delta's ``_last_checkpoint``
-        analog): every commit atomically replaces the hint after its
-        ``os.link`` lands, so the hint is at most a few commits stale
-        (crash between link and hint, or a concurrent writer) and a
-        forward probe from it finds the true head without listing the
-        log directory — which grows one file per commit and, on object
-        storage, costs a paginated LIST per read.  A missing/corrupt
-        hint (legacy logs, hand-edited dirs) falls back to the full
-        listing and self-heals on the next commit."""
+    def _log_versions(self, name: str) -> list[int]:
         log = self._log_dir(name)
         if not os.path.isdir(log):
-            return None
-        hint = None
-        try:
-            with open(os.path.join(log, "_last_version")) as f:
-                hint = int(f.read().strip())
-        except (OSError, ValueError):
-            pass
-        if hint is not None and os.path.exists(self._manifest_path(name, hint)):
-            v = hint
-            while os.path.exists(self._manifest_path(name, v + 1)):
-                v += 1
-            return self._load_manifest(name, v)
-        nums = [
+            return []
+        return sorted(
             int(f[:-5])
             for f in os.listdir(log)
             if f.endswith(".json") and f[:-5].isdigit()
-        ]
-        return self._load_manifest(name, max(nums)) if nums else None
-
-    def _commit(
-        self, name: str, op: str, rows: int, new_lineage: bool,
-        expected_version: int | None = None,
-        txn: tuple[str, int] | None = None,
-        extra: dict | None = None,
-    ) -> int:
-        """Append one manifest version.  ``lineage`` identifies which
-        physical directory a version's files live in: it changes on
-        every replace (the old dir is archived under that lineage id)
-        and is inherited by appends.  At 100 TB this exact bookkeeping
-        is Delta's JSON commit log; the semantics here are the same,
-        the file listing is a local ``os.walk``.
-
-        Optimistic concurrency (Delta's commit protocol): the version
-        slot is CLAIMED with ``os.link`` — which, unlike ``os.rename``,
-        fails if the target exists — so of two racing writers exactly
-        one wins and the loser gets ``ConcurrentWriteError`` instead of
-        silently clobbering the other's manifest.  Pass
-        ``expected_version`` (from ``current_version`` read before
-        computing) to ALSO fail if any commit landed since the read —
-        the read-modify-write conflict check."""
-        log = self._log_dir(name)
-        os.makedirs(log, exist_ok=True)
-        latest = self._latest_manifest(name)
-        latest_v = latest["version"] if latest else 0
-        if expected_version is not None and latest_v != expected_version:
-            raise ConcurrentWriteError(
-                f"{name}: expected version {expected_version}, "
-                f"found {latest_v} — a concurrent commit landed"
-            )
-        version = latest_v + 1
-        lineage = (
-            version if (new_lineage or latest is None) else latest["lineage"]
-        )
-        manifest = {
-            "version": version,
-            "op": op,
-            "row_count": int(rows),
-            "lineage": lineage,
-            "files": self._list_data_files(self.path(name)),
-        }
-        if txn is not None:
-            manifest["txn"] = {"app_id": txn[0], "version": int(txn[1])}
-        if extra:
-            manifest.update(extra)
-        tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, self._manifest_path(name, version))
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"{name}: version {version} was claimed by a concurrent "
-                "writer"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        # best-effort O(1) head hint (see _latest_manifest): atomic
-        # replace AFTER the durable link; a crash here just leaves the
-        # hint a probe-step stale
-        try:
-            hint_tmp = os.path.join(log, f"._lv-{uuid.uuid4().hex[:8]}")
-            with open(hint_tmp, "w") as f:
-                f.write(str(version))
-            os.replace(hint_tmp, os.path.join(log, "_last_version"))
-        except OSError:
-            pass
-        return version
-
-    def current_version(self, name: str) -> int:
-        """Latest committed version (0 for a table with no commits) —
-        read this before a read-modify-write and pass it to the
-        mutation's ``expected_version`` for full OCC."""
-        latest = self._latest_manifest(name)
-        return latest["version"] if latest else 0
-
-    def uncommitted_files(self, name: str) -> list[str]:
-        """Data files present in the live dir but absent from the
-        latest manifest's file list — the residue of a write whose
-        parquet job committed but whose manifest never landed (crash
-        between ``_write_counted`` and ``_commit``).  Plain-parquet
-        ``read()`` SEES these rows while ``count()``/``versions()`` do
-        not, so downstream bookkeeping keyed on committed state
-        silently diverges from what readers observe (ADVICE r10).
-        O(directory listing); no data scan.  A table with files but no
-        manifest at all reports every file (pre-manifest legacy
-        layout)."""
-        self._heal(name)
-        if not self.exists(name):
-            return []
-        latest = self._latest_manifest(name)
-        committed = set(latest["files"]) if latest else set()
-        return [
-            f
-            for f in self._list_data_files(self.path(name))
-            if f not in committed
-        ]
-
-    def adopt_uncommitted(self, name: str, attempts: int = 3) -> bool:
-        """Crash repair: fold orphaned (job-committed, manifest-less)
-        data files into the table's committed state by committing one
-        ``adopt`` manifest over the directory as it stands, with a
-        freshly scanned row count.  The orphan rows were produced by
-        this table's own crashed append — the data is real, only the
-        metadata transaction was lost — so adoption (not deletion) is
-        the lossless repair, after which committed state and
-        ``read()`` agree again.  Returns True when anything was
-        adopted.  Metadata-only except for the one counting scan, and
-        only ever taken on a crash-recovery path.
-
-        Concurrency (ADVICE r11): a directory listing cannot
-        distinguish a crashed append's residue from a CONCURRENT
-        in-flight append whose parquet job has committed but whose
-        manifest has not yet landed.  The adopt commit therefore
-        carries ``expected_version`` from a read taken BEFORE the
-        orphan listing: if any commit lands in between, this adopt
-        aborts (``ConcurrentWriteError``) and re-evaluates orphans
-        against the new manifest instead of silently folding the
-        other writer's mid-flight files into its own count.  The
-        residual window — our adopt commits first, the in-flight
-        writer's manifest lands after — is closed only by the
-        per-table single-writer contract the ingest paths already
-        honor (one ``ingest_batch`` caller per corpus store)."""
-        for _ in range(attempts):
-            expected = self.current_version(name)
-            self._refuse_adopt_if_merge_inflight(name, expected)
-            orphans = self.uncommitted_files(name)
-            if not orphans:
-                return False
-            n = self.read(name).count()
-            # sidecar BEFORE commit (append's convention) on purpose:
-            # a crash in between leaves the sidecar equal to what
-            # read() serves (orphans are real rows) and the missing
-            # adopt manifest is retried on the next recovery pass;
-            # the reverse order would leave a committed manifest with
-            # a stale-low sidecar that count() then serves forever.
-            self._save_count(name, n)
-            try:
-                self._commit(
-                    name, "adopt", n, new_lineage=False,
-                    expected_version=expected,
-                )
-            except ConcurrentWriteError:
-                # the freshly scanned count may include the concurrent
-                # writer's mid-flight rows — drop the sidecar so
-                # count() re-derives instead of serving the skew
-                try:
-                    os.remove(self._meta_path(name))
-                except OSError:
-                    pass
-                continue
-            return True
-        raise ConcurrentWriteError(
-            f"{name}: adopt_uncommitted lost the commit race "
-            f"{attempts} times — a concurrent writer is active; "
-            "adoption requires the single-writer contract"
         )
 
-    def _merge_marker_path(self, name: str) -> str:
-        return os.path.join(self.path(name), "._merge_inflight")
-
-    def _clear_merge_marker(self, name: str) -> None:
-        try:
-            os.remove(self._merge_marker_path(name))
-        except OSError:
-            pass
-
-    def _refuse_adopt_if_merge_inflight(
-        self, name: str, current: int
-    ) -> None:
-        """ADVICE r14: residue of a file-granular merge that crashed
-        between its first staged-file move and its commit looks exactly
-        like append residue (all committed files present + extras), but
-        the extras DUPLICATE matched rows — adoption would commit both
-        copies.  The ``._merge_inflight`` marker discriminates: if it
-        names the still-current version, the merge never committed and
-        adopt must refuse (``discard_uncommitted`` is the right
-        repair); if the version has advanced, the merge committed and
-        only the marker removal was lost — clear it and proceed."""
-        marker = self._merge_marker_path(name)
-        if not os.path.exists(marker):
-            return
-        try:
-            with open(marker) as mf:
-                mv = json.load(mf).get("version")
-        except (OSError, ValueError):
-            mv = None
-        if mv is not None and current > mv:
-            try:
-                os.remove(marker)
-            except OSError:
-                pass
-            return
-        raise RuntimeError(
-            f"{name}: a file-granular merge is in flight or crashed "
-            f"mid-publish (marker at v{mv}) — its residue duplicates "
-            "matched rows, so adoption would corrupt the table; run "
-            "discard_uncommitted to roll the merge back instead"
-        )
-
-    def discard_uncommitted(self, name: str) -> int:
-        """Inverse of :meth:`adopt_uncommitted`, for REPLAYED writers:
-        delete manifest-less data files so a re-delivered batch can
-        re-append without duplicating the crashed attempt's rows.
-
-        Adoption is the lossless repair when the lost batch is gone
-        for good; deletion is the lossless repair when the SOURCE
-        re-delivers it (checkpointed streaming replay) — adopting
-        there would double the rows the replay is about to write.
-        Only call under the single-writer replay contract (the
-        streaming corpus ingest): a concurrent writer's mid-flight
-        files are indistinguishable from crash residue.  Also resets
-        the count sidecar to committed truth (a crash between
-        ``_save_count`` and ``_commit`` leaves it inflated).  Returns
-        the number of files removed.
-
-        A table with data files but NO committed manifest is removed
-        WHOLE (directory + meta sidecar), restoring ``exists() ==
-        False``: under the replay contract it is entirely the residue
-        of a crashed first append, and deleting only its files would
-        leave an empty directory that ``exists()`` reports but
-        ``read()`` cannot infer a schema from — a permanent replay
-        crash loop (r13 review).  Corollary of the contract: never
-        point this at a pre-manifest LEGACY table — its files look
-        exactly like first-append residue.
-
-        Crashed-_replace window (r13 ADVICE): append residue is
-        strictly ADDITIVE to the committed file set, but a ``_replace``
-        that crashed between promoting its staging dir and committing
-        its manifest leaves the live dir holding an entirely NEW
-        lineage while the latest manifest still names the OLD one
-        (whose files were archived during the swap).  Treating that as
-        residue would delete every live file and leave an unreadable
-        empty dir behind a stale manifest.  The discriminator is
-        committed files MISSING from the live dir — impossible for
-        append residue — and the repair is a rollback, not deletion:
-        park the uncommitted promoted lineage as a vacuum-expirable
-        orphan and restore the committed lineage from the archive."""
-        self._heal(name)
-        if not self.exists(name):
-            return 0
-        latest = self._latest_manifest(name)
-        if latest is None:
-            files = self._list_data_files(self.path(name))
-            shutil.rmtree(self.path(name))
-            try:
-                os.remove(self._meta_path(name))
-            except OSError:
-                pass
-            self.spark.catalog.refreshByPath(self.path(name))
-            return len(files)
-        committed = set(latest["files"])
-        final = self.path(name)
-        live = self._list_data_files(final)
-        missing = committed - set(live)
-        fdir = os.path.join(
-            self._versions_dir(name), f'{latest["lineage"]}.files'
-        )
-        if missing and all(
-            os.path.exists(os.path.join(fdir, f)) for f in missing
+    def _head(self, name: str) -> dict | None:
+        """Latest commit, or None.  The cached head is probed forward
+        one ``stat`` per newer version, so other writers' commits stay
+        visible; a cold store (or a vanished cached head) lists the
+        log directory once."""
+        head = self._heads.get(name)
+        if head is None or not os.path.exists(
+            self._commit_path(name, head["version"])
         ):
-            # crashed file-granular merge: the replaced originals were
-            # moved to the per-file archive but the manifest commit
-            # never landed.  Restore them, then let the additive loop
-            # below delete the staged-in replacement files — the exact
-            # inverse of _publish_partial's two move steps.
-            for f in sorted(missing):
-                os.rename(os.path.join(fdir, f), os.path.join(final, f))
-            live = self._list_data_files(final)
-            missing = set()
-            # the crash may have landed after the merge's _save_count:
-            # reset to committed truth even if no additive residue
-            # remains to delete below
-            self._save_count(name, latest["row_count"])
-            self.spark.catalog.refreshByPath(final)
-        if missing:
-            archived = os.path.join(
-                self._versions_dir(name), str(latest["lineage"])
-            )
-            if not os.path.isdir(archived) or any(
-                not os.path.exists(os.path.join(archived, f))
-                for f in committed
-            ):
-                raise RuntimeError(
-                    f"{name}: committed files are missing from the live "
-                    "dir and the committed lineage "
-                    f"{latest['lineage']} is not intact in the archive "
-                    "— refusing to discard (would destroy the only "
-                    "copy of uncommitted data without restoring a "
-                    "readable table)"
-                )
-            vdir = self._versions_dir(name)
-            orphan = os.path.join(
-                vdir, f"replay-orphan-{uuid.uuid4().hex[:6]}"
-            )
-            os.rename(final, orphan)
-            os.rename(archived, final)
-            self._save_count(name, latest["row_count"])
-            self.spark.catalog.refreshByPath(final)
-            self._clear_merge_marker(name)
-            return len(live)
-        removed = 0
-        for f in live:
-            if f not in committed:
-                os.remove(os.path.join(final, f))
-                removed += 1
-        if removed:
-            self._save_count(name, latest["row_count"])
-            self.spark.catalog.refreshByPath(final)
-        # repair complete (both merge residue classes are handled
-        # above): a surviving in-flight marker is now stale
-        self._clear_merge_marker(name)
-        return removed
+            versions = self._log_versions(name)
+            if not versions:
+                self._heads.pop(name, None)
+                return None
+            head = self._load(name, versions[-1])
+        v = head["version"]
+        while os.path.exists(self._commit_path(name, v + 1)):
+            v += 1
+        if v != head["version"]:
+            head = self._load(name, v)
+        self._heads[name] = head
+        return head
+
+    def snapshot(self, name: str) -> dict | None:
+        """The head commit (None for a table with no commits), after
+        rolling forward an apply that a crash cut short: the head
+        names its stage dir, and a stage that still exists means the
+        apply has not finished."""
+        head = self._head(name)
+        if (
+            head is not None
+            and head["stage"]
+            and os.path.isdir(os.path.join(self.root, head["stage"]))
+        ):
+            self._apply(name, head)
+        return head
 
     @staticmethod
-    def _txn_sidecars(table_dir: str) -> dict[str, int]:
-        """Latest txn version per app_id from ``_txn-*`` sidecar files
-        in ``table_dir`` (underscore prefix: invisible to Spark/Hadoop
-        parquet listings and to ``_list_data_files``)."""
-        out: dict[str, int] = {}
-        if not os.path.isdir(table_dir):
-            return out
-        for f in os.listdir(table_dir):
-            if not f.startswith("_txn-"):
-                continue
-            app, _, ver = f[len("_txn-"):].rpartition("-")
-            if app and ver.isdigit():
-                out[app] = max(out.get(app, -1), int(ver))
-        return out
+    def _schema(commit: dict) -> T.StructType:
+        return T.StructType.fromJson(commit["schema"])
+
+    def exists(self, name: str) -> bool:
+        return self._head(name) is not None
+
+    def current_version(self, name: str) -> int:
+        """Latest committed version (0 for a table with no commits)."""
+        head = self._head(name)
+        return head["version"] if head else 0
+
+    def count(self, name: str) -> int:
+        """Row count of the head snapshot (its files' footer counts)."""
+        head = self._head(name)
+        return head["row_count"] if head else 0
 
     def last_txn_version(self, name: str, app_id: str) -> int | None:
         """Delta ``SetTransaction`` read side: the highest transaction
-        version an idempotent writer (``app_id``) has committed to this
-        table, or None.  Ground truth is the ``_txn-`` sidecar set in
-        the LIVE directory — published by the same atomic ``os.rename``
-        as the data it travelled with, so a crash between the swap and
-        the manifest write cannot lose it — cross-checked against the
-        manifests' mirrored ``txn`` records."""
-        best = self._txn_sidecars(self.path(name)).get(app_id)
-        # txn APPENDS publish the sidecar after the manifest commit, so
-        # a crash in between leaves the sidecar one behind.  The
-        # mirrored manifest records close that window: walk the log
-        # NEWEST-FIRST and stop at the first manifest carrying this
-        # app's txn record — an app's txn versions commit in increasing
-        # order, so the newest manifest that carries the app is its
-        # maximum.  Stopping at the latest manifest alone is NOT enough
-        # (r13 ADVICE): any non-txn commit (adopt / compaction /
-        # offline rebuild) landing between the sidecar-less txn append
-        # and the replay hides the record one manifest down and the
-        # under-reported marker double-appends the batch.  Cost stays
-        # bounded in the steady state — the scan walks only commits
-        # SINCE the app's newest txn commit (O(1) for a live stream,
-        # not the O(versions)-per-batch full-log scan r7 flagged) —
-        # and the sidecar floor keeps the answer right even when the
-        # log was vacuumed past the app's last mirrored record.
-        newest_mirrored: int | None = None
-        log = self._log_dir(name)
-        if os.path.isdir(log):
-            vers = sorted(
-                (
-                    int(f[:-5])
-                    for f in os.listdir(log)
-                    if f.endswith(".json") and f[:-5].isdigit()
-                ),
-                reverse=True,
-            )
-            for v in vers:
-                t = self._load_manifest(name, v).get("txn")
-                if t and t.get("app_id") == app_id:
-                    newest_mirrored = int(t["version"])
-                    break
-        if best is None and newest_mirrored is None:
-            return None
-        if newest_mirrored is not None and (
-            best is None or newest_mirrored > best
-        ):
-            # self-repair the crashed append's missing sidecar (touch a
-            # marker file, same publication the append itself would
-            # have made) so the reconciled answer is durable even after
-            # the mirrored manifest is vacuumed away
-            try:
-                open(
-                    os.path.join(
-                        self.path(name),
-                        f"_txn-{app_id}-{newest_mirrored}",
-                    ),
-                    "w",
-                ).close()
-            except OSError:
-                pass
-            return newest_mirrored
-        return best
+        version idempotent writer ``app_id`` has committed to this
+        table, or None.  The txn map travels in every snapshot, so the
+        marker is durable iff the write it came with is."""
+        head = self._head(name)
+        return head["txns"].get(app_id) if head else None
+
+    def read(self, name: str) -> DataFrame:
+        """The live table, read with the log's schema (no footer
+        inference)."""
+        head = self.snapshot(name)
+        if head is None:
+            return self.spark.read.parquet(self.path(name))  # no such table
+        return self.spark.read.schema(self._schema(head)).parquet(
+            self.path(name)
+        )
 
     def versions(self, name: str) -> list[dict]:
-        """Commit history, oldest first: version / op / row_count."""
-        log = self._log_dir(name)
-        if not os.path.isdir(log):
-            return []
+        """Commit history, oldest first (Delta's ``DESCRIBE
+        HISTORY``): per retained commit its ``version``, ``op``,
+        ``row_count``, ``files_added``, ``files_removed``,
+        ``duration_s`` (from the start of its data write to its claim)
+        and ``txn``."""
         out = []
-        for f in sorted(os.listdir(log)):
-            if f.endswith(".json") and f[:-5].isdigit():
-                m = self._load_manifest(name, int(f[:-5]))
-                out.append(
-                    {k: m[k] for k in ("version", "op", "row_count")}
-                )
+        for v in self._log_versions(name):
+            c = self._load(name, v)
+            out.append({
+                "version": v,
+                "op": c["op"],
+                "row_count": c["row_count"],
+                "files_added": len(c["add"]),
+                "files_removed": len(c["remove"]),
+                "duration_s": c["duration_s"],
+                "txn": c["txn"],
+            })
         return out
 
     def read_version(self, name: str, version: int) -> DataFrame:
-        """Time travel: the table exactly as of commit ``version``.
-
-        Resolution: a version whose lineage is still live reads its
-        file list from the live dir; an archived lineage reads from
-        ``<table>.__v__/<lineage>``.  If the listed files are missing
-        from the live dir (crash window between swap renames, or the
-        lineage was archived moments ago) the archive is tried — so
-        any retained version is readable at every crash point.  A
-        file-granular merge spreads a version's files across the live
-        dir and ``<lineage>.files`` (the per-file archive of replaced
-        originals), so resolution falls back to PER-FILE search across
-        all three bases; flat layouts only (merges refuse partitioned
-        tables, whose ``col=value`` paths would need one basePath)."""
-        m = self._load_manifest(name, version)
-        latest = self._latest_manifest(name)
-        base = self.path(name)
-        archived = os.path.join(self._versions_dir(name), str(m["lineage"]))
-        if not m["files"]:
-            return self.read(name).limit(0)
-        if m["lineage"] == latest["lineage"] and all(
-            os.path.exists(os.path.join(base, f)) for f in m["files"]
-        ):
-            pass  # fully live
-        elif all(
-            os.path.exists(os.path.join(archived, f)) for f in m["files"]
-        ):
-            base = archived
+        """Time travel: the table exactly as of commit ``version``,
+        with that version's schema.  A file still in the head is read
+        from the live dir, any other from ``__v__``."""
+        head = self.snapshot(name)
+        if head is not None and head["version"] == version:
+            commit = head
         else:
-            # the live dir belongs to the LATEST lineage: include it in
-            # the per-file search only when the requested version shares
-            # that lineage, so a new-lineage live file can never shadow
-            # an archived old-lineage file of the same name (ADVICE r14)
-            if m["lineage"] == latest["lineage"]:
-                bases = (base, archived, f"{archived}.files")
-            else:
-                bases = (archived, f"{archived}.files")
-            paths = []
-            for f in m["files"]:
-                for b in bases:
-                    p = os.path.join(b, f)
-                    if os.path.exists(p):
-                        paths.append(p)
-                        break
-                else:
-                    raise FileNotFoundError(
-                        f"{name} v{version}: file {f} is in no retained "
-                        "location (live, archive, or per-file archive) — "
-                        "the version has been vacuumed"
-                    )
-            if any(os.sep in f for f in m["files"]):
-                raise ValueError(
-                    f"{name} v{version}: partitioned layout cannot be "
-                    "resolved across mixed bases"
-                )
-            return self.spark.read.parquet(*paths)
-        paths = [os.path.join(base, f) for f in m["files"]]
-        return self.spark.read.option("basePath", base).parquet(*paths)
+            commit = self._load(name, version)
+        schema = self._schema(commit)
+        live = head["files"] if head else {}
+        groups: dict[str, list[str]] = {}
+        for f in commit["files"]:
+            base = self.path(name) if f in live else self._versions_dir(name)
+            groups.setdefault(base, []).append(os.path.join(base, f))
+        if not groups:
+            return self.spark.createDataFrame([], schema)
+        return reduce(DataFrame.unionByName, [
+            self.spark.read.schema(schema).option("basePath", base).parquet(*paths)
+            for base, paths in groups.items()
+        ])
 
     def read_changes(
         self, name: str, v_from: int, v_to: int, keys: list[str]
@@ -904,19 +453,9 @@ class TableStore:
         literal-scale bookkeeping rows (job_control) whose parallelized
         frames defeat the ``isLocal()`` fast path (r15).
 
-        ``txn=(app_id, version)``: idempotent-writer marker for append
-        sinks (the streaming corpus ingest).  Unlike ``_replace`` the
-        append has no atomic swap to travel with, so the marker is the
-        MANIFEST's mirrored ``txn`` record (one atomic ``os.link``
-        commit — marker present iff the append committed) and the
-        ``_txn-`` sidecar is published best-effort AFTER the commit;
-        ``last_txn_version`` cross-checks the mirrored records
-        newest-first (and self-repairs the sidecar) so the
-        sidecar-missing crash window cannot under-report, even when
-        later non-txn commits land before the replay (r13 ADVICE).  A replayed
-        writer must clear crashed-append residue first
-        (``discard_uncommitted``) — marker absence says the append
-        didn't COMMIT, not that no files landed.
+        ``txn=(app_id, version)``: idempotent-writer marker, recorded
+        in the same commit as the appended files (marker present iff
+        the append committed).
 
         Schema handling (Delta ``mergeSchema`` parity): a batch whose
         columns differ from the table is REFUSED unless
@@ -926,13 +465,11 @@ class TableStore:
         exists to prevent.  With evolution on: a batch MISSING table
         columns is aligned with typed nulls and appended normally
         (O(batch)); a batch carrying NEW columns rewrites the table
-        once under the widened schema (Delta would only commit new
-        footers — without ``_delta_log`` a uniform-schema directory is
-        what keeps every later read exact)."""
-        self._heal(name)
-        existed = self.exists(name)
-        if existed:
-            target_schema = self.read(name).schema
+        once under the widened schema (a uniform-schema directory is
+        what keeps the live dir readable by any parquet reader)."""
+        head = self.snapshot(name)
+        if head is not None:
+            target_schema = self._schema(head)
             tcols = {f.name for f in target_schema.fields}
             dcols = set(df.columns)
             if tcols != dcols:
@@ -944,12 +481,11 @@ class TableStore:
                     )
                 if dcols - tcols:
                     # new columns: one-time rewrite under the union schema
-                    before = self.count(name)
                     widened = self.read(name).unionByName(
                         df, allowMissingColumns=True
                     )
-                    after = self._replace(name, widened)
-                    return after - before
+                    after = self._replace(name, widened, txn=txn)
+                    return after - head["row_count"]
                 # batch only MISSING columns: align with typed nulls,
                 # stay on the cheap append path
                 for f in target_schema.fields:
@@ -958,47 +494,10 @@ class TableStore:
                             f.name, F.lit(None).cast(f.dataType)
                         )
                 df = df.select(*[f.name for f in target_schema.fields])
-        before = self.count(name) if existed else 0
-        rows = self._write_counted(
-            self._optimize_write(df) if size_files else df,
-            self.path(name), "append",
+        out = self._optimize_write(df) if size_files else df
+        return self._rows_added(
+            self._publish(name, "append", self._stage(name, out), txn=txn)
         )
-        self._save_count(name, before + rows)
-        self._commit(
-            name, "append", before + rows, new_lineage=not existed, txn=txn
-        )
-        if txn is not None:
-            self._txn_sidecar_fastpath(name, txn)
-        if not existed:
-            self._register(name)
-        else:
-            self.spark.catalog.refreshByPath(self.path(name))
-        return rows
-
-    def _txn_sidecar_fastpath(self, name: str, txn: tuple[str, int]) -> None:
-        """Best-effort fast-path ``_txn-`` sidecar for IN-PLACE commit
-        paths (append, file-granular merge) — the manifest's mirrored
-        ``txn`` record is the durable marker; this sidecar only spares
-        ``last_txn_version`` the manifest walk.  Prunes this app's
-        older sidecars in the same step: versions are monotonic per
-        app, so only the newest matters, and one file per batch per
-        table would otherwise grow the directory listing forever (r13
-        review; ``_replace`` compacts the same way)."""
-        app, ver = txn[0], int(txn[1])
-        open(
-            os.path.join(self.path(name), f"_txn-{app}-{ver}"), "w"
-        ).close()
-        prefix = f"_txn-{app}-"
-        for f in os.listdir(self.path(name)):
-            if (
-                f.startswith(prefix)
-                and f[len(prefix):].isdigit()
-                and int(f[len(prefix):]) < ver
-            ):
-                try:
-                    os.remove(os.path.join(self.path(name), f))
-                except OSError:
-                    pass
 
     @staticmethod
     def _optimize_write(df: DataFrame) -> DataFrame:
@@ -1032,28 +531,21 @@ class TableStore:
         coalesces to advisory-sized partitions, so a second shuffle
         would be pure overhead, locally and at 100 TB alike; same
         knob and sense as :meth:`append`, which defaults on)."""
-        return self._replace(name, df, optimize=size_files, txn=txn)
+        return self._replace(
+            name, self._optimize_write(df) if size_files else df, txn=txn
+        )
 
     # --------------------------------------- file-granular MERGE (pruning)
     #
     # Delta rewrites only the files a MERGE/DELETE/UPDATE actually
     # touches; the naive parquet fallback rewrites the whole table —
     # THE scale gap at 100 TB, where a 0.1% incremental batch must not
-    # cost a full-table write.  These helpers close it: per-file
-    # min/max key stats (parquet footers — Delta keeps the same stats
-    # in its commit log as `stats` on each AddFile) decide which live
-    # files can possibly contain a source key; only those are read and
+    # cost a full-table write.  These helpers close it: the per-file
+    # min/max key stats every snapshot carries decide which live files
+    # can possibly contain a source key; only those are read and
     # rewritten, untouched files stay in place byte-for-byte, and the
-    # replaced originals move to `<table>.__v__/<lineage>.files/` so
-    # every retained version stays time-travelable (read_version
-    # resolves per-file: live dir → whole-dir archive → .files).
-    #
-    # Crash story (same two residue classes discard_uncommitted already
-    # repairs): new files move in BEFORE originals move out, so a crash
-    # leaves either strictly-additive residue (deleted on replay) or
-    # committed-files-missing with every missing file sitting in
-    # `.files` (restored on replay); the manifest commit is the single
-    # atomic publish point, exactly like append.
+    # commit removes exactly the touched files (to ``__v__``, so every
+    # retained version stays time-travelable).
 
     @staticmethod
     def _upcast_to_target(source: DataFrame, target: DataFrame) -> DataFrame | None:
@@ -1085,125 +577,65 @@ class TableStore:
 
     def _file_key_stats(
         self, name: str, keys: list[str], source: DataFrame
-    ) -> tuple[list[dict], list[str], dict[str, int], list[str], list[str]] | None:
-        """Per-live-file pruning stats for a key-matched mutation.
+    ) -> tuple[list[dict], list[str], list[str]] | None:
+        """Per-file pruning stats for a key-matched mutation, from the
+        head snapshot.
 
-        Returns ``(boxes, unprunable, rows_by_file, files, prune_keys)`` —
-        ``boxes`` holds one dict per file with min/max per key column,
-        ``unprunable`` lists files whose stats cannot prove anything
-        (always rewritten), ``rows_by_file`` the exact footer row
-        counts (post-mutation count arithmetic without a scan).
-        Pruning uses the PRUNABLE SUBSET of the merge keys: a file can
-        contain a composite-key match only if every key column's value
-        is inside the file's box, so testing any subset of the keys
-        yields a superset of the truly-touched files — conservative
-        and correct.  A composite key like (transaction_id,
-        updated_at) therefore prunes on the string id even though the
-        timestamp column carries no stats (INT96).
+        Returns ``(boxes, unprunable, prune_keys)`` — ``boxes`` holds
+        one dict per file with min/max per key column, ``unprunable``
+        lists files whose stats cannot prove anything (always
+        rewritten).  Pruning uses the PRUNABLE SUBSET of the merge
+        keys: a file can contain a composite-key match only if every
+        key column's value is inside the file's box, so testing any
+        subset of the keys yields a superset of the truly-touched
+        files — conservative and correct.  A composite key like
+        (transaction_id, updated_at) therefore prunes on the string id
+        even though the timestamp column carries no stats (INT96).  A
+        file whose key is NULL on every row can match nothing and is
+        left out of both lists.
 
         Returns ``None`` when file-granular mutation is unsupported:
-        no committed manifest (pre-manifest legacy table), partitioned
-        ``col=value`` layout (key values live in paths, not footers;
-        a mixed-base read would also lose partition columns), NO key
-        of a prunable type, a source column whose type differs
-        from the target's (a partial rewrite must not produce
-        mixed-type files under one directory), or a table smaller than
-        ``prune_min_table_bytes`` — rewriting a few-MB dim table whole
-        costs less than the prune decision's jobs (measured +1.3-1.5 s
-        per mutation on the sf0.1 dim/rollup stages), so small tables
-        keep the plain path and the fast path engages where it can
-        actually win."""
-        if self._latest_manifest(name) is None:
-            return None
-        final = self.path(name)
-        files = self._list_data_files(final)
+        an empty table, a partitioned ``col=value`` layout (key values
+        live in paths, not footers), NO key of a prunable type, a
+        source column whose type differs from the target's (a partial
+        rewrite must not produce mixed-type files under one
+        directory), or a table smaller than ``prune_min_table_bytes``
+        — rewriting a few-MB dim table whole costs less than the prune
+        decision's jobs (measured +1.3-1.5 s per mutation on the sf0.1
+        dim/rollup stages), so small tables keep the plain path and
+        the fast path engages where it can actually win."""
+        head = self.snapshot(name)
+        files = head["files"] if head else {}
         if not files or any(os.sep in f for f in files):
             return None
-        total_bytes = 0
-        for f in files:
-            try:
-                total_bytes += os.path.getsize(os.path.join(final, f))
-            except OSError:
-                return None
-        if total_bytes < self.prune_min_table_bytes:
+        if sum(e["bytes"] for e in files.values()) < self.prune_min_table_bytes:
             return None
-        target_types = {f.name: f.dataType for f in self.read(name).schema.fields}
+        target_types = {f.name: f.dataType for f in self._schema(head).fields}
         prune_keys = [
             k for k in keys
             if isinstance(target_types.get(k), _PRUNABLE_KEY_TYPES)
         ]
         if not prune_keys:
             return None
-        src_types = {f.name: f.dataType for f in source.schema.fields}
-        for c, dt in src_types.items():
-            if c in target_types and target_types[c] != dt:
+        for f in source.schema.fields:
+            if f.name in target_types and target_types[f.name] != f.dataType:
                 return None
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            # PySpark does not hard-depend on pyarrow; without it the
-            # footer stats are unreadable, so degrade to the full
-            # rewrite like every other unsupported shape (ADVICE r14)
-            return None
         boxes: list[dict] = []
         unprunable: list[str] = []
-        rows_by_file: dict[str, int] = {}
-        for f in files:
-            try:
-                md = pq.ParquetFile(os.path.join(final, f)).metadata
-            except Exception:
-                return None
-            rows_by_file[f] = md.num_rows
-            if md.num_rows == 0:
-                continue  # no rows -> can never match; prunes away
-            paths = {
-                md.row_group(0).column(j).path_in_schema: j
-                for j in range(md.num_columns)
-            }
-            box: dict = {"__file__": f}
-            usable = True
-            all_null_key = False
-            for k in prune_keys:
-                j = paths.get(k)
-                if j is None:
-                    usable = False
-                    break
-                lo = hi = None
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    st = rg.column(j).statistics
-                    if st is None:
-                        usable = False
-                        break
-                    if st.has_min_max:
-                        try:
-                            mn, mx = st.min, st.max
-                        except Exception:
-                            usable = False
-                            break
-                        lo = mn if lo is None else min(lo, mn)
-                        hi = mx if hi is None else max(hi, mx)
-                    elif st.has_null_count and st.null_count == rg.num_rows:
-                        continue  # all-null row group: NULL = x is never true
-                    else:
-                        usable = False
-                        break
-                if not usable:
-                    break
-                if lo is None:
-                    # every row group all-null on this key: no source
-                    # key can match this file at all
-                    all_null_key = True
-                    break
-                box[f"__min_{k}"] = lo
-                box[f"__max_{k}"] = hi
-            if all_null_key:
-                continue
-            if usable:
-                boxes.append(box)
-            else:
+        for f, entry in files.items():
+            stats = entry["stats"]
+            if any(k in stats and stats[k] is None for k in prune_keys):
+                continue  # all-NULL key: NULL = x is never true
+            if not all(k in stats for k in prune_keys):
                 unprunable.append(f)
-        return boxes, unprunable, rows_by_file, files, prune_keys
+                continue
+            box: dict = {"__file__": f}
+            for k in prune_keys:
+                lo, hi = stats[k]
+                box[f"__min_{k}"] = _stat_value(lo, target_types[k])
+                box[f"__max_{k}"] = _stat_value(hi, target_types[k])
+            boxes.append(box)
+        return boxes, unprunable, prune_keys
 
     @staticmethod
     def _touched_files(
@@ -1244,65 +676,6 @@ class TableStore:
             }
         return touched
 
-    def _publish_partial(
-        self,
-        name: str,
-        stage: str,
-        replaced: set[str],
-        rows_after: int,
-        op: str,
-        txn: tuple[str, int] | None,
-        merge_stats: dict,
-    ) -> None:
-        """Publish a partial rewrite: staged replacement files move
-        INTO the live dir (crash here = strictly-additive residue —
-        ``discard_uncommitted`` deletes it), the replaced originals
-        move OUT to ``<lineage>.files`` (crash here = committed files
-        missing, every one recoverable from ``.files`` — the replay
-        sweep restores them), then ONE atomic manifest commit makes
-        the new state durable, exactly append's publish discipline.
-
-        A hidden ``._merge_inflight`` marker (ADVICE r14) brackets the
-        whole window: a crash between the first staged move and the
-        commit leaves residue that a directory listing cannot tell
-        apart from APPEND residue, and ``adopt_uncommitted`` folding
-        it in would commit both the original and replacement copies of
-        every matched row.  The marker (carrying the pre-mutation
-        version) makes adopt refuse; ``discard_uncommitted`` — which
-        knows both merge residue classes — clears it after repair."""
-        final = self.path(name)
-        manifest = self._latest_manifest(name)
-        lineage = manifest["lineage"]
-        marker = os.path.join(final, "._merge_inflight")
-        with open(marker, "w") as mf:
-            json.dump({"version": manifest["version"]}, mf)
-        for f in self._list_data_files(stage):
-            dst = os.path.join(final, f)
-            if os.path.exists(dst):  # paranoid: part names carry a job uuid
-                dst = os.path.join(final, f"m{uuid.uuid4().hex[:8]}-{f}")
-            os.rename(os.path.join(stage, f), dst)
-        shutil.rmtree(stage)
-        fdir = os.path.join(self._versions_dir(name), f"{lineage}.files")
-        os.makedirs(fdir, exist_ok=True)
-        for f in sorted(replaced):
-            os.rename(os.path.join(final, f), os.path.join(fdir, f))
-        self._save_count(name, rows_after)
-        self._commit(
-            name, op, rows_after, new_lineage=False, txn=txn, extra=merge_stats
-        )
-        try:
-            os.remove(marker)
-        except OSError:
-            pass  # post-commit: a stale marker is cleared lazily by
-            # adopt_uncommitted (version already advanced past it)
-        if txn is not None:
-            self._txn_sidecar_fastpath(name, txn)
-        self.spark.catalog.refreshByPath(final)
-        # unlike append, a partial rewrite REMOVES live files: the
-        # registered catalog table's cached listing must be rebuilt,
-        # not just invalidated (same drop-and-recreate as _replace)
-        self._register(name)
-
     def _pruned_mutation(
         self,
         name: str,
@@ -1333,7 +706,8 @@ class TableStore:
         stats = self._file_key_stats(name, keys, source)
         if stats is None:
             return None
-        boxes, unprunable, rows_by_file, files, prune_keys = stats
+        boxes, unprunable, prune_keys = stats
+        head = self._head(name)
         with owned_checkpoints():
             src_keys = (
                 source.select(*keys).distinct().transform(checkpoint)
@@ -1378,55 +752,29 @@ class TableStore:
                         touched |= self._touched_files(kp, cand, prune_keys)
                     else:
                         touched |= {b["__file__"] for b in cand}
-            merge_stats = {
-                "files_rewritten": len(touched),
-                "files_total": len(files),
-            }
-            before = self.count(name)
-            final = self.path(name)
+            before = head["row_count"]
             if not touched:
                 if insert_rows is None or n_src == 0:
                     # delete/update matching nothing, or an EMPTY source
                     # (n_src == 0 distinct keys proves zero rows): commit
                     # the no-op mutation for history fidelity, touch no
-                    # data file — appending a 0-row file would pollute the
-                    # directory with a schema-only fragment
-                    self._save_count(name, before)
-                    self._commit(
-                        name, op, before, new_lineage=False, txn=txn,
-                        extra=merge_stats,
-                    )
-                    if txn is not None:
-                        self._txn_sidecar_fastpath(name, txn)
+                    # data file
+                    self._publish(name, op, txn=txn)
                     return 0, 0, before
                 # insert-only merge: no live file can contain any source
                 # key, so MERGE degenerates to the O(batch) append
-                rows = self._write_counted(
-                    self._optimize_write(insert_rows), final, "append"
-                )
-                after = before + rows
-                self._save_count(name, after)
-                self._commit(
-                    name, op, after, new_lineage=False, txn=txn, extra=merge_stats
-                )
-                if txn is not None:
-                    self._txn_sidecar_fastpath(name, txn)
-                self.spark.catalog.refreshByPath(final)
-                return 0, rows, after
-            if len(touched) >= len(files):
+                stage = self._stage(name, self._optimize_write(insert_rows))
+                commit = self._publish(name, op, stage, txn=txn)
+                return 0, self._rows_added(commit), commit["row_count"]
+            if len(touched) >= len(head["files"]):
                 return None  # nothing pruned: the full path is strictly simpler
-            tdf = self.spark.read.parquet(
-                *[os.path.join(final, f) for f in sorted(touched)]
+            tdf = self.spark.read.schema(self._schema(head)).parquet(
+                *[os.path.join(self.path(name), f) for f in sorted(touched)]
             )
-            out = rewrite(tdf, src_keys)
-            stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
-            staged_rows = self._write_counted(out, stage, "overwrite")
-            rows_touched = sum(rows_by_file[f] for f in touched)
-            after = before - rows_touched + staged_rows
-            self._publish_partial(
-                name, stage, touched, after, op, txn, merge_stats
-            )
-            return rows_touched, staged_rows, after
+            stage = self._stage(name, rewrite(tdf, src_keys))
+            commit = self._publish(name, op, stage, touched, txn)
+            rows_touched = sum(head["files"][f]["rows"] for f in touched)
+            return rows_touched, self._rows_added(commit), commit["row_count"]
 
     def upsert(
         self,
@@ -1439,9 +787,9 @@ class TableStore:
     ) -> int:
         """S7/S8 MERGE upsert on ``keys``.  Source keys MUST be unique
         (guaranteed by W1/W2 dedup upstream, as in the reference).
-        Returns the table's post-merge row count (write-time observed;
-        ``inserted = after - before`` with ``before`` from the O(1)
-        meta count — no post-MERGE table re-scan).
+        Returns the table's post-merge row count (from the commit's
+        footer counts; ``inserted = after - before`` with ``before``
+        from the O(1) ``count`` — no post-MERGE table re-scan).
 
         ``require_unique_source=True`` reproduces Delta MERGE's
         multi-match error: if two source rows share a key, raise
@@ -1466,15 +814,7 @@ class TableStore:
                     f"{[dup[0][k] for k in keys]} (Delta multi-match semantics)"
                 )
         if not self.exists(name):
-            if txn is not None:
-                # route the create through the staged swap so the txn
-                # sidecar publishes atomically with the first data
-                return self._replace(name, source, txn=txn)
-            rows = self._write_counted(source, self.path(name), "overwrite")
-            self._save_count(name, rows)
-            self._commit(name, "create", rows, new_lineage=True)
-            self._register(name)
-            return rows
+            return self._replace(name, source, txn=txn)
         target = self.read(name)
         if set(target.columns) != set(source.columns):
             if not allow_schema_evolution:
@@ -1489,7 +829,7 @@ class TableStore:
                 raise ValueError(
                     f"MERGE into {name}: source lacks key columns {missing_keys}"
                 )
-        # file-granular fast path (Delta parity): when footer stats
+        # file-granular fast path (Delta parity): when file stats
         # prove some files cannot contain any source key, rewrite only
         # the files that can — and when NO file can, degrade to an
         # O(batch) append.  Falls back to the full rewrite on schema
@@ -1690,151 +1030,239 @@ class TableStore:
         COMMIT — history is append-only (the restore itself is
         time-travelable and undoable), exactly Delta's semantics.
         Returns the new version number."""
-        snap = self.read_version(name, version)
-        # materialize before _replace swaps the live dir out from under
-        # the snapshot's file listing (the TableStore lineage rule)
-        snap = snap.transform(checkpoint)
-        self._replace(name, snap)
+        self._replace(name, self.read_version(name, version))
         return self.current_version(name)
 
     def vacuum(self, retain_versions: int | None = None) -> list[str]:
         """Delta-VACUUM analog: remove orphaned artifacts under the
-        store root — staging dirs left by a crashed ``_replace`` (the
-        swap never ran) and ``<table>.__*__.json`` sidecars (meta row
-        counts, corpus counts-sync markers, any future sidecar kind)
-        whose table dir is gone.  Live tables are never touched:
-        staging dirs are only ever *renamed into place* on success, so
-        any ``.__stage__`` dir that still exists is by definition
-        abandoned.
+        store root — stage dirs of writes that never claimed a version
+        (a claimed commit is rolled forward first, which consumes its
+        stage) and ``<table>.__<kind>__.json`` sidecars (the corpus
+        counts-sync marker, any future kind) whose table dir is gone.
 
         ``retain_versions=k`` additionally expires history: for every
-        table, manifests older than the newest ``k`` are dropped and
-        archived lineage dirs no retained manifest references are
-        deleted (Delta's ``VACUUM ... RETAIN`` semantics — time travel
-        keeps working for every retained version).  Returns the
-        removed paths."""
+        table, commits older than the newest ``k`` are dropped, and
+        ``__v__`` files no retained commit lists are deleted (Delta's
+        ``VACUUM ... RETAIN`` semantics — time travel keeps working for
+        every retained version).  Returns the removed paths."""
+        names = [
+            d[: -len(".__log__")].replace("__", ".", 1)
+            for d in sorted(os.listdir(self.root))
+            if d.endswith(".__log__")
+        ]
+        for name in names:
+            self.snapshot(name)
         removed: list[str] = []
         for entry in sorted(os.listdir(self.root)):
             full = os.path.join(self.root, entry)
+            sidecar = re.fullmatch(r"(.+)\.__\w+__\.json", entry)
             if ".__stage__" in entry and os.path.isdir(full):
                 shutil.rmtree(full)
                 removed.append(full)
-            else:
-                # any "<table>.__<kind>__.json" sidecar (meta row
-                # counts, corpus .__sync__.json, ...) orphaned by its
-                # table dir's removal (ADVICE r10: the sweep used to
-                # know only .__meta__.json and left .__sync__.json
-                # behind when a corpus store root was replaced)
-                m = re.fullmatch(r"(.+)\.__\w+__\.json", entry)
-                if (
-                    m
-                    and os.path.isfile(full)
-                    and not os.path.isdir(os.path.join(self.root, m.group(1)))
-                ):
-                    os.remove(full)
-                    removed.append(full)
-        if retain_versions is not None and retain_versions >= 1:
-            for entry in sorted(os.listdir(self.root)):
-                if not entry.endswith(".__log__"):
-                    continue
-                name = entry[: -len(".__log__")].replace("__", ".", 1)
-                history = self.versions(name)
-                kept = history[-retain_versions:]
-                kept_versions = {m["version"] for m in kept}
-                referenced: set[int] = set()
-                ref_files: dict[int, set[str]] = {}
-                for v in kept_versions:
-                    km = self._load_manifest(name, v)
-                    referenced.add(km["lineage"])
-                    ref_files.setdefault(km["lineage"], set()).update(
-                        km["files"]
-                    )
-                for m in history:
-                    if m["version"] not in kept_versions:
-                        p = self._manifest_path(name, m["version"])
+            elif (
+                sidecar
+                and os.path.isfile(full)
+                and not os.path.isdir(os.path.join(self.root, sidecar.group(1)))
+            ):
+                os.remove(full)
+                removed.append(full)
+        if retain_versions is None or retain_versions < 1:
+            return removed
+        for name in names:
+            history = self._log_versions(name)
+            referenced: set[str] = set()
+            for v in history[-retain_versions:]:
+                referenced.update(self._load(name, v)["files"])
+            for v in history[:-retain_versions]:
+                p = self._commit_path(name, v)
+                os.remove(p)
+                removed.append(p)
+            vdir = self._versions_dir(name)
+            for dirpath, _dirs, files in os.walk(vdir, topdown=False):
+                for f in files:
+                    p = os.path.join(dirpath, f)
+                    if os.path.relpath(p, vdir) not in referenced:
                         os.remove(p)
                         removed.append(p)
-                vdir = self._versions_dir(name)
-                if os.path.isdir(vdir):
-                    for d in sorted(os.listdir(vdir)):
-                        full = os.path.join(vdir, d)
-                        per_file = re.fullmatch(r"(\d+)\.files", d)
-                        if per_file:
-                            # per-file merge archive: expire exactly
-                            # the files no retained manifest of that
-                            # lineage references (Delta tombstone
-                            # expiry), drop the dir when empty
-                            want = ref_files.get(int(per_file.group(1)), set())
-                            for f in sorted(os.listdir(full)):
-                                if f not in want:
-                                    fp = os.path.join(full, f)
-                                    os.remove(fp)
-                                    removed.append(fp)
-                            if not os.listdir(full):
-                                os.rmdir(full)
-                                removed.append(full)
-                        elif not d.isdigit() or int(d) not in referenced:
-                            shutil.rmtree(full)
-                            removed.append(full)
+                if not os.listdir(dirpath):
+                    os.rmdir(dirpath)
         return removed
 
     # ---------------------------------------------------------------- internals
 
-    def _replace(
-        self, name: str, df: DataFrame, optimize: bool = False,
-        txn: tuple[str, int] | None = None,
-    ) -> int:
-        """Write-to-staging-then-swap: Spark cannot overwrite a parquet
-        dir it is currently reading, so materialize first.  Returns the
-        rows written (observed during the write).
+    def _stage(
+        self, name: str, df: DataFrame, partition_by: tuple[str, ...] = ()
+    ) -> tuple[str, T.StructType, float]:
+        """Write ``df`` to a fresh stage dir.  Returns ``(dir, schema,
+        started)``: the schema as Spark reads the files back (nullable,
+        partition columns last) and the write's start time."""
+        started = time.perf_counter()
+        stage = f"{self.path(name)}.__stage__{uuid.uuid4().hex[:8]}"
+        writer = df.write
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(stage)
+        fields = [f for f in df.schema.fields if f.name not in partition_by]
+        fields += [df.schema[c] for c in partition_by]
+        return stage, _nullable(T.StructType(fields)), started
 
-        ``txn=(app_id, version)`` is Delta's ``txnAppId/txnVersion``
-        idempotent-write contract: the transaction marker is written
-        INTO the staging dir as a ``_txn-`` sidecar before the swap, so
-        the single atomic ``os.rename`` publishes data and marker
-        together — there is no crash point at which the fold is applied
-        but the marker lost (Delta closes the same window by putting
-        ``SetTransaction`` in the same log entry as the file actions).
-        Existing sidecars from other writers are carried forward."""
-        self._heal(name)
-        final = self.path(name)
-        tmp = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
-        out = self._optimize_write(df) if optimize else df
-        rows = self._write_counted(out, tmp, "overwrite")
-        for app, ver in self._txn_sidecars(final).items():
-            if txn is None or app != txn[0]:
-                open(os.path.join(tmp, f"_txn-{app}-{ver}"), "w").close()
+    @staticmethod
+    def _entries(stage: str, schema: T.StructType) -> dict[str, dict]:
+        """Snapshot entries for a stage's data files — rows, bytes and
+        key min/max, each footer read once, here.  Zero-row files (an
+        empty write still emits one) are left out: they hold nothing a
+        read or a prune needs."""
+        out: dict[str, dict] = {}
+        for dirpath, _dirs, files in os.walk(stage):
+            for f in files:
+                if f.startswith(("_", ".")):
+                    continue
+                p = os.path.join(dirpath, f)
+                md = pq.read_metadata(p)
+                if md.num_rows:
+                    out[os.path.relpath(p, stage)] = {
+                        "rows": md.num_rows,
+                        "bytes": os.path.getsize(p),
+                        "stats": _footer_stats(md, schema),
+                    }
+        return out
+
+    def _publish(
+        self,
+        name: str,
+        op: str,
+        stage: tuple[str, T.StructType, float] | None = None,
+        remove=(),
+        txn: tuple[str, int] | None = None,
+    ) -> dict:
+        """The one write path: heal the head, describe the stage's
+        files (``_entries``), claim version head+1 for head − ``remove``
+        + those files (``_commit``), then apply it (``_apply``).
+        ``stage`` is a ``_stage`` result, or None for a commit that
+        moves no data.  Returns the commit."""
+        started = time.perf_counter()
+        head = self.snapshot(name)
+        adds, schema, stage_dir = {}, None, None
+        if stage is not None:
+            stage_dir, schema, started = stage
+            adds = self._entries(stage_dir, schema)
+            if head is not None and op != "replace":
+                # only a replace sets the table's schema; a partial
+                # rewrite's frame may list the columns in another order
+                schema = None
+        commit = self._commit(
+            name, op, adds, remove, txn, schema, stage_dir,
+            time.perf_counter() - started,
+        )
+        self._apply(name, commit)
+        if head is None or commit["remove"] or commit["schema"] != head["schema"]:
+            # new table, dropped files or a new schema: the catalog's
+            # cached listing and schema must be rebuilt, not refreshed
+            self._register(name)
+        return commit
+
+    def _commit(
+        self,
+        name: str,
+        op: str,
+        adds: dict[str, dict] | None = None,
+        remove=(),
+        txn: tuple[str, int] | None = None,
+        schema: T.StructType | None = None,
+        stage: str | None = None,
+        duration_s: float = 0.0,
+    ) -> dict:
+        """Claim version head+1 for the snapshot head − ``remove`` +
+        ``adds`` (Delta's commit protocol).  The claim is an
+        ``os.link`` of a fully written temp file, which — unlike
+        ``os.rename`` — fails if the slot exists: of two racing
+        writers exactly one wins and the loser gets
+        ``ConcurrentWriteError`` instead of clobbering the other's
+        commit.  The snapshot is built on the head, so any commit that
+        landed after the head was read makes the claim fail too."""
+        head = self._head(name)
+        files = dict(head["files"]) if head else {}
+        for f in remove:
+            if files.pop(f, None) is None:
+                raise ConcurrentWriteError(
+                    f"{name}: {f} is no longer in the head — a concurrent "
+                    "commit removed it"
+                )
+        adds = adds or {}
+        files.update(adds)
+        txns = dict(head["txns"]) if head else {}
         if txn is not None:
-            open(
-                os.path.join(tmp, f"_txn-{txn[0]}-{int(txn[1])}"), "w"
-            ).close()
-        latest = self._latest_manifest(name)
-        if os.path.isdir(final):
-            if latest is not None:
-                # archive the outgoing lineage for time travel; a
-                # crash after this rename is recovered by manifest
-                # resolution (read_version falls back to the archive)
-                vdir = self._versions_dir(name)
-                os.makedirs(vdir, exist_ok=True)
-                dest = os.path.join(vdir, str(latest["lineage"]))
-                if os.path.exists(dest):
-                    # lineage already archived (crash after promote,
-                    # before commit): the live dir holds uncommitted
-                    # data no manifest references — park it for vacuum
-                    dest = os.path.join(
-                        vdir,
-                        f'{latest["lineage"]}.orphan-{uuid.uuid4().hex[:6]}',
-                    )
-                os.rename(final, dest)
-            else:
-                # pre-manifest table (no history recorded): plain swap
-                shutil.rmtree(final)
-        os.rename(tmp, final)
-        self._save_count(name, rows)
-        self._commit(name, "replace", rows, new_lineage=True, txn=txn)
-        # Spark caches file listings per path; the swap invalidates them
-        self.spark.catalog.refreshByPath(final)
-        # re-register: the replace may have changed the schema, and the
-        # catalog snapshots the schema at table-creation time
-        self._register(name)
-        return rows
+            txns[txn[0]] = int(txn[1])
+        if schema is not None:
+            schema_json = schema.jsonValue()
+        else:
+            schema_json = head["schema"] if head else None
+        commit = {
+            "version": head["version"] + 1 if head else 1,
+            "op": op,
+            "row_count": sum(e["rows"] for e in files.values()),
+            "duration_s": round(duration_s, 3),
+            "txn": None if txn is None else {
+                "app_id": txn[0], "version": int(txn[1]),
+            },
+            "stage": os.path.basename(stage) if stage else None,
+            "add": sorted(adds),
+            "remove": sorted(remove),
+            "schema": schema_json,
+            "txns": txns,
+            "files": files,
+        }
+        log = self._log_dir(name)
+        os.makedirs(log, exist_ok=True)
+        tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex[:8]}")
+        with open(tmp, "w") as f:
+            # one C-encoder call: json.dump's chunked Python encoder is
+            # ~10x slower on a many-file snapshot
+            f.write(json.dumps(commit, separators=(",", ":")))
+        try:
+            os.link(tmp, self._commit_path(name, commit["version"]))
+        except FileExistsError:
+            raise ConcurrentWriteError(
+                f"{name}: version {commit['version']} was claimed by a "
+                "concurrent writer"
+            ) from None
+        finally:
+            os.unlink(tmp)
+        self._heads[name] = commit
+        return commit
+
+    def _apply(self, name: str, commit: dict) -> None:
+        """Make the live dir hold ``commit``'s files: move its adds in
+        from the stage and its removes out to ``__v__``, then drop the
+        stage.  Every move skips when already done, so an apply a
+        crash cut short is simply run again (``snapshot``)."""
+        live, vdir = self.path(name), self._versions_dir(name)
+        os.makedirs(live, exist_ok=True)
+        stage = commit["stage"] and os.path.join(self.root, commit["stage"])
+        for f in commit["add"]:
+            _move(os.path.join(stage, f), os.path.join(live, f))
+        for f in commit["remove"]:
+            _move(os.path.join(live, f), os.path.join(vdir, f))
+        if stage:
+            shutil.rmtree(stage, ignore_errors=True)
+        if commit["add"] or commit["remove"]:
+            # Spark caches file listings per path
+            self.spark.catalog.refreshByPath(live)
+
+    def _replace(
+        self, name: str, df: DataFrame, txn: tuple[str, int] | None = None,
+        partition_by: tuple[str, ...] = (),
+    ) -> int:
+        """Replace the table with ``df``: one commit removing every
+        head file and adding the staged output (Spark cannot overwrite
+        a parquet dir it is reading, so the stage is what makes a
+        self-derived rewrite possible).  Returns the rows written."""
+        stage = self._stage(name, df, partition_by)
+        head = self._head(name)
+        return self._publish(
+            name, "replace", stage, head["files"] if head else (), txn
+        )["row_count"]
+
+    @staticmethod
+    def _rows_added(commit: dict) -> int:
+        return sum(commit["files"][f]["rows"] for f in commit["add"])

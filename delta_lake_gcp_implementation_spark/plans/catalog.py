@@ -281,7 +281,7 @@ _SPECS: dict[str, QuerySpec] = {
             CQ.ingest_batch,
             PCORP._ensure_bucket_counts,
             PCORP._add_bucket_counts,
-            PCORP._save_counts_sync,
+            PCORP._write_counts_sync,
             ODED.char_shingles,
             ODED.minhash_signatures,
             ODED.minhash_band_incidence,

@@ -374,9 +374,9 @@ def run_streaming_agg_maintenance(
     offsets alone (at-least-once into foreachBatch) are not enough.
     The fold commits with ``txn=(app_id, batch_id)`` — Delta's
     ``txnAppId/txnVersion`` idempotent-write contract: the transaction
-    marker is published by the SAME atomic directory swap as the folded
-    data (see ``TableStore._replace``), so there is no crash point at
-    which the fold applied but the marker was lost, and a replayed
+    marker is recorded in the SAME commit as the folded data (see
+    ``TableStore._publish``), so there is no crash point at which the
+    fold applied but the marker was lost, and a replayed
     batch_id is skipped exactly once-semantics — the window the earlier
     marker-TABLE design left open between its two separate writes.
     Caveat (same as Delta's): batch_ids are monotonic per CHECKPOINT;

@@ -153,13 +153,14 @@ def test_crash_between_bands_append_and_counts_self_heals(spark, store):
     assert _counts_rows(store) == _recount_rows(store)  # healed
 
 
-def test_orphan_bands_files_adopted_and_healed(spark, store):
-    """ADVICE r10 (the narrower crash class): a crash BETWEEN the BANDS
-    parquet job commit and its manifest/meta writes leaves orphan data
-    files that ``read()`` sees but committed state does not — the old
-    count-keyed sidecar check passed right through that state.  The
-    version-keyed check plus ``adopt_uncommitted`` must detect it and
-    recount on the next ingest."""
+def test_orphan_bands_files_adopted_and_healed(spark, store, monkeypatch):
+    """ADVICE r10 (the narrower crash class): a BANDS append that dies
+    after its commit claim but before its files reach the live dir.
+    Its rows are committed — the next read rolls the apply forward —
+    while the counts bookkeeping never ran, so the version-keyed sync
+    check must notice and recount on the next ingest."""
+    from delta_lake_gcp_implementation_spark.pipeline import storage as S
+
     corpus.ingest_batch(store, _df(spark, [(1, A), (2, B)]))
     sigs = corpus._signatures(
         _df(spark, [(99, C)]), "doc_id", "text"
@@ -167,16 +168,18 @@ def test_orphan_bands_files_adopted_and_healed(spark, store):
     bands = dedup_ops.minhash_band_incidence(
         sigs, "doc_id", n_hashes=corpus.MH_N, band_size=corpus.MH_BAND
     )
-    # raw spark append: parquet files land, NO meta update, NO manifest
-    bands.write.mode("append").parquet(store.path(corpus.BANDS))
-    spark.catalog.refreshByPath(store.path(corpus.BANDS))
-    # the old check's exact blind spot: sidecar vs committed state
-    # still agree, yet read() diverges from the counts log
-    assert store.uncommitted_files(corpus.BANDS) != []
+
+    def crash(src, dst):
+        raise OSError("injected crash in the apply")
+
+    monkeypatch.setattr(S.os, "rename", crash)
+    with pytest.raises(OSError, match="injected"):
+        store.append(corpus.BANDS, bands)
+    monkeypatch.undo()
     assert _counts_rows(store) != _recount_rows(store)  # broken state
     corpus.ingest_batch(store, _df(spark, [(11, D)]))
-    assert store.uncommitted_files(corpus.BANDS) == []
     assert _counts_rows(store) == _recount_rows(store)  # healed
+    assert store.count(corpus.BANDS) == store.read(corpus.BANDS).count()
 
 
 def test_first_batch_skips_noop_compaction(spark, store):
@@ -187,7 +190,7 @@ def test_first_batch_skips_noop_compaction(spark, store):
     corpus.ingest_batch(store, _df(spark, [(1, A), (2, B), (3, C)]))
     assert store.count(corpus.COUNTS) > corpus._COUNTS_COMPACT_FACTOR
     assert store.current_version(corpus.COUNTS) == 1  # one commit only
-    sync = corpus._load_counts_sync(store)
+    sync = corpus._read_counts_sync(store)
     assert sync["base_rows"] == store.count(corpus.COUNTS)
     assert sync["appends"] == 0
 
@@ -206,7 +209,7 @@ def test_counts_log_compacts_on_append_count(spark, store, monkeypatch):
     )
     assert store.count(corpus.COUNTS) == distinct_buckets
     assert _counts_rows(store) == _recount_rows(store)
-    assert corpus._load_counts_sync(store)["appends"] == 0
+    assert corpus._read_counts_sync(store)["appends"] == 0
 
 
 def test_counts_log_appends_then_compacts(spark, store, monkeypatch):

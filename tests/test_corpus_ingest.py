@@ -4,6 +4,8 @@ offline index rebuild parity."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from delta_lake_gcp_implementation_spark.pipeline import corpus
@@ -355,26 +357,48 @@ def test_txn_replay_with_bands_committed_but_sigs_never(spark, tmp_path):
     assert _bucket_counts(store) == _bucket_counts(ref)
 
 
-def test_txn_replay_discards_uncommitted_residue(spark, tmp_path):
-    """Crash BETWEEN the parquet job and the manifest commit: the
-    orphan files must be DISCARDED on replay (the source re-delivers),
-    not adopted — adoption would double the rows the replay is about
-    to append."""
+def _fail_claims_of(monkeypatch, name):
+    """Make every commit claim (``os.link`` into the log) of table
+    ``name`` raise — a crash after its data write, before its
+    commit."""
+    from delta_lake_gcp_implementation_spark.pipeline import storage as S
+
+    real = S.os.link
+    log = name.replace(".", "__") + ".__log__"
+
+    def link(src, dst):
+        if log in dst:
+            raise OSError("injected crash at the claim")
+        return real(src, dst)
+
+    monkeypatch.setattr(S.os, "link", link)
+
+
+def _no_stages(store):
+    return not [d for d in os.listdir(store.root) if ".__stage__" in d]
+
+
+def test_txn_replay_discards_uncommitted_residue(spark, tmp_path, monkeypatch):
+    """Crash BETWEEN an index append's data write and its commit claim:
+    the written files sit in a stage dir no commit names, so the
+    replay neither sees nor adopts them — it re-appends once and lands
+    a clean-run state, and vacuum removes the dead stage."""
     b1 = [(1, A), (2, B)]
     b2 = [(13, D), (14, C)]
     store = TableStore(spark, str(tmp_path / "wh_txn_residue"))
     corpus.ingest_batch(store, _df(spark, b1), txn=("app", 0))
 
-    # simulate: batch 1's SIGS parquet job committed, manifest lost
-    sigs_path = store.path(corpus.SIGS)
-    corpus._signatures(
-        _df(spark, b2), "doc_id", "text"
-    ).write.mode("append").parquet(sigs_path)
-    assert store.uncommitted_files(corpus.SIGS)
+    _fail_claims_of(monkeypatch, corpus.SIGS)
+    with pytest.raises(OSError, match="injected"):
+        corpus.ingest_batch(store, _df(spark, b2), txn=("app", 1))
+    monkeypatch.undo()
+    assert not _no_stages(store)
+    assert (store.last_txn_version(corpus.SIGS, "app") or 0) == 0
 
     r = corpus.ingest_batch(store, _df(spark, b2), txn=("app", 1))
     assert r["accepted"] == 2
-    assert not store.uncommitted_files(corpus.SIGS)
+    assert any(".__stage__" in p for p in store.vacuum())
+    assert _no_stages(store)
 
     ref = _clean_reference(spark, tmp_path, [b1, b2])
     assert _tables_snapshot(store) == _tables_snapshot(ref)
@@ -403,20 +427,21 @@ def test_txn_fully_applied_batch_skips_in_o1(spark, tmp_path):
     }
 
 
-def test_txn_first_batch_residue_is_removed_whole(spark, tmp_path):
-    """Crash during the FIRST-ever batch between an index table's
-    parquet job and its first manifest: the table has data files but
-    no committed manifest.  The replay must remove it WHOLE (restoring
-    exists() == False) — deleting only the files would leave an empty
-    directory that read()/append() cannot infer a schema from, a
-    permanent replay crash loop (r13 review)."""
+def test_txn_first_batch_residue_is_removed_whole(
+    spark, tmp_path, monkeypatch
+):
+    """Crash during the FIRST-ever batch between an index table's data
+    write and its first commit claim: the table must not exist
+    afterwards (no half-created table that a replay could not append
+    to — r13 review), and the replay lands a clean-run state."""
     b1 = [(1, A), (2, B)]
     store = TableStore(spark, str(tmp_path / "wh_txn_first"))
-    # simulate: batch 0's SIGS parquet job committed, no manifest ever
-    corpus._signatures(_df(spark, b1), "doc_id", "text").write.parquet(
-        store.path(corpus.SIGS)
-    )
-    assert store.exists(corpus.SIGS)
+    _fail_claims_of(monkeypatch, corpus.SIGS)
+    with pytest.raises(OSError, match="injected"):
+        corpus.ingest_batch(store, _df(spark, b1), txn=("app", 0))
+    monkeypatch.undo()
+    assert not store.exists(corpus.SIGS)
+    assert not store.exists(corpus.DOCS)
 
     r = corpus.ingest_batch(store, _df(spark, b1), txn=("app", 0))
     assert r["accepted"] == 2

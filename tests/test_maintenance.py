@@ -67,6 +67,30 @@ def test_file_count_walks_partitioned_layout(spark, store, sf_dir):
     assert mt.file_count(store, "t.ev_fc") > 0
 
 
+def test_write_partitioned_commits_through_the_log(spark, store):
+    """write_partitioned is an ordinary replace commit: the version
+    bumps, history and count agree with a scan, and the replaced
+    version stays readable (it used to delete v1's files behind the
+    log's back, so versions() kept reporting 30 rows for a 20-row
+    table and read_version(1) raised FileNotFoundError)."""
+    import datetime
+
+    rows = [
+        (i, datetime.date(2024, 1, 1 + i % 3), f"r{i}") for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "id bigint, d date, s string")
+    store.overwrite("t.wp", df)
+    v1 = store.current_version("t.wp")
+    mt.write_partitioned(store, "t.wp", df.filter(F.col("id") < 20), ["d"])
+    assert store.current_version("t.wp") == v1 + 1
+    scan = store.read("t.wp").count()
+    assert store.versions("t.wp")[-1]["row_count"] == 20
+    assert store.count("t.wp") == 20 == scan
+    assert store.read("t.wp").columns == ["id", "s", "d"]
+    old = store.read_version("t.wp", v1).collect()
+    assert sorted(tuple(r) for r in old) == sorted(rows)
+
+
 def test_update_matched_equals_isin_update(spark, store, sf_dir):
     """update_matched (broadcast key-table semi-join) must produce the
     same end state as update_where with a literal isin list."""
@@ -370,22 +394,17 @@ def test_bloom_index_keys_are_relative_paths_not_basenames(spark, tmp_path):
 
 
 def test_bloom_pruned_scan_empty_table_returns_empty_frame(spark, tmp_path):
-    """ADVICE r6: a table dir that exists but holds zero part files (an
-    empty-DataFrame overwrite can emit only _SUCCESS) returns an empty
-    frame; FileNotFoundError is reserved for a missing root."""
-    import glob as _glob
-    import os as _os
-
+    """ADVICE r6: a table that exists but holds zero data files (an
+    empty-DataFrame overwrite: its lone zero-row part file never enters
+    the snapshot) returns an empty frame with the table's columns;
+    FileNotFoundError is reserved for a table that does not exist."""
     store = TableStore(spark, str(tmp_path))
     df = spark.range(5).selectExpr("id", "concat('k', id) as k")
-    store.overwrite("db.empt", df)
-    root = store.path("db.empt")
-    for f in _glob.glob(_os.path.join(root, "*.parquet")) + _glob.glob(
-        _os.path.join(root, ".*.crc")
-    ):
-        _os.remove(f)
+    store.overwrite("db.empt", df.filter("id < 0"))
+    assert store.exists("db.empt") and mt.file_count(store, "db.empt") == 0
     out, nread, ntot = mt.scan_bloom_pruned(store, "db.empt", "k", "k1", {})
     assert (nread, ntot) == (0, 0) and out.count() == 0
+    assert out.columns == ["id", "k"]
     import pytest as _pytest
 
     with _pytest.raises(FileNotFoundError):

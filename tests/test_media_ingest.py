@@ -4,6 +4,8 @@ streaming, including crash-resume."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -146,10 +148,15 @@ def test_media_stream_crash_between_feats_and_blobs_replays_clean(
         r.media_id for r in store.read(media.FEATS).select("media_id").collect()
     ]
     assert sorted(feat_ids) == [1, 2, 12]  # no duplicate feature rows
-    # committed bookkeeping agrees with readers
+    # committed bookkeeping agrees with readers, and each live dir
+    # holds exactly its snapshot's files
     assert store.count(media.BLOBS) == 3
-    assert store.uncommitted_files(media.BLOBS) == []
-    assert store.uncommitted_files(media.FEATS) == []
+    for t in (media.BLOBS, media.FEATS):
+        live = store.path(t)
+        assert {
+            f for f in os.listdir(live) if f.endswith(".parquet")
+        } == set(store.snapshot(t)["files"])
+        assert store.count(t) == store.read(t).count()
 
 
 def test_two_media_streams_have_distinct_marker_chains(spark, store, tmp_path):

@@ -13,10 +13,10 @@ observable contract:
   O(batch) append (zero files rewritten),
 - results are IDENTICAL to the full-rewrite path on randomized merges,
 - time travel, CDF, restore, and vacuum keep working across partial
-  rewrites (replaced originals live in ``<lineage>.files``),
-- both crash residue classes repair: strictly-additive staged-in files
-  are discarded, committed-files-missing restores from the per-file
-  archive,
+  rewrites (replaced originals move to ``__v__``),
+- a crash after the commit claim rolls forward to exactly the merge,
+  never to a table holding both the originals and their
+  replacements,
 - unsupported shapes (partitioned layout, unprunable key types,
   source-wider-than-target schemas) fall back to the full path with
   unchanged semantics.
@@ -67,6 +67,36 @@ def _live_parts(store, name):
     return sorted(glob.glob(os.path.join(store.path(name), "part-*")))
 
 
+def _last(store, name):
+    """The newest commit's history row (op, files added/removed, txn)."""
+    return store.versions(name)[-1]
+
+
+def _fail_first(monkeypatch, fn_name, when=lambda *a: True):
+    """Make the first ``os.<fn_name>`` call (``shutil.rmtree`` for
+    "rmtree") whose arguments satisfy ``when`` raise: ``link`` is the
+    commit claim, ``rename`` the apply's moves, ``rmtree`` its last
+    step."""
+    from delta_lake_gcp_implementation_spark.pipeline import storage as S
+
+    mod = S.shutil if fn_name == "rmtree" else S.os
+    real = getattr(mod, fn_name)
+    fired = []
+
+    def failing(*a, **k):
+        if not fired and when(*a):
+            fired.append(a)
+            raise OSError(f"injected crash at {fn_name}")
+        return real(*a, **k)
+
+    monkeypatch.setattr(mod, fn_name, failing)
+
+
+def _moving_out(src, dst):
+    """The apply's removes: live file -> ``__v__``."""
+    return ".__v__" in dst
+
+
 def test_partial_merge_rewrites_only_overlapping_files(spark, store):
     t = _clustered_table(spark, store)
     before = {f: os.stat(f).st_ino for f in _live_parts(store, t)}
@@ -81,9 +111,9 @@ def test_partial_merge_rewrites_only_overlapping_files(spark, store):
         )
     )
     after = store.upsert(t, src, ["k"])
-    m = store._latest_manifest(t)
+    m = _last(store, t)
     assert m["op"] == "merge"
-    assert m["files_rewritten"] == 1 and m["files_total"] == 4
+    assert m["files_removed"] == 1
     # the three non-overlapping files were not rewritten, not even
     # re-written-identically: same inode, same bytes
     survivors = [
@@ -108,8 +138,8 @@ def test_insert_only_merge_is_an_append(spark, store):
         F.lit("ins").alias("s"),
     )
     after = store.upsert(t, src, ["k"])
-    m = store._latest_manifest(t)
-    assert m["op"] == "merge" and m["files_rewritten"] == 0
+    m = _last(store, t)
+    assert m["op"] == "merge" and m["files_removed"] == 0
     assert after == 4020 == store.count(t)
     assert all(
         os.path.exists(f) and os.stat(f).st_ino == i for f, i in before.items()
@@ -126,7 +156,7 @@ def test_literal_typed_source_still_takes_fast_path(spark, store):
     )
     assert dict(src.dtypes)["v"] == "int"
     store.upsert(t, src, ["k"])
-    assert store._latest_manifest(t)["op"] == "merge"
+    assert _last(store, t)["op"] == "merge"
     assert dict(store.read(t).dtypes)["v"] == "bigint"
 
 
@@ -142,8 +172,7 @@ def test_source_wider_than_target_falls_back_to_full_rewrite(spark, store):
     )
     src = spark.createDataFrame([(2, 2**40)], "k int, v bigint")
     store.upsert("db.narrow", src, ["k"])
-    m = store._latest_manifest("db.narrow")
-    assert m["op"] == "replace"
+    assert _last(store, "db.narrow")["op"] == "replace"
     assert dict(store.read("db.narrow").dtypes)["v"] == "bigint"
     assert _rows(store.read("db.narrow")) == {(1, 1), (2, 2**40)}
 
@@ -162,8 +191,7 @@ def test_small_table_floor_takes_plain_path(spark, tmp_path):
         F.concat(F.lit("upd_"), F.col("id")).alias("s"),
     )
     s.upsert(t, src, ["k"])
-    m = s._latest_manifest(t)
-    assert m["op"] == "replace"  # under the floor: plain full rewrite
+    assert _last(s, t)["op"] == "replace"  # under the floor: plain full rewrite
     got = s.read(t)
     assert got.filter(F.col("v") == -1).count() == 50
     assert s.count(t) == 4000
@@ -175,8 +203,8 @@ def test_small_table_floor_takes_plain_path(spark, tmp_path):
         F.concat(F.lit("up2_"), F.col("id")).alias("s"),
     )
     s.upsert(t2, src2, ["k"])
-    m2 = s._latest_manifest(t2)
-    assert m2["op"] == "merge" and m2["files_rewritten"] < m2["files_total"]
+    m2 = _last(s, t2)
+    assert m2["op"] == "merge" and m2["files_removed"] < 4
     assert s.read(t2).filter(F.col("v") == -2).count() == 20
 
 
@@ -192,13 +220,13 @@ def test_pruned_merge_equals_full_merge(spark, store, monkeypatch):
         F.concat(F.lit("u_"), F.col("id")).alias("s"),
     )
     store.upsert(t, src, ["k"])
-    m = store._latest_manifest(t)
-    assert m["op"] == "merge" and 1 <= m["files_rewritten"] < m["files_total"]
+    m = _last(store, t)
+    assert m["op"] == "merge" and 1 <= m["files_removed"] < 4
     monkeypatch.setattr(
         TableStore, "_file_key_stats", lambda self, *a, **k: None
     )
     store.upsert(t_full, src, ["k"])
-    assert store._latest_manifest(t_full)["op"] == "replace"
+    assert _last(store, t_full)["op"] == "replace"
     assert _rows(store.read(t)) == _rows(store.read(t_full))
     assert store.count(t) == store.count(t_full)
 
@@ -215,8 +243,8 @@ def test_string_and_date_keys_prune(spark, store):
         [("c00100", datetime.date(2024, 1, 5), -5)], "ck string, d date, v bigint"
     )
     store.upsert("db.skeys", src, ["ck"])
-    m = store._latest_manifest("db.skeys")
-    assert m["op"] == "merge" and m["files_rewritten"] == 1
+    m = _last(store, "db.skeys")
+    assert m["op"] == "merge" and m["files_removed"] == 1
     got = store.read("db.skeys")
     assert got.count() == 2000
     assert got.filter(F.col("v") == -5).count() == 1
@@ -245,7 +273,7 @@ def test_time_travel_and_cdf_across_partial_merge(spark, store):
         F.lit("upd").alias("s"),
     )
     store.upsert(t, src, ["k"])  # v2, partial
-    assert store._latest_manifest(t)["files_rewritten"] == 1
+    assert _last(store, t)["files_removed"] == 1
     v1 = store.read_version(t, 1)
     assert v1.count() == 4000
     assert v1.filter(F.col("k") == 101).select("s").first()[0] == "name_101"
@@ -264,8 +292,8 @@ def test_pruned_delete_and_update(spark, store):
     deleted = store.delete_matched(
         t, spark.createDataFrame([(200,), (201,), (999999,)], "k bigint"), ["k"]
     )
-    m = store._latest_manifest(t)
-    assert deleted == 2 and m["op"] == "delete" and m["files_rewritten"] == 1
+    m = _last(store, t)
+    assert deleted == 2 and m["op"] == "delete" and m["files_removed"] == 1
     assert store.count(t) == 3998 == store.read(t).count()
     matched = store.update_matched(
         t,
@@ -273,8 +301,8 @@ def test_pruned_delete_and_update(spark, store):
         ["k"],
         {"v": F.lit(-9).cast("bigint")},
     )
-    m = store._latest_manifest(t)
-    assert matched == 1 and m["op"] == "update" and m["files_rewritten"] == 1
+    m = _last(store, t)
+    assert matched == 1 and m["op"] == "update" and m["files_removed"] == 1
     assert _rows(store.read(t).filter(F.col("v") == -9).select("k")) == {(300,)}
     assert store.count(t) == 3998
 
@@ -288,7 +316,7 @@ def test_no_match_delete_commits_without_touching_files(spark, store):
     )
     assert deleted == 0
     assert store.current_version(t) == v0 + 1  # history fidelity
-    assert store._latest_manifest(t)["files_rewritten"] == 0
+    assert _last(store, t)["files_removed"] == 0
     assert all(
         os.path.exists(f) and os.stat(f).st_ino == i for f, i in before.items()
     )
@@ -308,11 +336,12 @@ def test_no_match_delete_commits_without_touching_files(spark, store):
 def test_crashed_partial_merge_repairs_both_residue_classes(
     spark, store, monkeypatch
 ):
-    """Crash injection at the worst point of _publish_partial: new
-    files moved in AND originals moved out, manifest commit never
-    lands.  discard_uncommitted must restore the originals from the
-    per-file archive, delete the additive residue, and reset the count
-    sidecar; the replayed merge then lands clean."""
+    """Crash injection at the worst points of a partial merge.  At the
+    claim: the table is exactly its pre-merge self.  After the claim,
+    with the replacements moved in but the replaced original still in
+    the live dir: the next read rolls the apply forward to exactly the
+    merge (never both copies), and replaying the merge changes
+    nothing."""
     t = _clustered_table(spark, store)
     pre_rows = _rows(store.read(t))
     src = spark.range(100, 103).select(
@@ -320,27 +349,27 @@ def test_crashed_partial_merge_repairs_both_residue_classes(
         F.lit(-1).cast("bigint").alias("v"),
         F.lit("upd").alias("s"),
     )
-    real_commit = TableStore._commit
-
-    def boom(self, *a, **k):
-        raise RuntimeError("injected crash before manifest commit")
-
-    monkeypatch.setattr(TableStore, "_commit", boom)
-    with pytest.raises(RuntimeError, match="injected"):
+    _fail_first(monkeypatch, "link")
+    with pytest.raises(OSError, match="injected"):
         store.upsert(t, src, ["k"])
-    monkeypatch.setattr(TableStore, "_commit", real_commit)
-    # torn state: one committed file is in the archive, replacements
-    # are uncommitted residue in the live dir
-    latest = store._latest_manifest(t)
-    live = set(store._list_data_files(store.path(t)))
-    assert set(latest["files"]) - live, "crash must leave committed files missing"
-    store.discard_uncommitted(t)
+    monkeypatch.undo()
     assert _rows(store.read(t)) == pre_rows
     assert store.count(t) == 4000
-    # replay lands the merge for real
+    assert _last(store, t)["op"] == "replace"
+    _fail_first(monkeypatch, "rename", _moving_out)
+    with pytest.raises(OSError, match="injected"):
+        store.upsert(t, src, ["k"])
+    monkeypatch.undo()
+    got = store.read(t)
+    assert got.count() == 4000 == store.count(t)
+    assert got.select("k").distinct().count() == 4000
+    assert got.filter(F.col("v") == -1).count() == 3
+    assert _last(store, t)["op"] == "merge"
+    live = {os.path.basename(p) for p in _live_parts(store, t)}
+    assert live == set(store.snapshot(t)["files"])
+    # replay lands the same table
     after = store.upsert(t, src, ["k"])
     assert after == 4000
-    assert store._latest_manifest(t)["op"] == "merge"
     assert store.read(t).filter(F.col("v") == -1).count() == 3
 
 
@@ -352,22 +381,22 @@ def test_vacuum_expires_per_file_archives_exactly(spark, store):
     src2 = spark.range(1100, 1102).select(
         F.col("id").alias("k"), F.lit(-2).cast("bigint").alias("v"),
         F.lit("u2").alias("s"))
-    store.upsert(t, src1, ["k"])  # v2: archives file A
-    store.upsert(t, src2, ["k"])  # v3: archives file B
-    fdir = os.path.join(store._versions_dir(t), "1.files")
-    assert len(os.listdir(fdir)) == 2
-    # retain v2+v3: v1's replaced original (file A) is referenced by
-    # NO retained manifest... but file B IS referenced by v2
+    store.upsert(t, src1, ["k"])  # v2: moves file A to __v__
+    store.upsert(t, src2, ["k"])  # v3: moves file B to __v__
+    vdir = store._versions_dir(t)
+    assert len(os.listdir(vdir)) == 2
+    # retain v2+v3: v1's replaced original (file A) is listed by NO
+    # retained commit... but file B IS listed by v2
     store.vacuum(retain_versions=2)
-    remaining = os.listdir(fdir)
+    remaining = os.listdir(vdir)
     assert len(remaining) == 1, "exactly the unreferenced original expires"
-    # v2 (retained) still time-travels through the surviving archive
+    # v2 (retained) still time-travels through the surviving file
     assert store.read_version(t, 2).filter(F.col("v") == -1).count() == 2
     with pytest.raises(FileNotFoundError):
         store.read_version(t, 1)
     # retaining only the head expires the rest and drops the empty dir
     store.vacuum(retain_versions=1)
-    assert not os.path.isdir(fdir)
+    assert not os.path.isdir(vdir)
     assert store.read_version(t, 3).count() == 4000
 
 
@@ -382,7 +411,7 @@ def test_partitioned_layout_falls_back_to_full_path(spark, store):
     maintenance.write_partitioned(store, "db.parted", df, ["p"])
     src = spark.createDataFrame([(5, 2, "upd")], "k bigint, p bigint, s string")
     store.upsert("db.parted", src, ["k"])
-    assert store._latest_manifest("db.parted")["op"] == "replace"
+    assert _last(store, "db.parted")["op"] == "replace"
     got = store.read("db.parted")
     assert got.count() == 100
     assert got.filter(F.col("s") == "upd").count() == 1
@@ -404,8 +433,8 @@ def test_composite_key_prunes_on_prunable_subset(spark, store):
         "tid string, updated_at timestamp, v bigint",
     )
     store.upsert("db.composite", src, ["tid", "updated_at"])
-    m = store._latest_manifest("db.composite")
-    assert m["op"] == "merge" and m["files_rewritten"] == 1
+    m = _last(store, "db.composite")
+    assert m["op"] == "merge" and m["files_removed"] == 1
     got = store.read("db.composite")
     # composite semantics: (TXN_000100, ts) updated, (TXN_000100, 2025) inserted
     assert got.count() == 2001
@@ -415,23 +444,21 @@ def test_composite_key_prunes_on_prunable_subset(spark, store):
 
 
 def test_full_replace_after_partial_merges_keeps_history_readable(spark, store):
-    """A full _replace archives the outgoing live dir under the
-    lineage id while `<lineage>.files` already holds merge-replaced
-    originals — versions before, between, and after the merges must
-    resolve across all three bases (live, whole-dir archive, per-file
-    archive)."""
-    t = _clustered_table(spark, store)  # v1, lineage 1
+    """A full _replace moves every live file to ``__v__`` where the
+    merges' replaced originals already are — versions before, between,
+    and after the merges must resolve their files across both places."""
+    t = _clustered_table(spark, store)  # v1
     src1 = spark.range(100, 102).select(
         F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v"),
         F.lit("u1").alias("s"))
-    store.upsert(t, src1, ["k"])  # v2: partial, archives a file to 1.files
+    store.upsert(t, src1, ["k"])  # v2: partial, one file to __v__
     src2 = spark.range(1100, 1102).select(
         F.col("id").alias("k"), F.lit(-2).cast("bigint").alias("v"),
         F.lit("u2").alias("s"))
-    store.upsert(t, src2, ["k"])  # v3: partial, archives another
+    store.upsert(t, src2, ["k"])  # v3: partial, another
     store.overwrite(
         t, spark.createDataFrame([(1, 1, "tiny")], "k bigint, v bigint, s string")
-    )  # v4: full replace, new lineage; outgoing dir archived whole
+    )  # v4: full replace, every live file to __v__
     assert store.read(t).count() == 1
     assert store.read_version(t, 1).count() == 4000
     assert store.read_version(t, 1).filter(F.col("v") < 0).count() == 0
@@ -441,7 +468,7 @@ def test_full_replace_after_partial_merges_keeps_history_readable(spark, store):
     v3 = store.read_version(t, 3)
     assert v3.filter(F.col("v") == -1).count() == 2
     assert v3.filter(F.col("v") == -2).count() == 2
-    # restore to the mid-merge version through the mixed bases
+    # restore to the mid-merge version through both places
     store.restore(t, 3)
     assert store.read(t).count() == 4000
     assert store.count(t) == 4000
@@ -449,14 +476,13 @@ def test_full_replace_after_partial_merges_keeps_history_readable(spark, store):
 
 def test_txn_marker_travels_with_partial_merge(spark, store):
     """The idempotent-writer contract holds on the fast path: the txn
-    marker is mirrored in the SAME atomic manifest commit that
-    publishes the merge."""
+    marker is recorded in the SAME commit that publishes the merge."""
     t = _clustered_table(spark, store)
     src = spark.range(100, 102).select(
         F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v"),
         F.lit("u").alias("s"))
     store.upsert(t, src, ["k"], txn=("app_mp", 7))
-    m = store._latest_manifest(t)
+    m = _last(store, t)
     assert m["op"] == "merge" and m["txn"] == {"app_id": "app_mp", "version": 7}
     assert store.last_txn_version(t, "app_mp") == 7
 
@@ -464,66 +490,70 @@ def test_txn_marker_travels_with_partial_merge(spark, store):
 # ------------------------------------------------- r15 hardening (ADVICE r14)
 
 
-def test_adopt_refuses_on_inflight_merge_marker(spark, store):
-    """Residue of a merge that crashed between its first staged move
-    and its commit duplicates matched rows; adopt_uncommitted folding
-    it in would commit BOTH copies.  The ``._merge_inflight`` marker
-    makes adopt refuse and routes repair to discard_uncommitted."""
-    import json
-    import shutil
-
+def test_adopt_refuses_on_inflight_merge_marker(spark, store, monkeypatch):
+    """A merge cut off after its first staged file moved in (so the
+    live dir briefly holds an original AND its replacement) must never
+    let a reader see both copies of a matched row: read() finishes the
+    apply before listing the live dir."""
     t = _clustered_table(spark, store)
-    live = _live_parts(store, t)
-    # simulate the crash window: marker names the still-current
-    # version, and a staged-in replacement file sits next to the
-    # original it would have replaced
-    with open(store._merge_marker_path(t), "w") as f:
-        json.dump({"version": store.current_version(t)}, f)
-    dup = os.path.join(store.path(t), "part-99999-duplicate.parquet")
-    shutil.copy(live[0], dup)
-    with pytest.raises(RuntimeError, match="merge is in flight"):
-        store.adopt_uncommitted(t)
-    # the right repair clears both the residue and the marker
-    removed = store.discard_uncommitted(t)
-    assert removed == 1
-    assert not os.path.exists(store._merge_marker_path(t))
-    assert store.adopt_uncommitted(t) is False
-    assert store.read(t).count() == 4000 == store.count(t)
+    src = spark.range(100, 103).select(
+        F.col("id").alias("k"),
+        F.lit(-1).cast("bigint").alias("v"),
+        F.lit("upd").alias("s"),
+    )
+    _fail_first(monkeypatch, "rename", _moving_out)
+    with pytest.raises(OSError, match="injected"):
+        store.upsert(t, src, ["k"])
+    monkeypatch.undo()
+    # the torn live dir really held both copies
+    torn = {os.path.basename(p) for p in _live_parts(store, t)}
+    assert len(torn) > len(store._head(t)["files"])
+    got = store.read(t)
+    assert got.count() == 4000 == store.count(t)
+    assert got.filter(F.col("k") == 101).count() == 1
+    live = {os.path.basename(p) for p in _live_parts(store, t)}
+    assert live == set(store.snapshot(t)["files"])
 
 
-def test_stale_merge_marker_is_cleared_lazily(spark, store):
-    """Crash AFTER the merge's commit but before marker removal: the
-    version has advanced past the marker, so the table is consistent —
-    adopt clears the stale marker and proceeds normally."""
-    import json
-
+def test_stale_merge_marker_is_cleared_lazily(spark, store, monkeypatch):
+    """Crash after every move of a merge but before its stage dir is
+    dropped: the table is already consistent, and the next access
+    just clears the leftover stage."""
     t = _clustered_table(spark, store)
-    with open(store._merge_marker_path(t), "w") as f:
-        json.dump({"version": store.current_version(t) - 1}, f)
-    assert store.adopt_uncommitted(t) is False
-    assert not os.path.exists(store._merge_marker_path(t))
+    src = spark.range(100, 103).select(
+        F.col("id").alias("k"),
+        F.lit(-1).cast("bigint").alias("v"),
+        F.lit("upd").alias("s"),
+    )
+    _fail_first(monkeypatch, "rmtree")
+    with pytest.raises(OSError, match="injected"):
+        store.upsert(t, src, ["k"])
+    monkeypatch.undo()
+    assert [d for d in os.listdir(store.root) if ".__stage__" in d]
+    assert store.read(t).filter(F.col("v") == -1).count() == 3
+    assert store.count(t) == 4000
+    assert not [d for d in os.listdir(store.root) if ".__stage__" in d]
 
 
 def test_read_version_old_lineage_ignores_live_dir(spark, store):
-    """A live file of the NEW lineage must never shadow an archived
-    old-lineage file of the same name in read_version's mixed-base
-    per-file resolution (ADVICE r14)."""
+    """A stray file in the live dir must never shadow a removed file
+    of the same name: read_version locates each file by the HEAD's
+    file list, not by what happens to exist (ADVICE r14)."""
     import shutil
 
     t = _clustered_table(spark, store)
     v1 = store.current_version(t)
-    v1_manifest = store._load_manifest(t, v1)
+    v1_commit = store._load(t, v1)
     expected = _rows(store.read_version(t, v1))
-    # partial merge spreads v1's files across live + <lineage>.files
+    # partial merge spreads v1's files across live + __v__
     src = spark.range(100, 150).select(
         F.col("id").alias("k"),
         F.lit(-1).cast("bigint").alias("v"),
         F.concat(F.lit("upd_"), F.col("id")).alias("s"),
     )
     store.upsert(t, src, ["k"])
-    assert store._latest_manifest(t)["files_rewritten"] == 1
-    # full overwrite starts a NEW lineage; v1's untouched files move
-    # to the old lineage's archive dir
+    assert _last(store, t)["files_removed"] == 1
+    # full overwrite: v1's untouched files move to __v__ as well
     store.overwrite(
         t,
         spark.range(0, 10).select(
@@ -532,15 +562,35 @@ def test_read_version_old_lineage_ignores_live_dir(spark, store):
             F.lit("new").alias("s"),
         ),
     )
-    assert store._latest_manifest(t)["lineage"] != v1_manifest["lineage"]
     # plant a same-named file with WRONG content in the live dir
-    archived_dir = os.path.join(
-        store._versions_dir(t), str(v1_manifest["lineage"])
-    )
+    archived_dir = store._versions_dir(t)
     shadow_name = next(
-        f for f in v1_manifest["files"]
+        f for f in v1_commit["files"]
         if os.path.exists(os.path.join(archived_dir, f))
     )
     live_files = _live_parts(store, t)
     shutil.copy(live_files[0], os.path.join(store.path(t), shadow_name))
     assert _rows(store.read_version(t, v1)) == expected
+
+
+def test_history_reports_files_added_and_removed(spark, store):
+    """Delta DESCRIBE HISTORY parity: a pruned upsert touching one of
+    eight files records exactly that one file removed (and its
+    rewrite's files added); a no-op merge records 0/0; every row carries op,
+    rows, duration and txn."""
+    t = _clustered_table(spark, store, name="db.hist", files=8)
+    src = spark.range(100, 103).select(
+        F.col("id").alias("k"),
+        F.lit(-1).cast("bigint").alias("v"),
+        F.lit("upd").alias("s"),
+    )
+    store.upsert(t, src, ["k"], txn=("hist", 1))
+    store.upsert(t, src.filter(F.col("k") < 0), ["k"])
+    first, merge, noop = store.versions(t)
+    assert first["op"] == "replace" and first["files_added"] == 8
+    assert (merge["op"], merge["files_removed"]) == ("merge", 1)
+    assert merge["files_added"] >= 1
+    assert merge["txn"] == {"app_id": "hist", "version": 1}
+    assert (noop["files_removed"], noop["files_added"]) == (0, 0)
+    assert noop["row_count"] == merge["row_count"] == 4000
+    assert all(m["duration_s"] >= 0 for m in (first, merge, noop))

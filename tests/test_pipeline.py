@@ -22,6 +22,36 @@ def _day(spark, day, **kw):
     return batch.df(spark), batch.counts
 
 
+def _layout_problems(store) -> list[str]:
+    """For every table in the store: its live ``*.parquet`` set must
+    equal its head snapshot's file set (what a reader of
+    ``<dir>/*.parquet`` — perfbench's DuckDB gold-query check, the
+    catalog's LOCATION table — relies on), and its count must equal a
+    scan; no stage dir may be left behind."""
+    import glob
+    import os
+
+    problems = [
+        f"leftover stage {d}"
+        for d in os.listdir(store.root)
+        if ".__stage__" in d
+    ]
+    for d in sorted(os.listdir(store.root)):
+        if not d.endswith(".__log__"):
+            continue
+        name = d[: -len(".__log__")].replace("__", ".", 1)
+        live = store.path(name)
+        on_disk = {
+            os.path.relpath(p, live)
+            for p in glob.glob(os.path.join(live, "**", "*.parquet"), recursive=True)
+        }
+        if on_disk != set(store.snapshot(name)["files"]):
+            problems.append(f"{name}: live files != snapshot files")
+        if store.count(name) != store.read(name).count():
+            problems.append(f"{name}: count != scan")
+    return problems
+
+
 @pytest.fixture(scope="module")
 def day1_run(spark, tmp_path_factory):
     """Shared day-1 pipeline state for READ-ONLY assertions (one
@@ -43,10 +73,12 @@ def day1_run(spark, tmp_path_factory):
         r1 = medallion.run_incremental(store, raw)
         n_bronze = store.count("bronze.transactions")
         n_silver = store.count("silver.transactions")
+        layout_after_1 = _layout_problems(store)
         rerun = medallion.run_incremental(store, raw)
     return {
         "store": store,
         "r1": r1,
+        "layout_after_1": layout_after_1,
         "counts": counts,
         "rerun": rerun,
         "n_bronze_after_1": n_bronze,
@@ -103,6 +135,11 @@ def test_idempotent_rerun(day1_run):
     staging = store.read("silver.transactions_staging")
     assert staging.count() == 0
     assert staging.columns == medallion.SILVER_COLS
+
+
+def test_live_dirs_match_the_log_after_run_and_replay(day1_run):
+    assert day1_run["layout_after_1"] == []
+    assert _layout_problems(day1_run["store"]) == []
 
 
 def test_cdc_collapse_and_composite_key(spark, day12_run):

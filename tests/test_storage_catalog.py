@@ -22,6 +22,60 @@ def store(spark, tmp_path):
     return TableStore(spark, str(tmp_path / "warehouse"))
 
 
+def _fail_nth_rename(monkeypatch, n):
+    """Make the n-th ``os.rename`` from now on raise.  The apply's
+    moves are the store's only renames, so this crashes a write after
+    its claim."""
+    from delta_lake_gcp_implementation_spark.pipeline import storage as S
+
+    real = S.os.rename
+    calls = {"n": 0}
+
+    def rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == n:
+            raise OSError("injected crash in the apply")
+        return real(src, dst)
+
+    monkeypatch.setattr(S.os, "rename", rename)
+
+
+def _fail_claims(monkeypatch, name=None):
+    """Make every commit claim (the ``os.link`` into a log dir) of
+    table ``name`` (default: any table) raise — a crash before the
+    claim."""
+    from delta_lake_gcp_implementation_spark.pipeline import storage as S
+
+    real = S.os.link
+    log = None if name is None else name.replace(".", "__") + ".__log__"
+
+    def link(src, dst):
+        if log is None or log in dst:
+            raise OSError("injected crash at the claim")
+        return real(src, dst)
+
+    monkeypatch.setattr(S.os, "link", link)
+
+
+def _assert_layout(store, name, stages_ok=False):
+    """The live dir holds exactly the head snapshot's files (what a
+    reader of ``<dir>/*.parquet`` relies on), the count matches a scan,
+    and no stage dir is left over."""
+    import glob
+    import os
+
+    head = store.snapshot(name)
+    live = store.path(name)
+    on_disk = {
+        os.path.relpath(p, live)
+        for p in glob.glob(os.path.join(live, "**", "*.parquet"), recursive=True)
+    }
+    assert on_disk == set(head["files"])
+    assert store.count(name) == store.read(name).count()
+    if not stages_ok:
+        assert not [d for d in os.listdir(store.root) if ".__stage__" in d]
+
+
 # --------------------------------------------------------------- size gate
 
 
@@ -237,9 +291,10 @@ def test_failed_catalog_registration_is_logged_not_raised(
 
 
 def test_meta_counts_track_every_mutation(spark, store):
-    """store.count() answers from the write-observed sidecar (commit-
-    log-style stats); it must stay exactly consistent with a real scan
-    across every mutation primitive."""
+    """store.count() answers from the head commit (footer row counts
+    recorded at write time); it must stay exactly consistent with a
+    real scan across every mutation primitive, for this instance and
+    for a cold one that reads the log afresh."""
     name = "silver.meta_probe"
 
     def check():
@@ -269,11 +324,8 @@ def test_meta_counts_track_every_mutation(spark, store):
     )
     assert deleted == 5
     check()
-    # sidecar loss self-heals via one scan
-    import os
-
-    os.remove(store._meta_path(name))
-    check()
+    cold = TableStore(spark, store.root)
+    assert cold.count(name) == store.count(name) == cold.read(name).count()
 
 
 def test_update_matched_returns_closed_count(spark, store):
@@ -302,14 +354,11 @@ def test_vacuum_removes_only_orphans(spark, store):
     store.overwrite(
         "bronze.vac_probe", spark.createDataFrame([(1,)], ["k"])
     )
-    # fabricate a crashed-replace staging dir and an orphan sidecar
+    # a write that died before claiming a version leaves its stage dir
     stale_stage = store.path("bronze.vac_probe") + ".__stage__deadbeef"
     os.makedirs(stale_stage)
-    orphan_meta = store._meta_path("bronze.gone_table")
-    with open(orphan_meta, "w") as f:
-        f.write('{"row_count": 5}')
-    # ADVICE r10: non-meta sidecar kinds (the corpus counts-sync
-    # marker) must be swept too when their table dir is gone
+    # ADVICE r10: any sidecar kind (the corpus counts-sync marker) is
+    # swept when its table dir is gone
     orphan_sync = store.path("bronze.gone_table") + ".__sync__.json"
     with open(orphan_sync, "w") as f:
         f.write('{"bands_version": 3}')
@@ -317,39 +366,31 @@ def test_vacuum_removes_only_orphans(spark, store):
     with open(live_sync, "w") as f:
         f.write('{"bands_version": 1}')
     removed = store.vacuum()
-    assert stale_stage in removed and orphan_meta in removed
-    assert orphan_sync in removed
+    assert stale_stage in removed and orphan_sync in removed
     # live table, its sidecars, and its data are untouched
     assert store.count("bronze.vac_probe") == 1
-    assert os.path.exists(store._meta_path("bronze.vac_probe"))
+    assert store.read("bronze.vac_probe").count() == 1
     assert os.path.exists(live_sync)
 
 
 def test_adopt_uncommitted_folds_orphan_files_into_committed_state(
-    spark, store
+    spark, store, monkeypatch
 ):
-    """Crash window between a write's parquet job commit and its
-    manifest write (ADVICE r10): ``read()`` sees the orphan rows while
-    committed state (``count``/``current_version``) does not.
-    ``adopt_uncommitted`` commits the directory as it stands so both
-    sides agree again."""
+    """The crash window that used to need ``adopt_uncommitted`` (data
+    landed, commit lost) no longer exists: an append that dies after
+    its claim is already committed, and the next access rolls its
+    files into the live dir, so ``read()`` and committed state
+    (``count``/``current_version``) agree without any repair call."""
     name = "bronze.adopt_probe"
     store.overwrite(name, spark.createDataFrame([(1,), (2,)], ["k"]))
-    assert store.uncommitted_files(name) == []
-    assert store.adopt_uncommitted(name) is False  # no-op when clean
     v0 = store.current_version(name)
-    # simulate the crash: raw spark append, no meta, no manifest
-    spark.createDataFrame([(3,)], ["k"]).write.mode("append").parquet(
-        store.path(name)
-    )
-    spark.catalog.refreshByPath(store.path(name))
-    assert store.read(name).count() == 3
-    assert store.count(name) == 2  # committed state lags
-    assert store.uncommitted_files(name) != []
-    assert store.adopt_uncommitted(name) is True
-    assert store.uncommitted_files(name) == []
+    _fail_nth_rename(monkeypatch, 1)
+    with pytest.raises(OSError, match="injected"):
+        store.append(name, spark.createDataFrame([(3,)], ["k"]))
+    monkeypatch.undo()
     assert store.current_version(name) == v0 + 1
     assert store.count(name) == 3 == store.read(name).count()
+    _assert_layout(store, name)
 
 
 # ------------------------------------------------------- quadratic guard
@@ -424,38 +465,29 @@ def test_vacuum_retains_requested_versions(spark, tmp_path):
 
 
 def test_crashed_swap_recovers_and_stays_readable(spark, tmp_path, monkeypatch):
-    """Crash between the archive rename and the promote rename: the
-    latest committed version must stay readable (manifest fallback to
-    the archive), and the next mutation must heal the live dir."""
+    """Crash between the claim and the first apply rename of a replace:
+    the committed new version is what the next read serves (the apply
+    rolls forward), the replaced version stays readable, and the store
+    is fully functional afterwards."""
     import os as _os
-
-    from delta_lake_gcp_implementation_spark.pipeline import storage as S
 
     store = TableStore(spark, str(tmp_path / "wh_crash"))
     t = "silver.crash_probe"
     store.overwrite(t, spark.createDataFrame([(1, "a")], ["k", "v"]))  # v1
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def failing_rename(src, dst):
-        # the promote rename moves a .__stage__ dir into place
-        if ".__stage__" in src:
-            raise OSError("simulated crash before promote")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(S.os, "rename", failing_rename)
-    with pytest.raises(OSError, match="simulated crash"):
-        store.overwrite(t, spark.createDataFrame([(2, "b")], ["k", "v"]))
-    monkeypatch.setattr(S.os, "rename", real_rename)
-    # committed state survives the crash via archive fallback
+    _fail_nth_rename(monkeypatch, 1)
+    with pytest.raises(OSError, match="injected"):
+        store.overwrite(t, spark.createDataFrame([(2, "b")], ["k", "v"]))  # v2
+    monkeypatch.undo()
     assert _rows(store.read_version(t, 1)) == {(1, "a")}
-    assert _rows(store.read(t)) == {(1, "a")}   # _heal promoted it back
+    assert _rows(store.read(t)) == {(2, "b")}   # the apply rolled forward
     assert store.count(t) == 1
+    _assert_layout(store, t)
     # and the store is fully functional afterwards
-    store.overwrite(t, spark.createDataFrame([(3, "c")], ["k", "v"]))  # v2
+    store.overwrite(t, spark.createDataFrame([(3, "c")], ["k", "v"]))  # v3
     assert _rows(store.read(t)) == {(3, "c")}
     assert _rows(store.read_version(t, 1)) == {(1, "a")}
-    store.vacuum()  # clears the abandoned stage dir
+    assert _rows(store.read_version(t, 2)) == {(2, "b")}
+    store.vacuum()
     assert not [
         d for d in _os.listdir(store.root) if ".__stage__" in d
     ]
@@ -545,7 +577,7 @@ def test_concurrent_commit_exactly_one_winner(spark, tmp_path):
     """Two writers racing for the same version slot: os.link claims it
     atomically — one wins, the loser raises instead of clobbering."""
     import json
-    import os
+    from unittest import mock
 
     from delta_lake_gcp_implementation_spark.pipeline.storage import (
         ConcurrentWriteError,
@@ -556,43 +588,35 @@ def test_concurrent_commit_exactly_one_winner(spark, tmp_path):
     store.overwrite("db.occ", spark.range(10).selectExpr("id", "id * 2 AS v"))
     v = store.current_version("db.occ")
 
-    # writer A lands version v+1 out from under writer B's read
-    store._commit("db.occ", "append", 10, new_lineage=False)
-    try:
-        store._commit(
-            "db.occ", "append", 99, new_lineage=False, expected_version=v
-        )
-        assert False, "expected ConcurrentWriteError"
-    except ConcurrentWriteError:
-        pass
-    # version history is intact: A's manifest was not clobbered
-    ops = [m["op"] for m in store.versions("db.occ")]
-    assert ops.count("append") == 1
-    counts = [m["row_count"] for m in store.versions("db.occ")]
-    assert 99 not in counts
+    # writer B (another instance) read the head at v; writer A then
+    # lands v+1.  B's commit is built on the head it finds when it
+    # claims, so it lands v+2 on top of A's commit instead of over it
+    other = TableStore(spark, str(tmp_path))
+    assert other.current_version("db.occ") == v
+    store._commit("db.occ", "append", txn=("a", 1))
+    other._commit("db.occ", "append", txn=("b", 1))
+    hist = store.versions("db.occ")
+    assert [m["version"] for m in hist] == [v, v + 1, v + 2]
+    assert [m["txn"]["app_id"] for m in hist[1:]] == ["a", "b"]
+    assert store.last_txn_version("db.occ", "a") == 1  # not clobbered
 
-    # slot-claim race: writer B read the manifest log BEFORE writer A
-    # landed (freeze B's view with a patch), so both compute the same
-    # next version — the os.link claim must fail B, not clobber A
-    from unittest import mock
-
-    stale = store._latest_manifest("db.occ")
-    with mock.patch.object(
-        TableStore, "_latest_manifest", return_value=stale
-    ):
+    # slot-claim race: B's view of the head is frozen BEFORE A lands
+    # (patch), so both compute the same next version — the os.link
+    # claim must fail B, not clobber A
+    stale = store._head("db.occ")
+    with mock.patch.object(TableStore, "_head", return_value=stale):
         rival = json.loads(json.dumps(stale))  # A lands stale.version+1
-        path = store._manifest_path("db.occ", stale["version"] + 1)
         rival["version"] = stale["version"] + 1
+        rival["op"] = "rival"
+        path = store._commit_path("db.occ", rival["version"])
         with open(path, "w") as f:
             json.dump(rival, f)
-        try:
-            store._commit("db.occ", "append", 5, new_lineage=False)
-            assert False, "expected ConcurrentWriteError"
-        except ConcurrentWriteError:
-            pass
-    # A's manifest survived untouched
-    assert store._load_manifest("db.occ", rival["version"]) == rival
-    os.unlink(path)
+        with pytest.raises(ConcurrentWriteError):
+            store._commit("db.occ", "append", txn=("b", 2))
+    # A's commit survived untouched
+    assert store._load("db.occ", rival["version"]) == rival
+    assert store.current_version("db.occ") == rival["version"]
+    assert store.last_txn_version("db.occ", "b") == 1
 
 
 def test_overwrite_where_replaces_exactly_the_predicate_slice(spark, tmp_path):
@@ -701,7 +725,7 @@ def test_overwrite_where_null_predicate_rows_are_retained_and_flagged(
 
 
 def _occ_worker(root: str, widx: int, n_commits: int, out_q) -> None:
-    """Child process: commit n_commits manifests against a shared log,
+    """Child process: commit n_commits snapshots against a shared log,
     retrying on ConcurrentWriteError (no Spark needed — the commit
     protocol is pure filesystem)."""
     import random
@@ -715,14 +739,14 @@ def _occ_worker(root: str, widx: int, n_commits: int, out_q) -> None:
     store = TableStore.__new__(TableStore)  # skip __init__'s catalog scan
     store.spark = None
     store.root = root
+    store._heads = {}
     won = []
     for i in range(n_commits):
         while True:
             try:
                 v = store._commit(
-                    "db.stress", f"w{widx}-{i}", widx * 1000 + i,
-                    new_lineage=False,
-                )
+                    "db.stress", f"w{widx}-{i}", txn=(f"w{widx}", i)
+                )["version"]
                 won.append((v, f"w{widx}-{i}"))
                 break
             except ConcurrentWriteError:
@@ -733,9 +757,10 @@ def _occ_worker(root: str, widx: int, n_commits: int, out_q) -> None:
 def test_occ_commit_protocol_multiprocess_stress(tmp_path):
     """VERDICT r5 item 8: N OS processes x M commits racing one table
     log.  Linearizable outcome required: versions dense 1..N*M, every
-    worker's every commit lands exactly once, no manifest clobbered
+    worker's every commit lands exactly once, no commit clobbered
     (each version's op matches the single worker that believes it won
-    that slot)."""
+    that slot), and no update lost (each snapshot's txn map carries
+    every commit before it)."""
     import json as _json
     import multiprocessing as mp
     import os as _os
@@ -764,23 +789,27 @@ def test_occ_commit_protocol_multiprocess_stress(tmp_path):
     store = TableStore.__new__(TableStore)
     store.spark = None
     store.root = str(tmp_path)
+    store._heads = {}
     log = store._log_dir("db.stress")
     versions = sorted(
         int(f[:-5]) for f in _os.listdir(log)
         if f.endswith(".json") and f[:-5].isdigit()
     )
     total = n_workers * n_commits
-    # dense, complete, exactly one manifest per commit
+    # dense, complete, exactly one commit file per commit
     assert versions == list(range(1, total + 1))
     assert len(claims) == total
+    seen: dict[str, int] = {}
     for v in versions:
-        with open(store._manifest_path("db.stress", v)) as f:
+        with open(store._commit_path("db.stress", v)) as f:
             m = _json.load(f)
         assert m["version"] == v
-        # the on-disk manifest is the one its claimed winner wrote
+        # the on-disk commit is the one its claimed winner wrote
         assert m["op"] == claims[v]
         w, i = claims[v][1:].split("-")
-        assert m["row_count"] == int(w) * 1000 + int(i)
+        assert m["txn"] == {"app_id": f"w{w}", "version": int(i)}
+        seen[f"w{w}"] = int(i)
+        assert m["txns"] == seen  # built on its true predecessor
     # no stray tmp files leaked by losing writers
     assert not [f for f in _os.listdir(log) if f.startswith(".tmp-")]
 
@@ -789,10 +818,10 @@ def test_occ_commit_protocol_multiprocess_stress(tmp_path):
 
 
 def test_txn_recorded_atomically_and_survives_other_writers(spark, store):
-    """Delta txnAppId/txnVersion contract: the txn marker publishes
-    with the data swap (sidecar) AND in the manifest; other writers'
-    replaces carry earlier sidecars forward; last_txn_version reports
-    the per-app maximum."""
+    """Delta txnAppId/txnVersion contract: the txn marker is recorded
+    in the same commit as the data; every later snapshot carries the
+    txn map forward, other writers' replaces included;
+    last_txn_version reports the per-app maximum."""
     df = spark.range(10).withColumnRenamed("id", "k").withColumn(
         "v", F.lit(1).cast("bigint")
     )
@@ -804,221 +833,175 @@ def test_txn_recorded_atomically_and_survives_other_writers(spark, store):
     store.upsert("gold.mv", df, ["k"], txn=("app_a", 1))
     assert store.last_txn_version("gold.mv", "app_a") == 1
     assert store.last_txn_version("gold.mv", "app_b") == 7
-    # a NON-txn full overwrite must not lose the records (sidecars are
-    # carried forward; manifests mirror them regardless)
+    # a NON-txn full overwrite must not lose the records
     store.overwrite("gold.mv", df)
     assert store.last_txn_version("gold.mv", "app_a") == 1
     assert store.last_txn_version("gold.mv", "app_b") == 7
-    # sidecars are invisible to reads and to the manifest file list
     assert store.read("gold.mv").count() == 10
-    assert all(
-        not f.startswith("_")
-        for f in store._latest_manifest("gold.mv")["files"]
-    )
+    assert store.versions("gold.mv")[-1]["txn"] is None
 
 
-def test_txn_create_path_is_staged(spark, store):
-    """First-ever write with a txn routes through the staged swap so
-    the sidecar and the first data publish in one rename."""
-    import os
-
+def test_txn_create_path_is_staged(spark, store, monkeypatch):
+    """First-ever write with a txn: a crash at the claim leaves no
+    table and no marker (the replay must redo it); the replay then
+    publishes data and marker in one commit."""
     df = spark.range(5).withColumnRenamed("id", "k").withColumn(
         "v", F.lit(2).cast("bigint")
     )
+    _fail_claims(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        store.upsert("gold.fresh", df, ["k"], txn=("writer", 3))
+    monkeypatch.undo()
+    assert not store.exists("gold.fresh")
+    assert store.last_txn_version("gold.fresh", "writer") is None
     store.upsert("gold.fresh", df, ["k"], txn=("writer", 3))
     assert store.last_txn_version("gold.fresh", "writer") == 3
-    assert os.path.exists(
-        os.path.join(store.path("gold.fresh"), "_txn-writer-3")
-    )
     assert store.read("gold.fresh").count() == 5
+    assert store.versions("gold.fresh")[-1]["txn"] == {
+        "app_id": "writer", "version": 3,
+    }
 
 
 def test_last_txn_version_manifest_fallback_without_sidecars(spark, store):
-    """ADVICE r7 perf fix kept correct: sidecars are ground truth and
-    short-circuit, but when an outside writer drops the underscore
-    files the newest-first manifest walk still reports each app's
-    maximum txn version."""
-    import os
-
+    """The txn map lives only in the log: a cold store over the same
+    root (nothing cached) reports each app's maximum across
+    interleaved apps and non-txn commits."""
     df = spark.range(4).withColumnRenamed("id", "k").withColumn(
         "v", F.lit(1).cast("bigint")
     )
     store.upsert("gold.out", df, ["k"], txn=("app_a", 0))
     store.upsert("gold.out", df, ["k"], txn=("app_b", 5))
     store.upsert("gold.out", df, ["k"], txn=("app_a", 1))
-    tdir = store.path("gold.out")
-    for f in os.listdir(tdir):
-        if f.startswith("_txn-"):
-            os.unlink(os.path.join(tdir, f))
-    assert store.last_txn_version("gold.out", "app_a") == 1
-    assert store.last_txn_version("gold.out", "app_b") == 5
-    assert store.last_txn_version("gold.out", "app_c") is None
+    store.append("gold.out", df.withColumn("k", F.col("k") + 10))
+    cold = TableStore(spark, store.root)
+    assert cold.last_txn_version("gold.out", "app_a") == 1
+    assert cold.last_txn_version("gold.out", "app_b") == 5
+    assert cold.last_txn_version("gold.out", "app_c") is None
 
 
 # ------------------------------------------- ADVICE r11: adopt OCC guard
 
 
-def _raw_orphan(spark, store, name, value):
-    """Simulate the crash window: parquet job committed, no manifest."""
-    spark.createDataFrame([(value,)], ["k"]).write.mode("append").parquet(
-        store.path(name)
-    )
-    spark.catalog.refreshByPath(store.path(name))
-
-
 def test_adopt_uncommitted_retries_past_concurrent_commit(
     spark, store, monkeypatch
 ):
-    """ADVICE r11: a commit landing between adopt's version read and
-    its adopt commit must abort that attempt (OCC expected_version)
-    instead of silently folding the concurrent writer's files into a
-    skewed count.  The retry then re-evaluates orphans against the
-    NEW manifest — here the racing append's listing-based manifest
-    absorbed the orphan, so adopt correctly becomes a no-op and the
-    invalidated count sidecar self-heals by scan."""
+    """A commit landing (through another instance) while a write is
+    between its data write and its claim must not be lost or
+    double-counted: the claim builds on the head it finds, so both
+    writes land and committed state agrees with readers."""
     name = "bronze.adopt_race"
     store.overwrite(name, spark.createDataFrame([(1,), (2,)], ["k"]))
-    _raw_orphan(spark, store, name, 3)
     other = TableStore(spark, store.root)
     fired = {"n": 0}
-    real_uf = store.uncommitted_files
+    real_entries = TableStore._entries
 
-    def racing_uf(nm):
-        orphans = real_uf(nm)
-        if nm == name and orphans and fired["n"] == 0:
+    def racing_entries(stage, schema):
+        if fired["n"] == 0:
             fired["n"] += 1
             other.append(name, spark.createDataFrame([(4,)], ["k"]))
-        return orphans
+        return real_entries(stage, schema)
 
-    monkeypatch.setattr(store, "uncommitted_files", racing_uf)
-    assert store.adopt_uncommitted(name) is False
+    monkeypatch.setattr(TableStore, "_entries", staticmethod(racing_entries))
+    store.append(name, spark.createDataFrame([(3,)], ["k"]))
+    monkeypatch.undo()
     assert fired["n"] == 1  # the race really happened
-    # committed state, sidecar count, and readers all agree post-heal
-    assert store.uncommitted_files(name) == []
+    assert [m["op"] for m in store.versions(name)] == [
+        "replace", "append", "append",
+    ]
     assert store.count(name) == 4 == store.read(name).count()
+    assert _rows(store.read(name)) == {(1,), (2,), (3,), (4,)}
 
 
 def test_adopt_uncommitted_raises_after_persistent_races(
     spark, store, monkeypatch
 ):
-    """A writer that keeps committing mid-adoption exhausts the
-    bounded retries: adopt surfaces ConcurrentWriteError (the
-    single-writer contract is broken) rather than looping forever or
-    committing over the other writer."""
+    """A writer whose view of the head is stale when it claims loses
+    the race: it raises ConcurrentWriteError rather than committing
+    over the other writer, and its stage is garbage that vacuum
+    removes."""
     from delta_lake_gcp_implementation_spark.pipeline.storage import (
         ConcurrentWriteError,
     )
 
     name = "bronze.adopt_storm"
     store.overwrite(name, spark.createDataFrame([(1,)], ["k"]))
+    stale = store._head(name)
     other = TableStore(spark, store.root)
-    state = {"next": 100}
-    real_uf = store.uncommitted_files
-
-    def storming_uf(nm):
-        _raw_orphan(spark, store, nm, state["next"])
-        state["next"] += 1
-        orphans = real_uf(nm)
-        other.append(nm, spark.createDataFrame([(state["next"],)], ["k"]))
-        state["next"] += 1
-        return orphans
-
-    monkeypatch.setattr(store, "uncommitted_files", storming_uf)
-    with pytest.raises(ConcurrentWriteError, match="single-writer"):
-        store.adopt_uncommitted(name, attempts=2)
+    other.append(name, spark.createDataFrame([(2,)], ["k"]))
+    monkeypatch.setattr(store, "_head", lambda nm: stale)
+    with pytest.raises(ConcurrentWriteError, match="concurrent"):
+        store.append(name, spark.createDataFrame([(3,)], ["k"]))
+    monkeypatch.undo()
+    assert _rows(store.read(name)) == {(1,), (2,)}
+    assert store.count(name) == 2
+    removed = store.vacuum()
+    assert any(".__stage__" in p for p in removed)
+    _assert_layout(store, name)
 
 
-def test_discard_uncommitted_rolls_back_crashed_replace(spark, store):
-    """ADVICE r13: a ``_replace`` that crashed between promoting its
-    staging dir and committing its manifest leaves the live dir
-    holding a NEW lineage while the latest manifest names the OLD
-    (archived) one.  ``discard_uncommitted`` must detect the lineage
-    mismatch (committed files missing from the live dir) and RESTORE
-    the committed lineage from the archive — the old behavior deleted
-    every live file, leaving an unreadable empty dir behind a stale
-    manifest."""
-    import os
-
+def test_discard_uncommitted_rolls_back_crashed_replace(
+    spark, store, monkeypatch
+):
+    """A replace that dies at its claim never touched the live dir:
+    the committed table is still what every reader sees, the stage is
+    garbage vacuum removes, and the next write commits normally."""
     name = "bronze.replay_roll"
     store.append(name, spark.createDataFrame([(i,) for i in range(10)], ["k"]))
-    latest = store._latest_manifest(name)
-    final = store.path(name)
-    vdir = store._versions_dir(name)
-    os.makedirs(vdir, exist_ok=True)
-    # simulate the crash window: committed lineage archived, a new
-    # uncommitted lineage promoted into the live path, no manifest
-    os.rename(final, os.path.join(vdir, str(latest["lineage"])))
-    spark.createDataFrame([(99,), (98,)], ["k"]).write.parquet(final)
-    spark.catalog.refreshByPath(final)
-
-    n_live = len(store._list_data_files(final))
-    removed = store.discard_uncommitted(name)
-    assert removed == n_live
-    # committed state restored and readable
+    before = set(store.snapshot(name)["files"])
+    _fail_claims(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        store.overwrite(name, spark.createDataFrame([(99,), (98,)], ["k"]))
+    monkeypatch.undo()
     assert store.count(name) == 10 == store.read(name).count()
-    assert set(store._list_data_files(final)) == set(latest["files"])
-    # the crashed attempt's data was parked for vacuum, not destroyed
-    orphans = [d for d in os.listdir(vdir) if d.startswith("replay-orphan-")]
-    assert len(orphans) == 1
-    # vacuum(retain) expires the parked orphan
-    store.vacuum(retain_versions=1)
-    assert not any(
-        d.startswith("replay-orphan-") for d in os.listdir(vdir)
-    ) or not os.path.isdir(vdir)
+    assert set(store.snapshot(name)["files"]) == before
+    _assert_layout(store, name, stages_ok=True)
+    assert any(".__stage__" in p for p in store.vacuum())
+    _assert_layout(store, name)
+    store.overwrite(name, spark.createDataFrame([(99,), (98,)], ["k"]))
+    assert _rows(store.read(name)) == {(99,), (98,)}
 
 
-def test_discard_uncommitted_refuses_when_archive_gone(spark, store):
-    """The rollback path must never silently empty a live table: with
-    committed files missing from the live dir AND no intact archive,
-    discard raises instead of deleting the only remaining data."""
-    import os
-    import shutil
-
+def test_discard_uncommitted_refuses_when_archive_gone(
+    spark, store, monkeypatch
+):
+    """A replace cut off in the MIDDLE of its apply (its new file
+    moved in, the old files not yet moved out) must never surface as
+    a mixed or empty table: the next read finishes the apply, and the
+    replaced version stays readable from ``__v__``."""
     name = "bronze.replay_refuse"
-    store.append(name, spark.createDataFrame([(1,), (2,)], ["k"]))
-    latest = store._latest_manifest(name)
-    final = store.path(name)
-    vdir = store._versions_dir(name)
-    os.makedirs(vdir, exist_ok=True)
-    os.rename(final, os.path.join(vdir, str(latest["lineage"])))
-    spark.createDataFrame([(99,)], ["k"]).write.parquet(final)
-    shutil.rmtree(os.path.join(vdir, str(latest["lineage"])))
-    with pytest.raises(RuntimeError, match="refusing to discard"):
-        store.discard_uncommitted(name)
-    # live data untouched by the refusal
-    assert store._list_data_files(final)
+    store.append(name, spark.createDataFrame([(1,), (2,)], ["k"]).coalesce(1))
+    v1 = store.current_version(name)
+    _fail_nth_rename(monkeypatch, 2)
+    with pytest.raises(OSError, match="injected"):
+        store.overwrite(name, spark.createDataFrame([(99,)], ["k"]))
+    monkeypatch.undo()
+    assert _rows(store.read(name)) == {(99,)}
+    assert store.count(name) == 1
+    assert _rows(store.read_version(name, v1)) == {(1,), (2,)}
+    _assert_layout(store, name)
 
 
 def test_last_txn_version_survives_maintenance_commit_over_lost_sidecar(
-    spark, store
+    spark, store, monkeypatch
 ):
-    """ADVICE r13: a txn append that crashed before publishing its
-    sidecar leaves the sidecar one version behind; if ANY non-txn
-    commit (adopt / compaction / maintenance append) then lands, the
-    latest manifest no longer carries the app's record.  The
-    newest-first manifest walk must still report the true maximum —
-    the old latest-manifest-only cross-check returned the stale
-    sidecar and the replay double-appended."""
-    import os
-
+    """ADVICE r13's shape — a txn append crashed after it committed,
+    then a non-txn commit lands before the replay — must still report
+    the true maximum: the marker is in the txn append's own commit and
+    every later snapshot carries it."""
     name = "gold.mb"
     df = spark.range(4).withColumnRenamed("id", "k").withColumn(
         "v", F.lit(1).cast("bigint")
     )
     store.append(name, df, txn=("app", 4))
-    store.append(name, df, txn=("app", 5))
-    tdir = store.path(name)
-    # crash window: v5's manifest committed, its sidecar never landed
-    for f in os.listdir(tdir):
-        if f.startswith("_txn-app-"):
-            os.unlink(os.path.join(tdir, f))
-    open(os.path.join(tdir, "_txn-app-4"), "w").close()
-    # a maintenance commit buries the txn record below the latest
+    _fail_nth_rename(monkeypatch, 1)
+    with pytest.raises(OSError, match="injected"):
+        store.append(name, df, txn=("app", 5))
+    monkeypatch.undo()
+    # a maintenance commit lands on top of the half-applied txn append
     store.append(name, df)
     assert store.last_txn_version(name, "app") == 5
-    # the reconciliation self-repaired the missing sidecar, so the
-    # answer survives even after the mirrored manifests are vacuumed
-    assert os.path.exists(os.path.join(tdir, "_txn-app-5"))
+    assert store.count(name) == 12 == store.read(name).count()
+    _assert_layout(store, name)
 
 
 def test_vacuum_tolerates_directory_matching_sidecar_pattern(spark, store):
@@ -1034,36 +1017,40 @@ def test_vacuum_tolerates_directory_matching_sidecar_pattern(spark, store):
     assert trap not in removed
 
 
-def test_last_version_hint_resolves_head_without_listing(spark, store):
-    """r14: the `_last_version` hint (Delta `_last_checkpoint` analog)
-    must track the head, survive staleness via forward probe, and fall
-    back to the directory listing when corrupt or pointing at a
-    vacuumed/deleted manifest."""
-    import os
-
+def test_last_version_hint_resolves_head_without_listing(
+    spark, store, monkeypatch
+):
+    """A store resolves the head from its cached head plus a forward
+    probe — no log listing — so it sees commits made through other
+    instances; only a cold store (or a vanished cached head) lists the
+    log, once."""
     t = "bronze.hint_probe"
     df = spark.createDataFrame([(1,)], ["k"])
     store.overwrite(t, df)          # v1
+    other = TableStore(spark, store.root)
+    assert other.current_version(t) == 1
     store.append(t, df)             # v2
     store.append(t, df)             # v3
-    log = store._log_dir(t)
-    hint = os.path.join(log, "_last_version")
-    assert open(hint).read().strip() == "3"
-    assert store.current_version(t) == 3
-    # stale hint (crash between link and hint write): forward probe
-    with open(hint, "w") as f:
-        f.write("1")
-    assert store.current_version(t) == 3
-    # corrupt hint: fallback listing, self-heals on next commit
-    with open(hint, "w") as f:
-        f.write("not a number")
-    assert store.current_version(t) == 3
-    store.append(t, df)             # v4 rewrites the hint
-    assert open(hint).read().strip() == "4"
-    # hint pointing at a deleted manifest (the crash-simulation shape
-    # in test_streaming): fallback listing finds the surviving head
-    os.remove(store._manifest_path(t, 4))
-    assert store.current_version(t) == 3
+    listings = {"n": 0}
+    real_list = TableStore._log_versions
+
+    def counting_list(self, name):
+        listings["n"] += 1
+        return real_list(self, name)
+
+    monkeypatch.setattr(TableStore, "_log_versions", counting_list)
+    assert other.current_version(t) == 3
+    assert other.count(t) == 3
+    assert listings["n"] == 0
+    cold = TableStore.__new__(TableStore)
+    cold.spark, cold.root, cold._heads = spark, store.root, {}
+    assert cold.current_version(t) == 3 and cold.current_version(t) == 3
+    assert listings["n"] == 1
+    # the cached head vanished (the table was dropped): list again
+    import shutil
+
+    shutil.rmtree(store._log_dir(t))
+    assert not other.exists(t)
 
 
 # ---------------------------------------------- memo vs scoped release
@@ -1203,3 +1190,101 @@ def test_merge_pins_column_order_and_empty_merge_writes_nothing(spark, tmp_path)
     assert n == 5  # post-merge count unchanged
     assert data_files() == files_before
     assert store.read("db.noop").columns == ["payload", "id"]
+
+
+# ------------------------------------------- the two crash points, per op
+
+
+def _crash_table(spark, store, name):
+    """Four files with disjoint key ranges, so pruned mutations touch
+    a strict subset."""
+    df = spark.range(0, 400).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    )
+    store.overwrite(name, df.repartitionByRange(4, "k"))
+
+
+def _crash_op(spark, store, name, op):
+    def rows(ks, v):
+        return spark.createDataFrame([(k, v) for k in ks], "k bigint, v bigint")
+
+    def keys(ks):
+        return spark.createDataFrame([(k,) for k in ks], "k bigint")
+
+    if op == "append":
+        store.append(name, rows([1000, 1001], 7))
+    elif op == "overwrite":
+        store.overwrite(name, rows([5], 5))
+    elif op in ("pruned_upsert", "full_upsert"):
+        store.upsert(name, rows([10, 2000], -1), ["k"])
+    elif op == "delete_matched":
+        store.delete_matched(name, keys([10, 11]), ["k"])
+    elif op == "update_matched":
+        store.update_matched(
+            name, keys([10]), ["k"], {"v": F.lit(-9).cast("bigint")}
+        )
+    elif op == "txn_append":
+        store.append(name, rows([3000], 1), txn=("app", 4))
+
+
+@pytest.mark.parametrize("failure", ["claim", "apply"])
+@pytest.mark.parametrize(
+    "op",
+    [
+        "append", "overwrite", "pruned_upsert", "full_upsert",
+        "delete_matched", "update_matched", "txn_append",
+    ],
+)
+def test_write_crash_leaves_prior_or_committed_state(
+    spark, tmp_path, monkeypatch, op, failure
+):
+    """Every write has exactly two crash cases.  At the claim
+    (``os.link`` fails): reads, count, history and the live files are
+    unchanged, and vacuum removes the stage.  After the claim (the
+    first apply rename fails): the next read/count serve the committed
+    state — row-identical to a clean run — the live ``*.parquet`` set
+    equals the snapshot, the previous version still reads its old
+    rows, and a txn marker is visible."""
+    import glob
+    import os
+
+    def make(root):
+        s = TableStore(spark, str(tmp_path / root))
+        if op != "full_upsert":
+            s.prune_min_table_bytes = 0
+        _crash_table(spark, s, "db.crash")
+        return s
+
+    clean = make("clean")
+    _crash_op(spark, clean, "db.crash", op)
+    store = make("crashed")
+    t = "db.crash"
+    prev = store.current_version(t)
+    before_rows = _rows(store.read(t))
+    before_files = sorted(glob.glob(os.path.join(store.path(t), "*.parquet")))
+    if failure == "claim":
+        _fail_claims(monkeypatch)
+    else:
+        _fail_nth_rename(monkeypatch, 1)
+    with pytest.raises(OSError, match="injected"):
+        _crash_op(spark, store, t, op)
+    monkeypatch.undo()
+    if failure == "claim":
+        assert _rows(store.read(t)) == before_rows
+        assert store.count(t) == len(before_rows)
+        assert store.current_version(t) == prev
+        assert [m["version"] for m in store.versions(t)] == [prev]
+        assert sorted(
+            glob.glob(os.path.join(store.path(t), "*.parquet"))
+        ) == before_files
+        removed = store.vacuum()
+        assert any(".__stage__" in p for p in removed)
+        assert store.last_txn_version(t, "app") is None
+    else:
+        assert _rows(store.read(t)) == _rows(clean.read(t))
+        assert store.count(t) == clean.count(t)
+        assert store.current_version(t) == prev + 1
+        assert _rows(store.read_version(t, prev)) == before_rows
+        if op == "txn_append":
+            assert store.last_txn_version(t, "app") == 4
+    _assert_layout(store, t)

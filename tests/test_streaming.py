@@ -273,45 +273,48 @@ def test_streaming_agg_maintenance_txn_skips_replayed_batch(spark, event_dir, tm
     assert after == before, "replayed batch_id must not double-fold"
 
 
-def test_streaming_agg_maintenance_txn_survives_lost_manifest(spark, event_dir, tmp_path):
-    """The crash window the marker-TABLE design left open: fold
-    committed, marker write never happened.  With the txn sidecar the
-    marker travels inside the fold's own atomic directory swap, so even
-    if the crash eats the MANIFEST (the last, separate, write of
-    ``_replace``) the live dir still proves the fold happened and the
-    replayed batch is skipped."""
-    import os
+def test_streaming_agg_maintenance_txn_survives_lost_manifest(
+    spark, event_dir, tmp_path, monkeypatch
+):
+    """The crash window the marker-TABLE design left open: the fold is
+    committed but the stream dies before recording it.  Crash the fold
+    after its commit claim and before its apply: the stream fails with
+    its offsets uncommitted, the restart re-delivers the batch, and
+    the txn marker — in the same commit as the folded data — must
+    skip it, so the totals equal one clean fold."""
+    from delta_lake_gcp_implementation_spark.pipeline import storage as S
+
+    def stream():
+        return jobs.read_event_stream(spark, event_dir).select(
+            "user_id", F.lit(1).cast("bigint").alias("one")
+        )
+
+    clean = TableStore(spark, str(tmp_path / "wh_mv_clean"))
+    jobs.run_streaming_agg_maintenance(
+        stream(), clean, "gold.t", ["user_id"], ["one"], str(tmp_path / "ck0")
+    )
+    want = {r.user_id: r.one for r in clean.read("gold.t").collect()}
 
     store = TableStore(spark, str(tmp_path / "wh_mv_crash"))
-    stream = jobs.read_event_stream(spark, event_dir).select(
-        "user_id", F.lit(1).cast("bigint").alias("one")
-    )
-    jobs.run_streaming_agg_maintenance(
-        stream, store, "gold.t", ["user_id"], ["one"], str(tmp_path / "ck1")
-    )
-    before = {r.user_id: r.one for r in store.read("gold.t").collect()}
-    # simulate the crash: delete every manifest that recorded the txn,
-    # leaving only the sidecar published by the data swap itself
-    log_dir = store.path("gold.t") + ".__log__"
-    removed = 0
-    import json
 
-    for f in sorted(os.listdir(log_dir)):
-        if f.endswith(".json") and f[:-5].isdigit():
-            with open(os.path.join(log_dir, f)) as fh:
-                if "txn" in json.load(fh):
-                    os.unlink(os.path.join(log_dir, f))
-                    removed += 1
-    assert removed > 0, "precondition: the fold's manifest carried the txn"
+    def crash(src, dst):
+        raise OSError("injected crash in the apply")
+
+    monkeypatch.setattr(S.os, "rename", crash)
+    with pytest.raises(Exception):
+        jobs.run_streaming_agg_maintenance(
+            stream(), store, "gold.t", ["user_id"], ["one"], str(tmp_path / "ck1")
+        )
+    monkeypatch.undo()
     assert store.last_txn_version("gold.t", "stream::gold.t") == 0
     jobs.run_streaming_agg_maintenance(
-        jobs.read_event_stream(spark, event_dir).select(
-            "user_id", F.lit(1).cast("bigint").alias("one")
-        ),
-        store, "gold.t", ["user_id"], ["one"], str(tmp_path / "ck2"),
+        stream(), store, "gold.t", ["user_id"], ["one"], str(tmp_path / "ck1")
     )
     after = {r.user_id: r.one for r in store.read("gold.t").collect()}
-    assert after == before, "sidecar alone must block the double-fold"
+    assert after == want, "the committed marker must block the double-fold"
+    assert store.versions("gold.t")[-1]["txn"] == {
+        "app_id": "stream::gold.t", "version": 0,
+    }
 
 
 def test_stream_static_enrichment_matches_batch(spark, event_dir):

@@ -20,7 +20,6 @@ Usage:
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -217,6 +216,9 @@ def main() -> None:
     budget_s = float(sys.argv[3]) if len(sys.argv) > 3 else 300.0
     narrow_dir = sys.argv[4] if len(sys.argv) > 4 else None
 
+    from delta_lake_gcp_implementation_spark.checkpoints import (
+        owned_checkpoints,
+    )
     from delta_lake_gcp_implementation_spark.plans import CATALOG
     from delta_lake_gcp_implementation_spark.session import get_spark
 
@@ -251,16 +253,22 @@ def main() -> None:
         factors were lower bounds (discovered r15, held for the
         r14/r15 comparability window).  bench.py has always used the
         noop sink, so sweep rows are now methodology-identical to
-        driver numbers; rows-out is no longer observable (None)."""
+        driver numbers; rows-out is no longer observable (None).
+
+        The run owns the checkpoints its builder makes and frees them
+        on exit, outside the timed region (``checkpoints``), so no
+        key's blocks pile into executor storage and inflate later
+        keys (the r12 symptom)."""
         sc.setJobGroup(key, f"100x rehearsal {key}", True)
         cancel = threading.Timer(budget_s, lambda: sc.cancelJobGroup(key))
         cancel.start()
-        t0 = time.perf_counter()
         try:
-            builder(spark, data_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return None, round(time.perf_counter() - t0, 2)
+            with owned_checkpoints():
+                t0 = time.perf_counter()
+                builder(spark, data_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                return None, round(time.perf_counter() - t0, 2)
         finally:
             cancel.cancel()
             sc.setJobGroup("", "")
@@ -332,25 +340,6 @@ def main() -> None:
             out.write(json.dumps(rec) + "\n")
             out.flush()
             print(rec, flush=True)
-            # r12: drop the key's leftovers before the next one runs.
-            # localCheckpoint blocks (ANN codebooks/assignments, fused
-            # shingle frames) persist until the driver GCs the Python
-            # DataFrame and the ContextCleaner runs; across 151 keys
-            # they pile into executor storage memory and show up as
-            # 2-3x inflation on later keys (seven r12 rows needed
-            # manual quiet re-times below the 3x auto-guard).
-            spark.catalog.clearCache()
-            gc.collect()
-            # localCheckpoint blocks live OUTSIDE the SQL CacheManager,
-            # so clearCache() alone leaves them resident; Python gc
-            # only drops the py4j proxies.  A JVM GC makes the freed
-            # RDDs unreachable so the ContextCleaner actually enqueues
-            # their block removals (its own periodic System.gc() is
-            # 30-minute default — far longer than a sweep key).
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:  # noqa: BLE001 - cleanup is best-effort
-                pass
         canary = f"{NARROW_CANARY_KEY}__narrow_canary"
         if narrow_dir and canary not in done:
             rec = {

@@ -17,7 +17,8 @@ times, fast path vs forced full path, interleaved:
 - UPDATE of 100 keys
 
 Appends one JSON row per measurement to the out file:
-``{"op", "path", "s", "files_rewritten", "files_total", "rows"}``.
+``{"op", "path", "s", "files_removed", "files_added", "rows"}`` —
+the file counts come from the commit's ``versions()`` row.
 The full arm runs on the table the pruned arm just mutated (one
 rebuild per round instead of two), so its ``rows`` can read 0 for the
 delete (the keys are already gone) — harmless: a full rewrite's cost
@@ -84,13 +85,13 @@ def main() -> None:
             dt = time.time() - t0
         finally:
             TableStore._file_key_stats = orig
-        m = store._latest_manifest(t)
+        m = store.versions(t)[-1]
         row = {
             "op": op_label,
             "path": "full" if force_full else "pruned",
             "s": round(dt, 2),
-            "files_rewritten": m.get("files_rewritten"),
-            "files_total": m.get("files_total"),
+            "files_removed": m["files_removed"],
+            "files_added": m["files_added"],
             "rows": n,
             "n_rows": n_rows,
         }
@@ -129,7 +130,7 @@ def main() -> None:
     # interleaved A/B, TWO rounds per arm (r12 warm protocol: single
     # mutation timings swing 3-10x on GC/JIT; the artifact carries both
     # rows and the comparison reads the better of each arm).  Rebuild
-    # between arms: the full path leaves the table in one lineage but
+    # between arms: the full path leaves the table rewritten but
     # NOT range-clustered, which would sandbag the pruned arm's input
     # layout.
     # pruned arm runs FIRST on the freshly-clustered table, then the
