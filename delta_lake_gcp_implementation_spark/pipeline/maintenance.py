@@ -43,7 +43,7 @@ def compact(store: TableStore, name: str, target_files: int = 8) -> int:
     shuffle; the files were already hash-scattered by prior writes).
     Returns the new file count."""
     df = store.read(name).coalesce(target_files)
-    store.overwrite(name, df, size_files=False)
+    store.overwrite(name, df)
     return file_count(store, name)
 
 
@@ -58,7 +58,7 @@ def cluster_by(
         .repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
         .sortWithinPartitions(*sort_cols)
     )
-    store.overwrite(name, df, size_files=False)
+    store.overwrite(name, df)
 
 
 def write_partitioned(

@@ -33,6 +33,7 @@ from __future__ import annotations
 import contextvars
 import functools
 import json
+import logging
 import threading
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -40,10 +41,13 @@ from datetime import date, datetime
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..checkpoints import checkpoint, owned_checkpoints
 from ..operators import dedup as dedup_ops
 from .storage import TableStore
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------- shared helpers
 
@@ -71,40 +75,50 @@ def new_batch_id() -> str:
 
 
 def read_watermark(store: TableStore, layer: str) -> str | None:
-    """O1 watermark read: latest successful run's bookmark
-    (``read_watermark.py:29-35``: ORDER BY completed_at DESC LIMIT 1)."""
-    if not store.exists("job_control"):
-        return None
-    jc = store.read("job_control")
-    row = (
-        jc.filter(
-            (F.col("layer") == layer)
-            & (F.col("status") == "SUCCESS")
-            & F.col("last_processed_timestamp").isNotNull()
-        )
-        .orderBy(F.desc("completed_at"), F.desc("batch_id"))
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        return None
-    return row[0].last_processed_timestamp.strftime("%Y-%m-%d %H:%M:%S")
+    """O1 watermark read: latest successful run's bookmark, i.e. the
+    reference's ``ORDER BY completed_at DESC LIMIT 1`` over the
+    layer's SUCCESS rows with a bookmark (``read_watermark.py:29-35``),
+    answered from ``job_control``'s snapshot instead of a scan:
+    :func:`write_job_control` offers every such row's
+    ``[completed_at, batch_id, watermark]`` as the layer's mark, and
+    the snapshot keeps the largest — the scan's own order, so gold-tier
+    threads committing out of ``completed_at`` order cannot move it
+    backwards.  Contract: ``job_control`` is append-only, through
+    :func:`write_job_control`."""
+    head = store.snapshot("job_control")
+    mark = head["marks"].get(f"watermark/{layer}") if head else None
+    return mark[2] if mark else None
 
 
 # 23-column job_control contract (``docs/SCHEMA_REGISTRY.md:53-81``) —
 # the observability half (records_* split, timings, retries, error
 # capture, provenance) powers the RUNBOOK monitoring queries
 # (``bronze/README.md:365-405``).
-JOB_CONTROL_SCHEMA = (
-    "job_name string, layer string, batch_id string, run_mode string, "
-    "status string, processing_date date, start_date date, end_date date, "
-    "last_processed_timestamp timestamp, last_processed_batch_id string, "
-    "records_read long, records_written long, records_failed long, "
-    "records_quarantined long, started_at timestamp, completed_at timestamp, "
-    "duration_seconds long, retry_count long, max_retries long, "
-    "error_message string, triggered_by string, dataproc_cluster string, "
-    "spark_app_id string"
-)
+JOB_CONTROL_SCHEMA = T.StructType([
+    T.StructField("job_name", T.StringType()),
+    T.StructField("layer", T.StringType()),
+    T.StructField("batch_id", T.StringType()),
+    T.StructField("run_mode", T.StringType()),
+    T.StructField("status", T.StringType()),
+    T.StructField("processing_date", T.DateType()),
+    T.StructField("start_date", T.DateType()),
+    T.StructField("end_date", T.DateType()),
+    T.StructField("last_processed_timestamp", T.TimestampType()),
+    T.StructField("last_processed_batch_id", T.StringType()),
+    T.StructField("records_read", T.LongType()),
+    T.StructField("records_written", T.LongType()),
+    T.StructField("records_failed", T.LongType()),
+    T.StructField("records_quarantined", T.LongType()),
+    T.StructField("started_at", T.TimestampType()),
+    T.StructField("completed_at", T.TimestampType()),
+    T.StructField("duration_seconds", T.LongType()),
+    T.StructField("retry_count", T.LongType()),
+    T.StructField("max_retries", T.LongType()),
+    T.StructField("error_message", T.StringType()),
+    T.StructField("triggered_by", T.StringType()),
+    T.StructField("dataproc_cluster", T.StringType()),
+    T.StructField("spark_app_id", T.StringType()),
+])
 
 
 #: Default stage retry budget — the reference DAG's ``retries=2``
@@ -112,8 +126,9 @@ JOB_CONTROL_SCHEMA = (
 DEFAULT_STAGE_RETRIES = 2
 
 #: job_control is the one table every stage appends to; with the gold
-#: dimension tier running stages concurrently (run_incremental), its
-#: single-writer-per-table commit contract needs this lock.
+#: dimension tier running stages concurrently (run_incremental), two
+#: optimistic claims on it would race (``ConcurrentWriteError``), so
+#: its appends are serialized.
 _JOB_CONTROL_LOCK = threading.Lock()
 
 #: Ambient (retry_count, max_retries) for the CURRENTLY running stage,
@@ -178,49 +193,46 @@ def write_job_control(
         retry_count = _STAGE_RETRY.get()[0]
     if max_retries is None:
         max_retries = _STAGE_RETRY.get()[1]
-    # concurrent gold-tier stages (run_incremental) both append here;
-    # commit versions are single-writer per table, so serialize the
-    # one shared-table write
     now = datetime.utcnow()
     wm_ts = (
         datetime.strptime(watermark, "%Y-%m-%d %H:%M:%S")
         if watermark is not None
         else None
     )
-    row = [
-        (
-            job_name, layer, batch_id, run_mode, status,
-            now.date(),
-            date.fromisoformat(start_date) if start_date else None,
-            date.fromisoformat(end_date) if end_date else None,
-            wm_ts,
-            None,  # last_processed_batch_id: previous batch, filled by orchestrator
-            records_read if records_read is not None else records_written,
-            records_written,
-            records_failed,
-            records_quarantined,
-            started_at or now,
-            now,
-            int((now - started_at).total_seconds()) if started_at else 0,
-            retry_count,
-            max_retries,
-            error_message,
-            triggered_by,
-            "local",  # dataproc_cluster analog: execution environment name
-            store.spark.sparkContext.applicationId,
-        )
-    ]
-    # one literal row: build it as ONE partition and skip the
-    # rebalance sizing pass — plain createDataFrame slices even a
-    # single row across defaultParallelism empty partitions, and
-    # isLocal() is False for parallelized data, so every stage's
-    # bookkeeping append was paying a 32-task shuffle (r15 profile:
-    # a ~0.5 s 32+33-task job pair at the end of every stage)
-    df = store.spark.createDataFrame(
-        store.spark.sparkContext.parallelize(row, 1), JOB_CONTROL_SCHEMA
+    row = (
+        job_name, layer, batch_id, run_mode, status,
+        now.date(),
+        date.fromisoformat(start_date) if start_date else None,
+        date.fromisoformat(end_date) if end_date else None,
+        wm_ts,
+        None,  # last_processed_batch_id: previous batch, filled by orchestrator
+        records_read if records_read is not None else records_written,
+        records_written,
+        records_failed,
+        records_quarantined,
+        started_at or now,
+        now,
+        int((now - started_at).total_seconds()) if started_at else 0,
+        retry_count,
+        max_retries,
+        error_message,
+        triggered_by,
+        "local",  # dataproc_cluster analog: execution environment name
+        store.spark.sparkContext.applicationId,
     )
+    mark = None
+    if status == "SUCCESS" and watermark is not None:
+        # the snapshot keeps the largest [completed_at, batch_id, wm]
+        # per layer — read_watermark's answer (see its docstring)
+        mark = (
+            f"watermark/{layer}",
+            [
+                now.isoformat(timespec="microseconds"), batch_id,
+                wm_ts.strftime("%Y-%m-%d %H:%M:%S"),
+            ],
+        )
     with _JOB_CONTROL_LOCK:
-        store.append("job_control", df, size_files=False)
+        store.append_rows("job_control", [row], JOB_CONTROL_SCHEMA, mark=mark)
 
 
 def typed_cast(raw: DataFrame) -> DataFrame:
@@ -1231,10 +1243,10 @@ def run_stage_with_retries(
             return fn()
         except Exception as exc:
             if attempt >= max_retries:
-                # Best-effort bookkeeping: a storage-rooted stage
-                # failure would make this append fail the same way,
-                # and that secondary error must not mask the stage's
-                # own exception (the one the caller needs).
+                # a storage-rooted stage failure can make this append
+                # fail the same way; that secondary error is logged but
+                # must not mask the stage's own exception (the one the
+                # caller needs)
                 try:
                     write_job_control(
                         store, job_name, layer, batch_id, "incremental",
@@ -1247,8 +1259,12 @@ def run_stage_with_retries(
                         {"status": "FAILED", "retry_count": attempt,
                          "max_retries": max_retries},
                     )
-                except Exception:
-                    pass
+                except Exception as bookkeeping_exc:
+                    _log.warning(
+                        "stage %s failed and its FAILED job_control row "
+                        "could not be written: %r", job_name,
+                        bookkeeping_exc,
+                    )
                 raise
             attempt += 1
         finally:

@@ -15,7 +15,10 @@ the live dir is untouched and the stage is garbage ``vacuum``
 removes; after the claim the next access finds the head's stage still
 present and rolls the apply forward.  Counts, txn markers, schema,
 pruning stats and time travel are all answered from one commit file,
-never from a directory listing or a footer re-read.
+never from a directory listing or a footer re-read.  Each snapshot also
+carries a ``marks`` map — per key the largest value any commit offered
+(``append_rows(..., mark=...)``) — so a reader answers "latest X" from
+the head instead of scanning the table (the medallion's watermarks).
 """
 
 from __future__ import annotations
@@ -30,10 +33,12 @@ import time
 import uuid
 from functools import reduce
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..checkpoints import checkpoint, owned_checkpoints
 from ..operators.sizing import maybe_broadcast
@@ -130,6 +135,13 @@ def _nullable(dtype):
             _nullable(dtype.keyType), _nullable(dtype.valueType), True
         )
     return dtype
+
+
+def _column_mismatch(name: str, dcols: set, tcols: set) -> str:
+    return (
+        f"append to {name}: batch schema {sorted(dcols)} != "
+        f"table schema {sorted(tcols)}"
+    )
 
 
 def _move(src: str, dst: str) -> None:
@@ -438,20 +450,11 @@ class TableStore:
 
     def append(
         self, name: str, df: DataFrame, allow_schema_evolution: bool = False,
-        txn: tuple[str, int] | None = None, size_files: bool = True,
+        txn: tuple[str, int] | None = None,
     ) -> int:
-        """S5 INSERT INTO; returns the number of rows appended.
-
-        ``size_files`` controls the rebalance sizing shuffle (the
-        Delta optimizeWrite analog, on by default for appends — see
-        ``_optimize_write``); the same knob on :meth:`overwrite`
-        defaults off because replace inputs end in an exchange AQE
-        already coalesces.  One name, one sense, different defaults
-        (the r15 ADVICE ambiguity was the same knob spelled
-        ``optimize`` with sense readers had to infer per site).
-        ``size_files=False`` skips the shuffle — for
-        literal-scale bookkeeping rows (job_control) whose parallelized
-        frames defeat the ``isLocal()`` fast path (r15).
+        """S5 INSERT INTO; returns the number of rows appended.  The
+        batch goes through the rebalance sizing shuffle first (the
+        Delta optimizeWrite analog, see ``_optimize_write``).
 
         ``txn=(app_id, version)``: idempotent-writer marker, recorded
         in the same commit as the appended files (marker present iff
@@ -475,8 +478,7 @@ class TableStore:
             if tcols != dcols:
                 if not allow_schema_evolution:
                     raise ValueError(
-                        f"append to {name}: batch schema {sorted(dcols)} != "
-                        f"table schema {sorted(tcols)}; pass "
+                        _column_mismatch(name, dcols, tcols) + "; pass "
                         "allow_schema_evolution=True to merge schemas"
                     )
                 if dcols - tcols:
@@ -494,10 +496,46 @@ class TableStore:
                             f.name, F.lit(None).cast(f.dataType)
                         )
                 df = df.select(*[f.name for f in target_schema.fields])
-        out = self._optimize_write(df) if size_files else df
-        return self._rows_added(
-            self._publish(name, "append", self._stage(name, out), txn=txn)
+        return self._rows_added(self._publish(
+            name, "append", self._stage(name, self._optimize_write(df)),
+            txn=txn,
+        ))
+
+    def append_rows(
+        self, name: str, rows: list[tuple], schema: T.StructType,
+        mark: tuple[str, list] | None = None,
+    ) -> int:
+        """INSERT INTO for rows the driver already holds (bookkeeping
+        such as ``job_control``), without a Spark job: each value is
+        converted with its Spark type's own ``toInternal`` — so a naive
+        ``datetime`` means exactly what ``createDataFrame`` makes it
+        mean — and the rows become one pyarrow-written parquet file in
+        a fresh stage, published like any append.  A column set that
+        differs from the table's is refused, as :meth:`append` does
+        without schema evolution.  ``mark=(key, value)`` offers
+        ``value`` for the snapshot's mark ``key`` (see ``_commit``).
+        Returns the number of rows appended."""
+        started = time.perf_counter()
+        head = self.snapshot(name)
+        if head is not None:
+            tcols, dcols = set(self._schema(head).names), set(schema.names)
+            if tcols != dcols:
+                raise ValueError(_column_mismatch(name, dcols, tcols))
+        table = pa.table({
+            f.name: pa.array(
+                [f.dataType.toInternal(v) for v in col],
+                to_arrow_type(f.dataType),
+            )
+            for f, col in zip(schema.fields, zip(*rows))
+        })
+        stage = self._stage_dir(name)
+        os.makedirs(stage)
+        pq.write_table(
+            table, os.path.join(stage, f"part-{uuid.uuid4().hex}.parquet")
         )
+        return self._rows_added(self._publish(
+            name, "append", (stage, _nullable(schema), started), mark=mark
+        ))
 
     @staticmethod
     def _optimize_write(df: DataFrame) -> DataFrame:
@@ -518,22 +556,15 @@ class TableStore:
         return df.hint("rebalance")
 
     def overwrite(
-        self, name: str, df: DataFrame, size_files: bool = False,
-        txn: tuple[str, int] | None = None,
+        self, name: str, df: DataFrame, txn: tuple[str, int] | None = None,
     ) -> int:
         """S6 INSERT OVERWRITE: full replace, schema preserved by the
         caller passing an explicitly-projected frame.  Returns rows
-        written.
-
-        ``size_files=True`` forces the rebalance shuffle for frames
-        with no exchange of their own (rare for overwrites — replace
-        inputs are joins/windows whose last shuffle AQE already
-        coalesces to advisory-sized partitions, so a second shuffle
-        would be pure overhead, locally and at 100 TB alike; same
-        knob and sense as :meth:`append`, which defaults on)."""
-        return self._replace(
-            name, self._optimize_write(df) if size_files else df, txn=txn
-        )
+        written.  No rebalance sizing shuffle: replace inputs are
+        joins/windows whose last shuffle AQE already coalesces to
+        advisory-sized partitions, so a second shuffle would be pure
+        overhead, locally and at 100 TB alike."""
+        return self._replace(name, df, txn=txn)
 
     # --------------------------------------- file-granular MERGE (pruning)
     #
@@ -1090,6 +1121,10 @@ class TableStore:
 
     # ---------------------------------------------------------------- internals
 
+    def _stage_dir(self, name: str) -> str:
+        """A fresh stage dir path for one write to ``name``."""
+        return f"{self.path(name)}.__stage__{uuid.uuid4().hex[:8]}"
+
     def _stage(
         self, name: str, df: DataFrame, partition_by: tuple[str, ...] = ()
     ) -> tuple[str, T.StructType, float]:
@@ -1097,7 +1132,7 @@ class TableStore:
         started)``: the schema as Spark reads the files back (nullable,
         partition columns last) and the write's start time."""
         started = time.perf_counter()
-        stage = f"{self.path(name)}.__stage__{uuid.uuid4().hex[:8]}"
+        stage = self._stage_dir(name)
         writer = df.write
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -1134,12 +1169,14 @@ class TableStore:
         stage: tuple[str, T.StructType, float] | None = None,
         remove=(),
         txn: tuple[str, int] | None = None,
+        mark: tuple[str, list] | None = None,
     ) -> dict:
         """The one write path: heal the head, describe the stage's
         files (``_entries``), claim version head+1 for head − ``remove``
         + those files (``_commit``), then apply it (``_apply``).
-        ``stage`` is a ``_stage`` result, or None for a commit that
-        moves no data.  Returns the commit."""
+        ``stage`` is a ``_stage`` result (or the same triple for a
+        driver-written stage), or None for a commit that moves no
+        data.  Returns the commit."""
         started = time.perf_counter()
         head = self.snapshot(name)
         adds, schema, stage_dir = {}, None, None
@@ -1152,7 +1189,7 @@ class TableStore:
                 schema = None
         commit = self._commit(
             name, op, adds, remove, txn, schema, stage_dir,
-            time.perf_counter() - started,
+            time.perf_counter() - started, mark=mark,
         )
         self._apply(name, commit)
         if head is None or commit["remove"] or commit["schema"] != head["schema"]:
@@ -1171,9 +1208,14 @@ class TableStore:
         schema: T.StructType | None = None,
         stage: str | None = None,
         duration_s: float = 0.0,
+        mark: tuple[str, list] | None = None,
     ) -> dict:
         """Claim version head+1 for the snapshot head − ``remove`` +
-        ``adds`` (Delta's commit protocol).  The claim is an
+        ``adds`` (Delta's commit protocol).  The head's ``txns`` and
+        ``marks`` maps carry over; ``mark=(key, value)`` keeps the
+        larger of the stored and the new value (lists compare
+        lexicographically), so commits landing out of order never move
+        a mark backwards.  The claim is an
         ``os.link`` of a fully written temp file, which — unlike
         ``os.rename`` — fails if the slot exists: of two racing
         writers exactly one wins and the loser gets
@@ -1193,6 +1235,11 @@ class TableStore:
         txns = dict(head["txns"]) if head else {}
         if txn is not None:
             txns[txn[0]] = int(txn[1])
+        marks = dict(head["marks"]) if head else {}
+        if mark is not None and (
+            mark[0] not in marks or marks[mark[0]] < mark[1]
+        ):
+            marks[mark[0]] = mark[1]
         if schema is not None:
             schema_json = schema.jsonValue()
         else:
@@ -1210,6 +1257,7 @@ class TableStore:
             "remove": sorted(remove),
             "schema": schema_json,
             "txns": txns,
+            "marks": marks,
             "files": files,
         }
         log = self._log_dir(name)

@@ -18,9 +18,10 @@ def store(spark, tmp_path):
 
 def test_compact_reduces_file_count(spark, store, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    # size_files=False mimics a table fragmented by accumulated external
-    # writes (optimizeWrite would refuse to create this state itself)
-    store.overwrite("t.events", ev.repartition(37), size_files=False)
+    # an overwrite keeps its input's partitioning: this mimics a table
+    # fragmented by accumulated external writes (an append's
+    # optimizeWrite would refuse to create this state itself)
+    store.overwrite("t.events", ev.repartition(37))
     assert mt.file_count(store, "t.events") == 37
     n = mt.compact(store, "t.events", target_files=4)
     assert n <= 4

@@ -52,6 +52,38 @@ def _layout_problems(store) -> list[str]:
     return problems
 
 
+def _scan_watermark(store, layer):
+    """The reference's watermark query, a scan of job_control
+    (``read_watermark.py:29-35``: ORDER BY completed_at DESC LIMIT 1),
+    kept here as the oracle for ``medallion.read_watermark``."""
+    if not store.exists("job_control"):
+        return None
+    row = (
+        store.read("job_control").filter(
+            (F.col("layer") == layer)
+            & (F.col("status") == "SUCCESS")
+            & F.col("last_processed_timestamp").isNotNull()
+        )
+        .orderBy(F.desc("completed_at"), F.desc("batch_id"))
+        .limit(1)
+        .collect()
+    )
+    if not row:
+        return None
+    return row[0].last_processed_timestamp.strftime("%Y-%m-%d %H:%M:%S")
+
+
+def _watermark_mismatches(store) -> dict:
+    """Layers whose snapshot watermark differs from the scan's."""
+    out = {}
+    for layer in ("bronze", "silver", "gold"):
+        got = medallion.read_watermark(store, layer)
+        want = _scan_watermark(store, layer)
+        if got != want:
+            out[layer] = (got, want)
+    return out
+
+
 @pytest.fixture(scope="module")
 def day1_run(spark, tmp_path_factory):
     """Shared day-1 pipeline state for READ-ONLY assertions (one
@@ -74,11 +106,13 @@ def day1_run(spark, tmp_path_factory):
         n_bronze = store.count("bronze.transactions")
         n_silver = store.count("silver.transactions")
         layout_after_1 = _layout_problems(store)
+        wm_after_1 = _watermark_mismatches(store)
         rerun = medallion.run_incremental(store, raw)
     return {
         "store": store,
         "r1": r1,
         "layout_after_1": layout_after_1,
+        "wm_after_1": wm_after_1,
         "counts": counts,
         "rerun": rerun,
         "n_bronze_after_1": n_bronze,
@@ -135,6 +169,20 @@ def test_idempotent_rerun(day1_run):
     staging = store.read("silver.transactions_staging")
     assert staging.count() == 0
     assert staging.columns == medallion.SILVER_COLS
+
+
+def test_watermarks_equal_the_scan_after_run_and_replay(day1_run):
+    store = day1_run["store"]
+    assert day1_run["wm_after_1"] == {}
+    assert _watermark_mismatches(store) == {}
+    assert all(
+        medallion.read_watermark(store, layer) is not None
+        for layer in ("bronze", "silver", "gold")
+    )
+
+
+def test_watermarks_equal_the_scan_after_a_second_day(day12_run):
+    assert _watermark_mismatches(day12_run["store"]) == {}
 
 
 def test_live_dirs_match_the_log_after_run_and_replay(day1_run):
@@ -598,6 +646,100 @@ def test_permanent_stage_failure_recorded_failed_after_max_retries(
     assert "permanent schema drift" in row.error_message
     # the failure must NOT advance the bronze watermark
     assert medallion.read_watermark(store, "bronze") is None
+    assert _watermark_mismatches(store) == {}
+
+
+def test_failed_row_write_error_is_logged_and_stage_error_raised(
+    store, monkeypatch, caplog
+):
+    """When the FAILED job_control row cannot be written after the
+    retry budget is spent, the runner logs a warning naming the stage
+    and the bookkeeping error, and still raises the stage's own
+    exception."""
+    import logging
+
+    def stage():
+        raise RuntimeError("injected stage failure")
+
+    def bookkeeping(*a, **kw):
+        raise OSError("injected job_control write failure")
+
+    monkeypatch.setattr(medallion, "write_job_control", bookkeeping)
+    with caplog.at_level(logging.WARNING, logger=medallion.__name__):
+        with pytest.raises(RuntimeError, match="injected stage failure"):
+            medallion.run_stage_with_retries(
+                store, "load_bronze", "bronze", "BATCH_X", stage,
+                max_retries=0,
+            )
+    assert any(
+        "load_bronze" in r.getMessage()
+        and "injected job_control write failure" in r.getMessage()
+        for r in caplog.records
+    ), [r.getMessage() for r in caplog.records]
+
+
+def test_concurrent_job_control_writers_keep_the_latest_watermark(store):
+    """Threads appending job_control rows at once (the gold tier does)
+    commit in any order; every row lands, and the watermark stays the
+    one the reference scan picks (latest completed_at, then batch_id),
+    so a late committer with an earlier completed_at cannot move it
+    back."""
+    import sys
+    import threading
+
+    errors = []
+
+    def writer(i):
+        try:
+            for j in range(4):
+                medallion.write_job_control(
+                    store, f"stage{i}", "gold", f"BATCH_{i}_{j}",
+                    "incremental", "SUCCESS",
+                    f"2024-01-{1 + (7 * i + j) % 28:02d} 00:00:00", j,
+                )
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert store.count("job_control") == 32
+    assert _watermark_mismatches(store) == {}
+
+
+def test_bookkeeping_launches_no_spark_job(spark, store):
+    """Job floor: a job_control append and a watermark read run on the
+    driver alone — no Spark job in their job group."""
+    import uuid
+
+    medallion.write_job_control(
+        store, "load_bronze", "bronze", "BATCH_0", "incremental", "SUCCESS",
+        "2024-01-01 00:00:00", 1,
+    )
+    sc = spark.sparkContext
+    group = f"bookkeeping-{uuid.uuid4().hex[:8]}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        medallion.write_job_control(
+            store, "load_bronze", "bronze", "BATCH_1", "incremental",
+            "SUCCESS", "2024-01-02 03:04:05", 5,
+        )
+        wm = medallion.read_watermark(store, "bronze")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert wm == "2024-01-02 03:04:05"
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert store.count("job_control") == 2
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
@@ -680,5 +822,6 @@ def test_concurrent_gold_tier_with_pruned_merges(
     fact = store.read("gold.fact_transactions")
     assert fact.count() == n_fact
     assert fact.select("transaction_id").distinct().count() == fact.count()
+    assert _watermark_mismatches(store) == {}
     leaked = _persistent_rdd_ids(spark) - pre
     assert leaked == set(), f"checkpoints leaked: {leaked}"

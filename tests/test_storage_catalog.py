@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from delta_lake_gcp_implementation_spark.operators import dedup as dedup_ops
 from delta_lake_gcp_implementation_spark.operators.sizing import (
@@ -1204,6 +1205,11 @@ def _crash_table(spark, store, name):
     store.overwrite(name, df.repartitionByRange(4, "k"))
 
 
+_KV = T.StructType([
+    T.StructField("k", T.LongType()), T.StructField("v", T.LongType()),
+])
+
+
 def _crash_op(spark, store, name, op):
     def rows(ks, v):
         return spark.createDataFrame([(k, v) for k in ks], "k bigint, v bigint")
@@ -1225,6 +1231,8 @@ def _crash_op(spark, store, name, op):
         )
     elif op == "txn_append":
         store.append(name, rows([3000], 1), txn=("app", 4))
+    elif op == "append_rows":
+        store.append_rows(name, [(1000, 7), (1001, None)], _KV)
 
 
 @pytest.mark.parametrize("failure", ["claim", "apply"])
@@ -1232,7 +1240,7 @@ def _crash_op(spark, store, name, op):
     "op",
     [
         "append", "overwrite", "pruned_upsert", "full_upsert",
-        "delete_matched", "update_matched", "txn_append",
+        "delete_matched", "update_matched", "txn_append", "append_rows",
     ],
 )
 def test_write_crash_leaves_prior_or_committed_state(
@@ -1288,3 +1296,144 @@ def test_write_crash_leaves_prior_or_committed_state(
         if op == "txn_append":
             assert store.last_txn_version(t, "app") == 4
     _assert_layout(store, t)
+
+
+# ------------------------------------- driver-written rows and marks
+
+
+def test_append_rows_mark_keeps_the_largest_value(spark, tmp_path):
+    """A mark offered by ``append_rows`` replaces the stored one only
+    when it is larger (lists compare lexicographically); an older mark
+    leaves the stored one in place, and commits that offer no mark
+    carry it over.  A column set that differs from the table's is
+    refused, as ``append`` refuses it."""
+    store = TableStore(spark, str(tmp_path))
+    t = "db.marks"
+    newer = ["2024-01-02T00:00:00.000001", "BATCH_b", "2024-01-01 10:00:00"]
+    older = ["2024-01-02T00:00:00.000000", "BATCH_z", "2024-01-09 10:00:00"]
+    assert store.append_rows(t, [(1, 1), (2, None)], _KV, mark=("m", newer)) == 2
+    store.append_rows(t, [(3, 3)], _KV, mark=("m", older))
+    assert store.snapshot(t)["marks"] == {"m": newer}
+    store.append(t, spark.createDataFrame([(4, 4)], "k bigint, v bigint"))
+    store.append_rows(t, [(5, 5)], _KV, mark=("other", ["x"]))
+    assert TableStore(spark, str(tmp_path)).snapshot(t)["marks"] == {
+        "m": newer, "other": ["x"],
+    }
+    tie = newer[:1] + ["BATCH_c", "2024-01-01 11:00:00"]
+    store.append_rows(t, [(6, 6)], _KV, mark=("m", tie))
+    assert store.snapshot(t)["marks"]["m"] == tie
+    assert sorted(store.read(t).collect()) == [
+        (1, 1), (2, None), (3, 3), (4, 4), (5, 5), (6, 6),
+    ]
+    assert store.count(t) == 6
+    with pytest.raises(ValueError, match="batch schema"):
+        store.append_rows(
+            t, [(7,)], T.StructType([T.StructField("k", T.LongType())])
+        )
+    assert store.count(t) == 6
+    _assert_layout(store, t)
+
+
+def _check_mixed_job_control(spark, root):
+    """Two job_control rows written by Spark (INT96 timestamps) and two
+    by ``append_rows`` (INT64 micros) in one directory read back
+    row-identical to ``createDataFrame`` over the same Python values —
+    as collected rows, as timestamp text in the session time zone, and
+    through the catalog table."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from delta_lake_gcp_implementation_spark.pipeline.medallion import (
+        JOB_CONTROL_SCHEMA,
+    )
+
+    def row(i, ts, day):
+        return (
+            f"job{i}", "bronze", f"BATCH_{i}", "incremental", "SUCCESS",
+            day.date(), day.date(), None, ts, None, 10 + i, 9 + i, 1, 0,
+            ts, ts.replace(microsecond=123456 + i), 42, 0, 2,
+            None if i % 2 else "boom", "pipeline", "local", "app-1",
+        )
+
+    from datetime import datetime
+
+    rows = [
+        row(0, datetime(2024, 1, 15, 23, 59, 59), datetime(2024, 1, 15)),
+        row(1, datetime(2024, 7, 1, 0, 30, 5, 7), datetime(2024, 7, 1)),
+        row(2, datetime(2024, 3, 10, 2, 30, 0), datetime(2024, 3, 10)),
+        row(3, datetime(2024, 11, 3, 1, 30, 0, 999999), datetime(2024, 11, 3)),
+    ]
+    store = TableStore(spark, root)
+    store.append(
+        "job_control", spark.createDataFrame(rows[:2], JOB_CONTROL_SCHEMA)
+    )
+    store.append_rows("job_control", rows[2:], JOB_CONTROL_SCHEMA)
+    files = glob.glob(f"{store.path('job_control')}/*.parquet")
+    physical = {
+        pq.read_metadata(f).schema.column(14).physical_type for f in files
+    }
+    assert physical == {"INT96", "INT64"}, physical
+
+    def collected(df):
+        return sorted(df.collect(), key=lambda r: r.job_name)
+
+    def as_text(df):
+        return sorted(
+            tuple(r) for r in df.select(
+                *[F.col(c).cast("string") for c in df.columns]
+            ).collect()
+        )
+
+    ref = spark.createDataFrame(rows, JOB_CONTROL_SCHEMA)
+    got = store.read("job_control")
+    assert collected(got) == collected(ref)
+    assert as_text(got) == as_text(ref)
+    assert as_text(spark.table("default.job_control")) == as_text(ref)
+
+
+def test_mixed_job_control_files_read_back_identically_non_utc_session(
+    spark, tmp_path
+):
+    """The mixed Spark/pyarrow directory under a non-UTC session time
+    zone (the session's zone drives timestamp text and casts)."""
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        _check_mixed_job_control(spark, str(tmp_path / "wh"))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+
+
+def test_mixed_job_control_files_read_back_identically_non_utc_process(
+    tmp_path
+):
+    """The same check in a fresh process whose local time zone (what a
+    naive ``datetime`` means to ``toInternal``) is New York, under a
+    Los Angeles session."""
+    import os
+    import subprocess
+    import sys
+
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    script = (
+        "import sys\n"
+        "sys.path[:0] = sys.argv[1:3]\n"
+        "from delta_lake_gcp_implementation_spark.session import get_spark\n"
+        "import test_storage_catalog as t\n"
+        "spark = get_spark(app_name='tz', master='local[1]',"
+        " shuffle_partitions=1, extra_conf={"
+        "'spark.driver.memory': '1g',"
+        " 'spark.sql.session.timeZone': 'America/Los_Angeles'})\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "t._check_mixed_job_control(spark, sys.argv[3])\n"
+        "spark.stop()\n"
+        "print('MIXED_OK')\n"
+    )
+    env = dict(os.environ, TZ="America/New_York")
+    out = subprocess.run(
+        [sys.executable, "-c", script, os.path.dirname(tests_dir), tests_dir,
+         str(tmp_path / "wh")],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "MIXED_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-4000:]
