@@ -10,15 +10,18 @@ Stage map (reference citations in each function):
 - C4  full_refresh_bronze — no filter, INSERT OVERWRITE, watermark reset
 - C5  validate/load_silver — W2 CDC collapse + single-key MERGE
 - C6  gdpr_delete       — Bronze soft delete + Silver hard delete
-- C7  scd2_dim_customer — SCD Type 2 maintenance (tier changes)
+- C7  scd2_dim_customer / scd2_dim_merchant — SCD Type 2, one MERGE commit per run
 - C8  build_fact        — star join + derived measures + null-FK audit
 - C9  static_dims       — DISTINCT + surrogate keys + enrichment
 - C10 build_dim_date    — native sequence() date spine
 
 The in-process :func:`run_incremental` replaces Airflow: stages run in
-dependency order against one SparkSession, handing off through staging
-tables exactly like the reference (the staging table IS the IR,
-``docs/Gold_Layer_Developer_Guide.md:59-83``).
+dependency order against one SparkSession.  Bronze, Silver and the fact
+hand off through staging tables like the reference (the staging table
+IS the IR, ``docs/Gold_Layer_Developer_Guide.md:59-83``), and each
+staging write observes its stage's watermark and audit counts.  The
+SCD2 dims need no staging table: each run's closed and new versions
+are one checkpointed frame, merged into the dim in one commit.
 
 Scale notes: every stage is a declarative DataFrame plan — filters
 reach the parquet scan, dims broadcast in the fact join, dedup windows
@@ -39,7 +42,7 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -291,7 +294,7 @@ def _batch_cutoff():
 
 def _scoped_checkpoints(fn):
     """Free a stage's localCheckpoint blocks when it exits: the SCD2
-    rollup / validation-slice checkpoints are consumed entirely inside
+    changes / validation-slice checkpoints are consumed entirely inside
     their stage, and a long-lived driver never GCs them in time.  The
     stage owns only the checkpoints it made, so the gold-tier stages
     running side by side cannot free each other's (``checkpoints``)."""
@@ -738,9 +741,13 @@ def run_silver(store: TableStore, batch_id: str) -> dict:
     latest = dedup_ops.keep_latest(
         live, ["transaction_id"], "updated_at", [F.col("transaction_id")]
     ).select(*SILVER_COLS)
-    # staging write observes its own count; before/after are O(1) meta
-    # reads; the only extra job left is the watermark aggregation
-    n = store.overwrite("silver.transactions_staging", latest)
+    # the staging write observes its own watermark; its row count and
+    # before/after are O(1) meta reads — no extra job
+    observed = Observation()
+    n = store.overwrite("silver.transactions_staging", latest.observe(
+        observed,
+        F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm"),
+    ))
     staged = store.read("silver.transactions_staging")
     n_before = store.count("silver.transactions")
     # no new rows -> skip the MERGE (string key defeats file pruning;
@@ -751,10 +758,7 @@ def run_silver(store: TableStore, batch_id: str) -> dict:
         else store.upsert("silver.transactions", staged, ["transaction_id"])
         - n_before
     )
-    new_wm_rows = staged.agg(
-        F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm")
-    ).collect()
-    new_wm = new_wm_rows[0].wm if n > 0 else wm
+    new_wm = observed.get["wm"] if n > 0 else wm
     write_job_control(
         store, "load_silver", "silver", batch_id, "incremental", "SUCCESS",
         new_wm, n, records_read=n, started_at=started,
@@ -815,15 +819,114 @@ def gdpr_delete(store: TableStore, customer_id: str, batch_id: str) -> dict:
 
 
 @_scoped_checkpoints
+def _scd2_merge(
+    store: TableStore, batch_id: str, job_name: str, dim_name: str,
+    key: str, member: str, tracked: str, rollup: DataFrame, dim_cols,
+    replace_same_day: bool,
+) -> dict:
+    """One SCD Type 2 run of ``dim_name`` as ONE MERGE commit, the shape
+    of Delta's SCD2 MERGE.  ``rollup`` has one row per ``member``;
+    ``dim_cols(df, key_col)`` projects it to the dim contract as a new
+    current version.  The first build keys every member densely.  After
+    that, ONE left join of the rollup with the current versions yields
+    the ``changes`` frame:
+
+    - a new version for each new member and each member whose
+      ``tracked`` attribute changed (J3 + J2), keyed ``max_key +
+      row_number()`` over ``member`` (A8 seed + W3);
+    - the closed version of each changed member: its own key,
+      ``is_current=false``, end date today − 1;
+    - with ``replace_same_day``, a change to a version opened today
+      replaces that version in place under its key instead (no closed
+      row with end < start, and fact rows keep their dim row).
+
+    The frame is materialized once and that action observes the
+    inserted/closed counts; ``upsert`` on the surrogate key then
+    replaces the closed versions and adds the new ones in one commit,
+    and is skipped when nothing changed."""
+    if not store.exists(dim_name):
+        n_inserted = store.overwrite(dim_name, dim_cols(
+            rollup,
+            F.row_number().over(Window.orderBy(member)).cast("bigint").alias(key),
+        ))
+        n_closed = 0
+    else:
+        dim = store.read(dim_name)
+        max_key = dim.agg(
+            F.coalesce(F.max(key), F.lit(0)).alias("mk")
+        ).collect()[0].mk
+        j = rollup.alias("a").join(
+            dim.filter(F.col("is_current") == True).alias("d"),  # noqa: E712
+            F.col(f"a.{member}") == F.col(f"d.{member}"),
+            "left",
+        )
+        # a new member (no current version) is not a change
+        changed = F.coalesce(
+            F.col(f"a.{tracked}") != F.col(f"d.{tracked}"), F.lit(False)
+        )
+        in_place = (
+            changed & (F.col("d.effective_start_date") >= F.current_date())
+            if replace_same_day else F.lit(False)
+        )
+        versions = j.filter(F.col(f"d.{key}").isNull() | changed).select(
+            "a.*",
+            in_place.alias("__in_place"),
+            F.col(f"d.{key}").alias("__key"),
+        )
+        # in-place rows sort last, so the new keys stay dense
+        new_key = F.row_number().over(
+            Window.orderBy("__in_place", member)
+        ) + F.lit(max_key)
+        closed = j.filter(changed & ~in_place).select("d.*").withColumns({
+            "is_current": F.lit(False),
+            "effective_end_date": F.date_sub(F.current_date(), 1),
+        })
+        counts = Observation()
+        changes = (
+            dim_cols(
+                versions,
+                F.when(F.col("__in_place"), F.col("__key"))
+                .otherwise(new_key).cast("bigint").alias(key),
+            )
+            .unionByName(closed)
+            .observe(
+                counts,
+                F.count(F.when(F.col("is_current"), 1)).alias("inserted"),
+                F.count(F.when(~F.col("is_current"), 1)).alias("closed"),
+            )
+            .transform(checkpoint)
+        )
+        n_inserted, n_closed = counts.get["inserted"], counts.get["closed"]
+        if n_inserted or n_closed:
+            store.upsert(dim_name, changes, [key])
+    write_job_control(
+        store, job_name, "gold", batch_id, "incremental", "SUCCESS", None,
+        n_inserted,
+    )
+    result = {"inserted": n_inserted, "closed": n_closed}
+    emit_result(job_name, result)
+    return result
+
+
+def _scd2_audit_cols() -> list:
+    """Audit and validity columns of a new current dim version."""
+    return [
+        F.current_timestamp().alias("loaded_at"),
+        F.lit("payment_gateway").alias("source_system"),
+        F.current_date().alias("effective_start_date"),
+        F.lit("9999-12-31").cast("date").alias("effective_end_date"),
+        F.lit(True).alias("is_current"),
+    ]
+
+
 def scd2_dim_customer(store: TableStore, batch_id: str) -> dict:
     """C7 SCD Type 2 on customer tier (``gold_dim_customer_scd2.py:26-240``):
-    A2 rollup -> A8 key seed -> J3 anti-join new members -> J2 change
-    detection -> close old versions -> W3 re-key + insert new versions.
+    A2 rollup, then :func:`_scd2_merge`.  No same-day guard: the
+    reference customer job closes a version opened today too.
 
     Dense surrogate keys use a global window — reference parity for
     *small dims only* (SURVEY.md section 4)."""
-    silver = store.read("silver.transactions")
-    agg = silver.groupBy("customer_id").agg(
+    agg = store.read("silver.transactions").groupBy("customer_id").agg(
         F.count("*").alias("transaction_count"),
         F.min("transaction_timestamp").alias("first_transaction_date"),
         F.max("transaction_timestamp").alias("last_transaction_date"),
@@ -839,10 +942,6 @@ def scd2_dim_customer(store: TableStore, batch_id: str) -> dict:
         .otherwise("Bronze"),
     )
 
-    dim_name = "gold.dim_customer"
-    today = F.current_date()
-    far_future = F.lit("9999-12-31").cast("date")
-
     def dim_cols(df, key_col):
         """12-column dim_customer contract
         (``docs/SCHEMA_REGISTRY.md:197-214``)."""
@@ -857,97 +956,26 @@ def scd2_dim_customer(store: TableStore, batch_id: str) -> dict:
                 "last_transaction_date"
             ),
             F.col("lifetime_value").cast("double").alias("lifetime_value"),
-            F.current_timestamp().alias("loaded_at"),
-            F.lit("payment_gateway").alias("source_system"),
-            today.alias("effective_start_date"),
-            far_future.alias("effective_end_date"),
-            F.lit(True).alias("is_current"),
+            *_scd2_audit_cols(),
         )
 
-    if not store.exists(dim_name):
-        w = Window.orderBy("customer_id")
-        initial = dim_cols(
-            agg, F.row_number().over(w).cast("bigint").alias("customer_key")
-        )
-        store.overwrite(dim_name, initial)
-        n0 = store.count(dim_name)
-        emit_result("scd2_dim_customer", {"inserted": n0, "closed": 0})
-        return {"inserted": n0, "closed": 0}
-
-    # the rollup feeds BOTH insert branches (J3 anti-join + J2 change
-    # detection) inside one staging plan — materialize it once instead
-    # of re-running the silver aggregation per branch (r15; the frame
-    # is |customers| rows, literal-scale next to the silver scan)
-    agg = agg.transform(checkpoint)
-    dim = store.read(dim_name)
-    current = dim.filter(F.col("is_current") == True)  # noqa: E712
-
-    # A8 max-key seed
-    max_key = dim.agg(
-        F.coalesce(F.max("customer_key"), F.lit(0)).alias("mk")
-    ).collect()[0].mk
-
-    # J3: brand-new members
-    new_members = agg.join(
-        current.select("customer_id"), "customer_id", "left_anti"
-    )
-    # J2: tier changed for existing current members
-    changed = (
-        agg.alias("a")
-        .join(current.alias("d"), "customer_id")
-        .filter(F.col("a.customer_tier") != F.col("d.customer_tier"))
-        .select("a.*")
+    return _scd2_merge(
+        store, batch_id, "scd2_dim_customer", "gold.dim_customer",
+        "customer_key", "customer_id", "customer_tier", agg, dim_cols,
+        replace_same_day=False,
     )
 
-    # W3: dense keys for inserted versions (ordered by business key).
-    # Materialize to a staging table BEFORE mutating the dim — both the
-    # reference's retry-isolation pattern and a correctness need: the
-    # insert plan reads the pre-close dim snapshot.
-    to_insert = new_members.unionByName(changed)
-    w = Window.orderBy("customer_id")
-    inserts = dim_cols(
-        to_insert,
-        (F.row_number().over(w) + F.lit(max_key)).cast("bigint").alias("customer_key"),
-    )
-    n_inserted = store.overwrite("gold.dim_customer_staging", inserts)
-    staged = store.read("gold.dim_customer_staging")
 
-    # close old versions of changed members (MERGE-update semantics).
-    # Semi-join against the staged keys — the ids are already a table;
-    # collecting them into an `isin` literal list would bloat the plan
-    # linearly with changed-member count.  The closed-row count is
-    # observed inside the update write (no separate semi-join pass).
-    is_cur = F.col("is_current") == True  # noqa: E712
-    n_closed = store.update_matched(
-        dim_name,
-        staged.select("customer_id"),
-        ["customer_id"],
-        {
-            "is_current": F.lit(False),
-            "effective_end_date": F.date_sub(F.current_date(), 1),
-        },
-        extra_cond=is_cur,
-    )
-    store.append(dim_name, staged)
-    write_job_control(
-        store, "scd2_dim_customer", "gold", batch_id, "incremental",
-        "SUCCESS", None, n_inserted,
-    )
-    emit_result(
-        "scd2_dim_customer", {"inserted": n_inserted, "closed": n_closed}
-    )
-    return {"inserted": n_inserted, "closed": n_closed}
-
-
-@_scoped_checkpoints
 def scd2_dim_merchant(store: TableStore, batch_id: str) -> dict:
     """C7 SCD Type 2 on merchant name (``gold_dim_merchant_scd2.py:26-261``):
     like the customer dim, plus two merchant-specific behaviors:
     (a) W4 best-record pre-dedup — one aggregate row per merchant_id,
     latest-transaction-date then highest-count wins (``:59-82``);
-    (b) the same-day churn guard — only close versions whose
-    ``effective_start_date < CURRENT_DATE`` (``:211``), which the
-    customer job deliberately lacks (SURVEY.md section 7 risk 5)."""
+    (b) the same-day churn guard — only versions with
+    ``effective_start_date < CURRENT_DATE`` are closed (``:211``); a
+    version opened today is replaced in place under its key.  The
+    customer job deliberately lacks the guard (SURVEY.md section 7
+    risk 5)."""
     silver = store.read("silver.transactions").filter(
         ~F.col("merchant_id").like("MERCH_9%")
     )
@@ -977,102 +1005,20 @@ def scd2_dim_merchant(store: TableStore, batch_id: str) -> dict:
         .drop("__rn")
     )
 
-    dim_name = "gold.dim_merchant"
-    today = F.current_date()
-    far_future = F.lit("9999-12-31").cast("date")
-
     def dim_cols(df, key_col):
         """10-column dim_merchant contract
         (``docs/SCHEMA_REGISTRY.md:224-239``)."""
         return df.select(
             key_col,
             "merchant_id", "merchant_name", "category", "location_type",
-            F.current_timestamp().alias("loaded_at"),
-            F.lit("payment_gateway").alias("source_system"),
-            today.alias("effective_start_date"),
-            far_future.alias("effective_end_date"),
-            F.lit(True).alias("is_current"),
+            *_scd2_audit_cols(),
         )
 
-    if not store.exists(dim_name):
-        w = Window.orderBy("merchant_id")
-        initial = dim_cols(
-            best, F.row_number().over(w).cast("bigint").alias("merchant_key")
-        )
-        store.overwrite(dim_name, initial)
-        n0 = store.count(dim_name)
-        emit_result("scd2_dim_merchant", {"inserted": n0, "closed": 0})
-        return {"inserted": n0, "closed": 0}
-
-    # best-record feeds BOTH insert branches inside one staging plan —
-    # materialize the silver rollup + window once instead of per branch
-    # (r15; |merchants| rows, literal-scale next to the silver scan)
-    best = best.transform(checkpoint)
-    dim = store.read(dim_name)
-    current = dim.filter(F.col("is_current") == True)  # noqa: E712
-    max_key = dim.agg(
-        F.coalesce(F.max("merchant_key"), F.lit(0)).alias("mk")
-    ).collect()[0].mk
-
-    new_members = best.join(current.select("merchant_id"), "merchant_id", "left_anti")
-    changed = (
-        best.alias("a")
-        .join(current.alias("d"), "merchant_id")
-        .filter(F.col("a.merchant_name") != F.col("d.merchant_name"))
-        .select("a.*")
+    return _scd2_merge(
+        store, batch_id, "scd2_dim_merchant", "gold.dim_merchant",
+        "merchant_key", "merchant_id", "merchant_name", best, dim_cols,
+        replace_same_day=True,
     )
-    to_insert = new_members.unionByName(changed)
-    w = Window.orderBy("merchant_id")
-    inserts = dim_cols(
-        to_insert,
-        (F.row_number().over(w) + F.lit(max_key)).cast("bigint").alias("merchant_key"),
-    )
-    n_inserted = store.overwrite("gold.dim_merchant_staging", inserts)
-    staged = store.read("gold.dim_merchant_staging")
-
-    # close changed members via semi-join against the staged key table
-    # (no driver-side id collection), with the same-day guard: a
-    # version opened today is REPLACED below, not closed (a closed row
-    # would have end < start); reference guard ``:211``.  Closed-row
-    # count observed inside the update write.
-    is_cur = F.col("is_current") == True  # noqa: E712
-    not_today = F.col("effective_start_date") < F.current_date()
-    n_closed = store.update_matched(
-        dim_name,
-        staged.select("merchant_id"),
-        ["merchant_id"],
-        {
-            "is_current": F.lit(False),
-            "effective_end_date": F.date_sub(F.current_date(), 1),
-        },
-        extra_cond=is_cur & not_today,
-    )
-    # same-day churn: drop still-current same-day versions of changed
-    # merchants (guard above left them open) before inserting anew.
-    # Materialize the key set BEFORE delete_matched mutates the dim —
-    # localCheckpoint pins the pre-mutation snapshot without the table
-    # commit the old sameday_keys staging table paid (write job +
-    # commit + register + read-back, ~4 driver jobs per run; r16).
-    # Unlike the insert staging table this set is never re-read after
-    # the stage, so durability buys nothing: a retried stage recomputes
-    # it from the dim it is about to mutate, exactly as before.
-    same_day = (
-        store.read(dim_name)
-        .filter(F.col("is_current") == True)  # noqa: E712
-        .join(staged.select("merchant_id"), "merchant_id", "left_semi")
-        .select("merchant_key")
-        .transform(checkpoint)
-    )
-    store.delete_matched(dim_name, same_day, ["merchant_key"])
-    store.append(dim_name, staged)
-    write_job_control(
-        store, "scd2_dim_merchant", "gold", batch_id, "incremental",
-        "SUCCESS", None, n_inserted,
-    )
-    emit_result(
-        "scd2_dim_merchant", {"inserted": n_inserted, "closed": n_closed}
-    )
-    return {"inserted": n_inserted, "closed": n_closed}
 
 
 # ---------------------------------------------------------------- C9/C10: static + date dims
@@ -1172,20 +1118,21 @@ def build_fact(
     # P6 test-merchant exclusion (``validate_fact_transactions.py:81``)
     silver = silver.filter(~F.col("merchant_id").like("MERCH_9%"))
 
-    fact = _fact_frame(store, silver, unknown_member)
-    n = store.overwrite("gold.fact_transactions_staging", fact)
-    staged = store.read("gold.fact_transactions_staging")
-
     # A4 null-FK audit over all 5 keys
-    # (``validate_fact_transactions.py:233-241``) + watermark, ONE
-    # aggregation job over the staged slice (was two)
-    audit = staged.agg(
+    # (``validate_fact_transactions.py:233-241``) + watermark, observed
+    # by the staging write itself — no aggregation job of its own
+    observed = Observation()
+    fact = _fact_frame(store, silver, unknown_member).observe(
+        observed,
         *[
             F.sum(F.when(F.col(k).isNull(), 1).otherwise(0)).alias(f"null_{k}")
             for k in FACT_FK_COLS
         ],
         F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm"),
-    ).collect()[0]
+    )
+    n = store.overwrite("gold.fact_transactions_staging", fact)
+    staged = store.read("gold.fact_transactions_staging")
+    audit = observed.get
 
     n_before = store.count("gold.fact_transactions")
     # no new rows -> skip the MERGE (string key defeats file pruning;
@@ -1196,7 +1143,7 @@ def build_fact(
         else store.upsert("gold.fact_transactions", staged, ["transaction_id"])
         - n_before
     )
-    new_wm = audit.wm if n > 0 else wm
+    new_wm = audit["wm"] if n > 0 else wm
     write_job_control(
         store, "load_fact", "gold", batch_id, "incremental", "SUCCESS",
         new_wm, n, records_read=n, started_at=started,

@@ -4,8 +4,10 @@ sf0.001 and produces a stable schema."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO_ROOT))
 
 import __spark_entry__ as entrymod
 
@@ -74,7 +76,7 @@ def test_round8_keys_match_oracle_values(spark, sf_dir):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO_ROOT / "tools"))
     from compare_oracle import compare
 
     for name in keys:
@@ -82,3 +84,12 @@ def test_round8_keys_match_oracle_values(spark, sf_dir):
         want = con.execute(oracles[name]).fetchdf()
         problems = compare(name, got, want)
         assert not problems, f"{name}: {problems}"
+
+
+def test_package_is_imported_from_this_checkout():
+    """The suite tests the package of the checkout it lives in, never
+    another copy that happens to sit on ``sys.path``."""
+    import delta_lake_gcp_implementation_spark as pkg
+
+    assert Path(pkg.__file__).resolve().is_relative_to(REPO_ROOT)
+    assert Path(entrymod.__file__).resolve().parent == REPO_ROOT

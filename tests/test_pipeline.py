@@ -121,20 +121,33 @@ def day1_run(spark, tmp_path_factory):
     }
 
 
+SCD2_DIMS = {"scd2": "gold.dim_customer", "scd2_merchant": "gold.dim_merchant"}
+
+
 @pytest.fixture(scope="module")
 def day12_run(spark, tmp_path_factory):
-    """Shared day-1 + day-2 incremental state for read-only CDC /
-    late-arrival assertions.  test_full_refresh_silver_and_fact_match
-    _incremental also consumes it but rebuilds silver/fact in place —
-    it must stay the LAST consumer in definition order."""
+    """Shared day-1, replay, day-2 incremental state for read-only CDC /
+    late-arrival / SCD2-commit assertions; ``dim_versions`` holds the
+    SCD2 dims' commit counts after each run.
+    test_full_refresh_silver_and_fact_match_incremental also consumes
+    it but rebuilds silver/fact in place — it must stay the LAST
+    consumer in definition order."""
     store = TableStore(
         spark, str(tmp_path_factory.mktemp("wh_day12") / "warehouse")
     )
     raw1, c1 = _day(spark, 1)
-    r1 = medallion.run_incremental(store, raw1)
     raw2, c2 = _day(spark, 2)
-    r2 = medallion.run_incremental(store, raw2)
-    return {"store": store, "r1": r1, "c1": c1, "r2": r2, "c2": c2}
+    runs, dim_versions = [], []
+    for raw in (raw1, raw1, raw2):
+        runs.append(medallion.run_incremental(store, raw))
+        dim_versions.append(
+            {dim: len(store.versions(dim)) for dim in SCD2_DIMS.values()}
+        )
+    r1, replay, r2 = runs
+    return {
+        "store": store, "r1": r1, "c1": c1, "replay": replay, "r2": r2,
+        "c2": c2, "dim_versions": dim_versions,
+    }
 
 
 def test_fresh_load_counts(day1_run):
@@ -183,6 +196,44 @@ def test_watermarks_equal_the_scan_after_run_and_replay(day1_run):
 
 def test_watermarks_equal_the_scan_after_a_second_day(day12_run):
     assert _watermark_mismatches(day12_run["store"]) == {}
+
+
+def test_every_stage_run_records_one_success_row(day12_run):
+    """Day 1, its replay and day 2: each of the five job_control stages
+    writes exactly one SUCCESS row per run — the SCD2 dims' first build
+    included."""
+    jc = day12_run["store"].read("job_control").filter(
+        F.col("status") == "SUCCESS"
+    )
+    batches = [day12_run[r]["batch_id"] for r in ("r1", "replay", "r2")]
+    rows = jc.filter(F.col("batch_id").isin(batches)).collect()
+    assert len(rows) == 15
+    assert sorted((r.batch_id, r.job_name) for r in rows) == sorted(
+        (b, job)
+        for b in batches
+        for job in ("load_bronze", "load_silver", "scd2_dim_customer",
+                    "scd2_dim_merchant", "load_fact")
+    )
+
+
+def test_scd2_run_is_one_commit_and_the_replay_none(day12_run):
+    """Each SCD2 run that changes its dim adds exactly one commit to it
+    (the first build included), a replay adds none, and no SCD2 staging
+    table exists."""
+    store, versions = day12_run["store"], day12_run["dim_versions"]
+    changed_on_day2 = 0
+    for key, dim in SCD2_DIMS.items():
+        assert day12_run["r1"][key]["inserted"] > 0
+        assert versions[0][dim] == 1
+        assert day12_run["replay"][key] == {"inserted": 0, "closed": 0}
+        assert versions[1][dim] == versions[0][dim]
+        r2 = day12_run["r2"][key]
+        changed = 1 if r2["inserted"] or r2["closed"] else 0
+        changed_on_day2 += changed
+        assert versions[2][dim] == versions[1][dim] + changed
+    assert changed_on_day2 > 0
+    for dim in ("gold.dim_customer_staging", "gold.dim_merchant_staging"):
+        assert not store.exists(dim)
 
 
 def test_live_dirs_match_the_log_after_run_and_replay(day1_run):
@@ -295,6 +346,53 @@ def test_scd2_invariants_tier_change_and_merchant_best_record(spark, store):
     assert dim3m.select("merchant_key").distinct().count() == dim3m.count()
     # MERCH_9xxx never enters the dim (P6)
     assert dim3m.filter(F.col("merchant_id").like("MERCH_9%")).count() == 0
+
+
+def test_same_day_merchant_rename_keeps_its_key(spark, store):
+    """A second batch on the same calendar day renames a merchant: its
+    current version is replaced in place under the day-1 key (no closed
+    row, no new key), so every fact row — old and new — still joins a
+    dim_merchant row."""
+    from pyspark.sql import Row
+
+    raw1, _ = _day(spark, 1)
+    medallion.run_incremental(store, raw1)
+    day1 = store.read("gold.dim_merchant").collect()
+    victim = min(r.merchant_id for r in day1)
+    key1 = next(r.merchant_key for r in day1 if r.merchant_id == victim)
+    # newest event of the day, so the best-record pick takes its name
+    later = (
+        store.read("bronze.transactions").agg(
+            F.date_format(
+                F.greatest(F.max("transaction_timestamp"), F.max("updated_at"))
+                + F.expr("INTERVAL 1 MINUTE"),
+                "yyyy-MM-dd HH:mm:ss",
+            ).alias("ts")
+        ).first().ts
+    )
+    template = raw1.filter(F.col("merchant_id") == victim).first().asDict()
+    template.update(
+        transaction_id="TXN_RENAME_000001", merchant_name="Renamed Co",
+        transaction_timestamp=later, updated_at=later, amount=10.0,
+        transaction_status="Successful",
+    )
+    rename = spark.createDataFrame([Row(**template)], raw1.schema)
+    r = medallion.run_incremental(store, rename)
+    assert r["scd2_merchant"] == {"inserted": 1, "closed": 0}
+
+    dim = store.read("gold.dim_merchant")
+    mine = dim.filter(F.col("merchant_id") == victim).collect()
+    assert [(m.merchant_key, m.merchant_name, m.is_current) for m in mine] == [
+        (key1, "Renamed Co", True)
+    ]
+    assert dim.select("merchant_key").distinct().count() == dim.count()
+    fact = store.read("gold.fact_transactions")
+    assert fact.filter(F.col("transaction_id") == "TXN_RENAME_000001").first(
+    ).merchant_key == key1
+    dangling = fact.join(
+        dim.select("merchant_key"), "merchant_key", "left_anti"
+    ).count()
+    assert dangling == 0
 
 
 def test_watermark_advances_and_backfill_does_not(spark, store):

@@ -11,10 +11,11 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from delta_lake_gcp_implementation_spark.plans import CATALOG  # noqa: E402
 from delta_lake_gcp_implementation_spark.session import get_spark  # noqa: E402
