@@ -65,24 +65,17 @@ connectivity the linear incidence + connected-components path
 is applied at JOIN time only — the persisted index stays uncapped, so
 tightening or loosening it never invalidates stored tables.
 
-Incremental cap bookkeeping (round 9, reworked round 10): the combined
-membership check reads the persisted ``corpus.bucket_counts`` delta
-log instead of re-aggregating the FULL stored incidence list — the r8
-form was O(corpus) per batch, O(n^2) over a long ingest history.  The
-r9 form read the counts table but UPSERTED the delta, which stages and
-swaps the whole counts table per batch — O(distinct buckets) write
-amplification however small the batch; round 10 makes the write a pure
-APPEND of delta rows (flat in corpus size) with an amortized
-compaction (``_add_bucket_counts``).  Stores created before the counts
-table existed are migrated by a one-time recount from the incidence
-list, and a sync sidecar (the committed BANDS version the log
-reflects, written only after the bookkeeping it describes) lets
-``_ensure_bucket_counts`` detect a crash between the BANDS append and
-the counts append and self-heal by the same recount (ADVICE r9;
-version-keyed rather than count-keyed — see ``_write_counts_sync``).
-Compaction triggers on row growth OR append count, so small-file
-accumulation is bounded even when batches are tiny relative to the
-bucket population.  The invariant (per-bucket SUM
+Incremental cap bookkeeping: the combined membership check reads the
+persisted ``corpus.bucket_counts`` delta log, never the FULL stored
+incidence list (O(corpus) per batch).  Each batch APPENDS its
+per-bucket delta rows, and ``_add_bucket_counts`` compacts the log back
+to one row per bucket once its rows OR its appends outgrow a bound.
+Every COUNTS commit carries the log's sync state as a snapshot mark
+(``_SYNC``), atomically with the counts it describes, so one O(1) head
+read tells ``_ensure_bucket_counts`` whether the log reflects the
+committed BANDS; a log without the mark, or one a crash between the
+BANDS and COUNTS appends left behind, is recounted once from the
+incidence list.  The invariant (per-bucket SUM
 of the log == GROUP BY over the incidence list) is asserted by
 ``tests/test_corpus_counts.py`` after multiple batches, crashes, and
 compactions.
@@ -150,46 +143,33 @@ _COUNTS_COMPACT_FACTOR = 4
 _COUNTS_COMPACT_APPENDS = 32
 
 
-def _counts_sync_path(store: TableStore) -> str:
-    return store.path(COUNTS) + ".__sync__.json"
+#: Snapshot mark of the COUNTS log's sync state, offered by every
+#: COUNTS commit: ``[bands_version, compacted, base_rows, appends]`` —
+#: the committed BANDS version the log reflects, 1 for a rewrite (0 for
+#: an append), the log size at the last compaction and the appends
+#: since (the two compaction triggers).  The snapshot keeps the larger
+#: value: the BANDS version grows with every batch, and a batch's
+#: compaction follows its append.
+_SYNC = "counts_sync"
 
 
-def _read_counts_sync(store: TableStore) -> dict | None:
-    import json
+def _sync_mark(
+    store: TableStore, compacted: bool, base_rows: int = 0, appends: int = 0
+) -> tuple[str, list]:
+    version = store.current_version(BANDS)
+    return _SYNC, [version, int(compacted), base_rows, appends]
 
-    try:
-        with open(_counts_sync_path(store)) as f:
-            return json.load(f)
-    except Exception:
+
+def _sync_state(store: TableStore) -> tuple[int, int, int] | None:
+    """``(bands_version, base_rows, appends)`` from the COUNTS head's
+    sync mark, or None.  A rewrite cannot know its size before its
+    commit, so after one ``base_rows`` is the head's row count."""
+    head = store.snapshot(COUNTS)
+    mark = head["marks"].get(_SYNC) if head else None
+    if mark is None:
         return None
-
-
-def _write_counts_sync(
-    store: TableStore, base_rows: int, appends: int = 0
-) -> None:
-    """Record (a) the committed BANDS version the COUNTS log reflects,
-    (b) the log size at the last compaction (row-factor trigger
-    baseline) and (c) appends since that compaction (file-count
-    trigger).  Written AFTER the COUNTS append/compaction it
-    describes, so any crash window leaves the sidecar STALE and the
-    next ``_ensure_bucket_counts`` self-heals by recount (ADVICE r9:
-    a crash between the BANDS append and the counts bookkeeping used
-    to understate the cap forever with no self-heal).
-
-    The sync key is ``store.current_version(BANDS)``: every BANDS
-    commit advances it, and nothing else changes what ``read()``
-    returns (ADVICE r10)."""
-    import json
-
-    with open(_counts_sync_path(store), "w") as f:
-        json.dump(
-            {
-                "bands_version": store.current_version(BANDS),
-                "base_rows": int(base_rows),
-                "appends": int(appends),
-            },
-            f,
-        )
+    version, compacted, base_rows, appends = mark
+    return version, head["row_count"] if compacted else base_rows, appends
 
 
 def _stored_bucket_counts(store: TableStore) -> DataFrame:
@@ -207,32 +187,26 @@ def _ensure_bucket_counts(store: TableStore) -> None:
     * pre-counts store (migration): recount ONCE from the incidence
       list and persist — must run before any append the recount should
       not include (call order in ``ingest_batch`` guarantees it);
-    * stale log (ADVICE r9 self-heal): the sync sidecar records which
-      committed BANDS version the log reflects; a crash between the
+    * stale log (ADVICE r9 self-heal): the log's sync mark records
+      which committed BANDS version it reflects; a crash between the
       BANDS append and the counts bookkeeping leaves them out of sync,
-      so a sidecar/head-version mismatch (both O(1) metadata reads)
-      triggers the same recount instead of silently understating the
-      cap forever."""
+      so a mark/head-version mismatch (both O(1) head reads) — or a
+      head with no mark — triggers the same recount instead of
+      silently understating the cap forever."""
     if not store.exists(BANDS):
         return
-    sync = _read_counts_sync(store)
-    if (
-        store.exists(COUNTS)
-        and sync is not None
-        and sync.get("bands_version") == store.current_version(BANDS)
-    ):
-        return
-    compacted = _recount_buckets(store.read(BANDS))
-    n = store.overwrite(COUNTS, compacted)
-    _write_counts_sync(store, base_rows=n)
+    sync = _sync_state(store)
+    if sync is None or sync[0] != store.current_version(BANDS):
+        store.overwrite(
+            COUNTS, _recount_buckets(store.read(BANDS)),
+            mark=_sync_mark(store, compacted=True),
+        )
 
 
 def _add_bucket_counts(store: TableStore, new_bands: DataFrame) -> None:
     """Append the per-bucket membership delta for freshly appended
     incidence rows — O(batch) bookkeeping that never reads, joins, or
-    rewrites existing counts (the r9 form upserted, which staged and
-    swapped the WHOLE counts table per batch: O(distinct buckets)
-    write amplification however small the batch).  COUNTS is an
+    rewrites existing counts.  COUNTS is an
     LSM-style delta log — readers sum per bucket
     (``_stored_bucket_counts``) — compacted back to one row per bucket
     when it outgrows ``_COUNTS_COMPACT_FACTOR`` x its post-compaction
@@ -253,23 +227,19 @@ def _add_bucket_counts(store: TableStore, new_bands: DataFrame) -> None:
         # and skip the trigger check (ADVICE r10: defaulting base to 1
         # made any >4-bucket first batch immediately rewrite the table
         # it just wrote, a no-op compaction on every fresh store)
-        n = store.overwrite(COUNTS, delta)
-        _write_counts_sync(store, base_rows=n)
+        store.overwrite(COUNTS, delta, mark=_sync_mark(store, compacted=True))
         return
-    store.append(COUNTS, delta)
-    sync = _read_counts_sync(store) or {}
-    base = max(int(sync.get("base_rows", 0)), 1)
-    appends = int(sync.get("appends", 0)) + 1
-    log_rows = store.count(COUNTS)
+    _, base, appends = _sync_state(store)  # _ensure_bucket_counts ran
+    appends += 1
+    store.append(COUNTS, delta, mark=_sync_mark(store, False, base, appends))
     if (
-        log_rows > _COUNTS_COMPACT_FACTOR * base
+        store.count(COUNTS) > _COUNTS_COMPACT_FACTOR * max(base, 1)
         or appends >= _COUNTS_COMPACT_APPENDS
     ):
-        base = store.overwrite(COUNTS, _stored_bucket_counts(store))
-        appends = 0
-    else:
-        base = sync.get("base_rows", log_rows)
-    _write_counts_sync(store, base_rows=base, appends=appends)
+        store.overwrite(
+            COUNTS, _stored_bucket_counts(store),
+            mark=_sync_mark(store, compacted=True),
+        )
 
 
 def ingest_batch(
@@ -309,8 +279,8 @@ def ingest_batch(
       marker-carrying commit (transient orphan index rows are
       invisible: candidate verification joins back to DOCS text);
     * the COUNTS log needs no marker of its own — it is derived state
-      whose version-keyed sync sidecar already recounts from BANDS
-      whenever they diverge.
+      whose commits record the BANDS version they reflect, and it
+      recounts from BANDS whenever the two diverge.
 
     A crashed append leaves no residue to clean up: before its commit
     claim the table is untouched, after it the table store rolls the
@@ -668,8 +638,10 @@ def rebuild_index(store: TableStore) -> dict:
             sigs, "doc_id", n_hashes=MH_N, band_size=MH_BAND
         ),
     )
-    n_counts = store.overwrite(COUNTS, _recount_buckets(store.read(BANDS)))
-    _write_counts_sync(store, base_rows=n_counts)
+    n_counts = store.overwrite(
+        COUNTS, _recount_buckets(store.read(BANDS)),
+        mark=_sync_mark(store, compacted=True),
+    )
     return {
         "docs": store.count(DOCS),
         "sigs": n_sigs,

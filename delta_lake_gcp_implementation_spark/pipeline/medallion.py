@@ -292,6 +292,15 @@ def _batch_cutoff():
     return F.lit(datetime.utcnow().strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
 
 
+def _watermark(*cols: str):
+    """A stage's bookmark as an aggregate ``wm`` for ``observe`` on the
+    write that lands its rows: the GREATEST of ``cols``' maxima (A7,
+    ``load_bronze.py:113-116``), formatted as job_control stores it."""
+    maxes = [F.max(c) for c in cols]
+    latest = F.greatest(*maxes) if len(maxes) > 1 else maxes[0]
+    return F.date_format(latest, "yyyy-MM-dd HH:mm:ss").alias("wm")
+
+
 def _scoped_checkpoints(fn):
     """Free a stage's localCheckpoint blocks when it exits: the SCD2
     changes / validation-slice checkpoints are consumed entirely inside
@@ -447,41 +456,37 @@ def load_bronze(store: TableStore, batch_id: str, run_mode: str = "incremental")
     the inserted/updated split derived from before/after counts
     (``load_silver.py:75-151``)."""
     started = datetime.utcnow()
-    staged = store.read("bronze.transactions_staging")
-    # before/after come from the O(1) meta counts; the upsert observes
-    # its own output; watermark + staged count share ONE aggregation
-    # job (previously: two table re-scans + two staging passes)
+    # the staged and before/after row counts are O(1) head reads and
+    # the watermark is observed on the MERGE's own source: the stage
+    # runs no Spark job besides the MERGE
+    n = store.count("bronze.transactions_staging")
     n_before = store.count("bronze.transactions")
+    n_after, wm = n_before, None
     # empty staging (idempotent re-run, no new data) skips the MERGE
     # entirely: the string merge key defeats file pruning, so an empty
     # merge would otherwise take the full path and rewrite the WHOLE
     # table for nothing — at production scale that is a full-table
-    # rewrite per no-op rerun (guide §6)
-    n_after = (
-        n_before
-        if store.count("bronze.transactions_staging") == 0
-        else store.upsert(
+    # rewrite per no-op rerun (guide §6).  The observation is read only
+    # when the MERGE ran: ``get`` waits for an action that ran it.
+    if n:
+        observed = Observation()
+        staged = store.read("bronze.transactions_staging").observe(
+            observed, _watermark("transaction_timestamp", "updated_at")
+        )
+        n_after = store.upsert(
             "bronze.transactions", staged, ["transaction_id", "updated_at"]
         )
-    )
-    wm_row = staged.agg(
-        F.date_format(
-            F.greatest(F.max("transaction_timestamp"), F.max("updated_at")),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("wm"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    n = wm_row.n
+        wm = observed.get["wm"]
     inserted = n_after - n_before
     write_job_control(
         store, "load_bronze", "bronze", batch_id, run_mode, "SUCCESS",
-        wm_row.wm, n, records_read=n, started_at=started,
+        wm, n, records_read=n, started_at=started,
     )
     result = {
         "merged": n,
         "records_inserted": inserted,
         "records_updated": n - inserted,
-        "watermark": wm_row.wm,
+        "watermark": wm,
     }
     emit_result("load_bronze", result)
     return result
@@ -514,14 +519,16 @@ def backfill_bronze(
         .withColumn("is_deleted", F.lit(False))
         .withColumn("deleted_at", F.lit(None).cast("timestamp"))
     )
-    # materialize once: both the count and the MERGE consume this frame,
-    # and the validate+dedup plan is the expensive part of a backfill
+    # materialize once (the validate+dedup plan is the expensive part of
+    # a backfill); the count rides that checkpoint's action
+    counted = Observation()
     deduped = (
         dedup_ops.keep_first_version(kept, ["transaction_id", "updated_at"])
         .select(*BRONZE_COLS)
+        .observe(counted, F.count(F.lit(1)).alias("n"))
         .transform(checkpoint)
     )
-    n = deduped.count()
+    n = counted.get["n"]
     if n:  # empty date slice: skip the MERGE (see load_bronze)
         store.upsert(
             "bronze.transactions", deduped, ["transaction_id", "updated_at"]
@@ -554,14 +561,14 @@ def full_refresh_bronze(
     _require_confirmation("full_refresh_bronze", confirm)
     started = datetime.utcnow()
     counts = validate_bronze(store, raw, batch_id, watermark=None)
-    staged = store.read("bronze.transactions_staging")
-    store.overwrite("bronze.transactions", staged)
-    wm = staged.agg(
-        F.date_format(
-            F.greatest(F.max("transaction_timestamp"), F.max("updated_at")),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("wm")
-    ).collect()[0].wm
+    observed = Observation()
+    store.overwrite(
+        "bronze.transactions",
+        store.read("bronze.transactions_staging").observe(
+            observed, _watermark("transaction_timestamp", "updated_at")
+        ),
+    )
+    wm = observed.get["wm"]
     write_job_control(
         store, "full_refresh_bronze", "bronze", batch_id, "full_refresh",
         "SUCCESS", wm, counts["staged"],
@@ -587,13 +594,12 @@ def full_refresh_silver(
     latest = dedup_ops.keep_latest(
         live, ["transaction_id"], "updated_at", [F.col("transaction_id")]
     ).select(*SILVER_COLS)
-    n = store.overwrite("silver.transactions", latest)
-    wm = (
-        store.read("silver.transactions")
-        .agg(F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm"))
-        .collect()[0]
-        .wm
+    observed = Observation()
+    n = store.overwrite(
+        "silver.transactions",
+        latest.observe(observed, _watermark("updated_at")),
     )
+    wm = observed.get["wm"]
     write_job_control(
         store, "full_refresh_silver", "silver", batch_id, "full_refresh",
         "SUCCESS", wm, n, started_at=started,
@@ -701,14 +707,14 @@ def full_refresh_fact(
     silver = store.read("silver.transactions").filter(
         ~F.col("merchant_id").like("MERCH_9%")
     )
-    fact = _fact_frame(store, silver, unknown_member)
-    n = store.overwrite("gold.fact_transactions", fact)
-    wm = (
-        store.read("gold.fact_transactions")
-        .agg(F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm"))
-        .collect()[0]
-        .wm
+    observed = Observation()
+    n = store.overwrite(
+        "gold.fact_transactions",
+        _fact_frame(store, silver, unknown_member).observe(
+            observed, _watermark("updated_at")
+        ),
     )
+    wm = observed.get["wm"]
     write_job_control(
         store, "full_refresh_fact", "gold", batch_id, "full_refresh",
         "SUCCESS", wm, n, started_at=started,
@@ -744,10 +750,10 @@ def run_silver(store: TableStore, batch_id: str) -> dict:
     # the staging write observes its own watermark; its row count and
     # before/after are O(1) meta reads — no extra job
     observed = Observation()
-    n = store.overwrite("silver.transactions_staging", latest.observe(
-        observed,
-        F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm"),
-    ))
+    n = store.overwrite(
+        "silver.transactions_staging",
+        latest.observe(observed, _watermark("updated_at")),
+    )
     staged = store.read("silver.transactions_staging")
     n_before = store.count("silver.transactions")
     # no new rows -> skip the MERGE (string key defeats file pruning;
@@ -1128,7 +1134,7 @@ def build_fact(
             F.sum(F.when(F.col(k).isNull(), 1).otherwise(0)).alias(f"null_{k}")
             for k in FACT_FK_COLS
         ],
-        F.date_format(F.max("updated_at"), "yyyy-MM-dd HH:mm:ss").alias("wm"),
+        _watermark("updated_at"),
     )
     n = store.overwrite("gold.fact_transactions_staging", fact)
     staged = store.read("gold.fact_transactions_staging")

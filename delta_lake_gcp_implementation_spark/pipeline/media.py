@@ -36,7 +36,7 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..checkpoints import checkpoint, owned_checkpoints
@@ -85,14 +85,23 @@ def _ingest_media_batch_impl(
         feats_applied = _applied(FEATS)
 
     batch = media_df.withColumn("sha256", F.sha2(F.col("content"), 256))
-    n_batch = batch.count()
 
-    # intra-batch exact dedup: lowest media_id per digest survives
-    winners = batch.groupBy("sha256").agg(
-        F.min("media_id").alias("media_id")
+    # intra-batch exact dedup: lowest media_id per digest survives.  The
+    # winners are checkpointed with both batch-level counts observed on
+    # that action (as in corpus.ingest_batch): n_batch = sum of the
+    # per-digest group sizes, n_uniq = group count
+    obs_w = Observation()
+    winners = (
+        batch.groupBy("sha256")
+        .agg(F.min("media_id").alias("media_id"), F.count("*").alias("__n"))
+        .observe(
+            obs_w, F.sum("__n").alias("n_batch"), F.count("*").alias("n_uniq")
+        )
+        .transform(checkpoint)
     )
+    n_batch = int(obs_w.get["n_batch"] or 0)
+    n_exact_batch = n_batch - obs_w.get["n_uniq"]
     uniq = batch.join(winners.select("media_id"), "media_id", "left_semi")
-    n_exact_batch = n_batch - uniq.count()
 
     # cross-corpus exact dedup: anti-join on the stored DIGEST column
     # only — column pruning keeps the blob pages unread
@@ -102,11 +111,12 @@ def _ingest_media_batch_impl(
         )
     else:
         fresh = uniq
-    # materialize: the decode, both appends, and the accounting all
-    # consume this slice (and appends must not re-plan over a table
-    # the same batch is mutating)
-    fresh = fresh.transform(checkpoint)
-    n_exact_corpus = n_batch - n_exact_batch - fresh.count()
+    # materialize: the decode and both appends consume this slice (and
+    # appends must not re-plan over a table the same batch is
+    # mutating); the survivor count rides the checkpoint's action
+    obs_f = Observation()
+    fresh = fresh.observe(obs_f, F.count("*").alias("n")).transform(checkpoint)
+    n_exact_corpus = n_batch - n_exact_batch - obs_f.get["n"]
 
     feats = mm.decode_media(
         fresh.select("media_id", "content", "meta"), fake=fake_decode

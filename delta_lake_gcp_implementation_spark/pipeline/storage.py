@@ -17,8 +17,9 @@ present and rolls the apply forward.  Counts, txn markers, schema,
 pruning stats and time travel are all answered from one commit file,
 never from a directory listing or a footer re-read.  Each snapshot also
 carries a ``marks`` map — per key the largest value any commit offered
-(``append_rows(..., mark=...)``) — so a reader answers "latest X" from
-the head instead of scanning the table (the medallion's watermarks).
+(``mark=`` on ``append``/``append_rows``/``overwrite``) — so a reader
+answers "latest X" from the head instead of scanning the table (the
+medallion's watermarks, the corpus counts log's sync state).
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ import datetime
 import json
 import logging
 import os
-import re
 import shutil
 import time
 import uuid
@@ -180,9 +180,9 @@ class TableStore:
         #: (name -> head commit) — ``_head`` probes forward from it, so
         #: commits made through other instances stay visible
         self._heads: dict[str, dict] = {}
-        #: (name -> schema registered in the session catalog by THIS
-        #: instance) — lets ``_register`` skip the drop-and-recreate
-        #: when an overwrite kept the schema (see ``_register``).
+        #: (name -> (schema, partition columns) registered in the
+        #: session catalog by THIS instance) — lets ``_register`` skip
+        #: the drop-and-recreate when an overwrite kept the schema.
         self._registered: dict[str, object] = {}
         os.makedirs(root, exist_ok=True)
         # re-attach tables committed by a previous session over this
@@ -195,17 +195,20 @@ class TableStore:
         return os.path.join(self.root, name.replace(".", "__"))
 
     def _register(self, name: str) -> None:
-        """Catalog-register ``name`` as an external parquet table.
+        """Catalog-register ``name`` as an external parquet table with
+        the log's schema, plus the partition columns a ``col=value/``
+        file path names (``write_partitioned``) — nothing is inferred
+        from the files, so an empty head registers too.
 
         Drop-and-recreate (metadata-only, driver-side) rather than
-        ``IF NOT EXISTS``: the catalog snapshots the file schema at
-        creation, and an overwrite may legitimately change it.  When
-        THIS instance already registered the table with the SAME
-        schema, a single ``REFRESH TABLE`` (rebuilds the cached file
-        listing) replaces the drop + create + footer re-inference —
+        ``IF NOT EXISTS``: an overwrite may legitimately change the
+        schema.  When THIS instance already registered the table with
+        the SAME schema and no partitions, a single ``REFRESH TABLE``
+        (rebuilds the cached file listing) replaces the drop + create —
         the overwhelmingly common case for staging tables the pipeline
         overwrites every batch (r15; any failure falls through to the
-        full re-create)."""
+        full re-create).  A partitioned table's partitions live in the
+        catalog, so it is re-created and they are recovered."""
         db, dot, tbl = name.partition(".")
         if not dot:
             db, tbl = "default", name
@@ -214,7 +217,9 @@ class TableStore:
             if head is None:
                 return
             schema = self._schema(head)
-            if self._registered.get(name) == schema:
+            nested = next((f for f in head["files"] if os.sep in f), "")
+            parts = tuple(d.split("=")[0] for d in nested.split(os.sep)[:-1])
+            if self._registered.get(name) == (schema, ()):
                 try:
                     self.spark.sql(f"REFRESH TABLE `{db}`.`{tbl}`")
                     return
@@ -222,11 +227,15 @@ class TableStore:
                     pass  # dropped externally etc. — full re-create below
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
             self.spark.sql(f"DROP TABLE IF EXISTS `{db}`.`{tbl}`")
+            cols = ", ".join(f"`{c}`" for c in parts)
             self.spark.sql(
-                f"CREATE TABLE `{db}`.`{tbl}` USING parquet "
-                f"LOCATION '{self.path(name)}'"
+                f"CREATE TABLE `{db}`.`{tbl}` ({schema.toDDL()}) USING parquet"
+                + (f" PARTITIONED BY ({cols})" if parts else "")
+                + f" LOCATION '{self.path(name)}'"
             )
-            self._registered[name] = schema
+            if parts:
+                self.spark.sql(f"ALTER TABLE `{db}`.`{tbl}` RECOVER PARTITIONS")
+            self._registered[name] = (schema, parts)
         except Exception as exc:
             # registration is a convenience surface; never fail a write
             # over catalog limitations (e.g. a foreachBatch worker
@@ -451,6 +460,7 @@ class TableStore:
     def append(
         self, name: str, df: DataFrame, allow_schema_evolution: bool = False,
         txn: tuple[str, int] | None = None,
+        mark: tuple[str, list] | None = None,
     ) -> int:
         """S5 INSERT INTO; returns the number of rows appended.  The
         batch goes through the rebalance sizing shuffle first (the
@@ -458,7 +468,9 @@ class TableStore:
 
         ``txn=(app_id, version)``: idempotent-writer marker, recorded
         in the same commit as the appended files (marker present iff
-        the append committed).
+        the append committed).  ``mark=(key, value)`` offers ``value``
+        for the snapshot's mark ``key`` in that same commit (see
+        ``_commit``).
 
         Schema handling (Delta ``mergeSchema`` parity): a batch whose
         columns differ from the table is REFUSED unless
@@ -486,7 +498,7 @@ class TableStore:
                     widened = self.read(name).unionByName(
                         df, allowMissingColumns=True
                     )
-                    after = self._replace(name, widened, txn=txn)
+                    after = self._replace(name, widened, txn=txn, mark=mark)
                     return after - head["row_count"]
                 # batch only MISSING columns: align with typed nulls,
                 # stay on the cheap append path
@@ -498,7 +510,7 @@ class TableStore:
                 df = df.select(*[f.name for f in target_schema.fields])
         return self._rows_added(self._publish(
             name, "append", self._stage(name, self._optimize_write(df)),
-            txn=txn,
+            txn=txn, mark=mark,
         ))
 
     def append_rows(
@@ -557,14 +569,16 @@ class TableStore:
 
     def overwrite(
         self, name: str, df: DataFrame, txn: tuple[str, int] | None = None,
+        mark: tuple[str, list] | None = None,
     ) -> int:
         """S6 INSERT OVERWRITE: full replace, schema preserved by the
         caller passing an explicitly-projected frame.  Returns rows
-        written.  No rebalance sizing shuffle: replace inputs are
-        joins/windows whose last shuffle AQE already coalesces to
-        advisory-sized partitions, so a second shuffle would be pure
-        overhead, locally and at 100 TB alike."""
-        return self._replace(name, df, txn=txn)
+        written; ``txn`` and ``mark`` as in :meth:`append`.  No
+        rebalance sizing shuffle: replace inputs are joins/windows whose
+        last shuffle AQE already coalesces to advisory-sized partitions,
+        so a second shuffle would be pure overhead, locally and at
+        100 TB alike."""
+        return self._replace(name, df, txn=txn, mark=mark)
 
     # --------------------------------------- file-granular MERGE (pruning)
     #
@@ -1065,11 +1079,10 @@ class TableStore:
         return self.current_version(name)
 
     def vacuum(self, retain_versions: int | None = None) -> list[str]:
-        """Delta-VACUUM analog: remove orphaned artifacts under the
-        store root — stage dirs of writes that never claimed a version
-        (a claimed commit is rolled forward first, which consumes its
-        stage) and ``<table>.__<kind>__.json`` sidecars (the corpus
-        counts-sync marker, any future kind) whose table dir is gone.
+        """Delta-VACUUM analog: remove the stage dirs of writes that
+        never claimed a version (a claimed commit is rolled forward
+        first, which consumes its stage).  All table state lives in the
+        logs, so nothing else under the store root is ever orphaned.
 
         ``retain_versions=k`` additionally expires history: for every
         table, commits older than the newest ``k`` are dropped, and
@@ -1086,16 +1099,8 @@ class TableStore:
         removed: list[str] = []
         for entry in sorted(os.listdir(self.root)):
             full = os.path.join(self.root, entry)
-            sidecar = re.fullmatch(r"(.+)\.__\w+__\.json", entry)
             if ".__stage__" in entry and os.path.isdir(full):
                 shutil.rmtree(full)
-                removed.append(full)
-            elif (
-                sidecar
-                and os.path.isfile(full)
-                and not os.path.isdir(os.path.join(self.root, sidecar.group(1)))
-            ):
-                os.remove(full)
                 removed.append(full)
         if retain_versions is None or retain_versions < 1:
             return removed
@@ -1192,9 +1197,11 @@ class TableStore:
             time.perf_counter() - started, mark=mark,
         )
         self._apply(name, commit)
-        if head is None or commit["remove"] or commit["schema"] != head["schema"]:
-            # new table, dropped files or a new schema: the catalog's
-            # cached listing and schema must be rebuilt, not refreshed
+        if head is None or not head["files"] or commit["remove"] or (
+            commit["schema"] != head["schema"]
+        ):
+            # new or empty table, dropped files or a new schema: the
+            # catalog's listing, schema and partitioning may be stale
             self._register(name)
         return commit
 
@@ -1300,6 +1307,7 @@ class TableStore:
     def _replace(
         self, name: str, df: DataFrame, txn: tuple[str, int] | None = None,
         partition_by: tuple[str, ...] = (),
+        mark: tuple[str, list] | None = None,
     ) -> int:
         """Replace the table with ``df``: one commit removing every
         head file and adding the staged output (Spark cannot overwrite
@@ -1308,7 +1316,7 @@ class TableStore:
         stage = self._stage(name, df, partition_by)
         head = self._head(name)
         return self._publish(
-            name, "replace", stage, head["files"] if head else (), txn
+            name, "replace", stage, head["files"] if head else (), txn, mark
         )["row_count"]
 
     @staticmethod

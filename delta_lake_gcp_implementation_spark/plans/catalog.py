@@ -24,7 +24,7 @@ from .driver_rows import LAST_GREEN
 
 try:  # GREEN_HASH added by the r7 regen; tolerate older generated files
     from .driver_rows import GREEN_HASH
-except ImportError:  # pragma: no cover - pre-r7 sidecar
+except ImportError:  # pragma: no cover - pre-r7 generated file
     GREEN_HASH: dict[str, str] = {}
 from . import bpeq as B
 from . import corpusq as CQ
@@ -281,7 +281,8 @@ _SPECS: dict[str, QuerySpec] = {
             CQ.ingest_batch,
             PCORP._ensure_bucket_counts,
             PCORP._add_bucket_counts,
-            PCORP._write_counts_sync,
+            PCORP._sync_mark,
+            PCORP._sync_state,
             ODED.char_shingles,
             ODED.minhash_signatures,
             ODED.minhash_band_incidence,

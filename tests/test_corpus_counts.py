@@ -56,6 +56,22 @@ def _recount_rows(store):
     )
 
 
+def _bands_reads(store, monkeypatch) -> list:
+    """Record every read of the incidence list from now on: an ingest
+    reads it once for its candidate join, plus once per recount of the
+    COUNTS log."""
+    reads = []
+    real = store.read
+
+    def read(name):
+        if name == corpus.BANDS:
+            reads.append(name)
+        return real(name)
+
+    monkeypatch.setattr(store, "read", read)
+    return reads
+
+
 def test_counts_match_recount_after_three_batches(spark, store):
     """The verdict's invariant: after several batches (including
     absorbed duplicates, whose band rows never land), the incremental
@@ -134,7 +150,7 @@ def test_crash_between_bands_append_and_counts_self_heals(spark, store):
     """ADVICE r9: a crash after ``store.append(BANDS, ...)`` but before
     the counts bookkeeping used to leave the log understated FOREVER
     (the migration recount only fired when COUNTS was absent).  The
-    sync sidecar now detects the divergence and the next ingest
+    log's sync mark now exposes the divergence and the next ingest
     recounts."""
     corpus.ingest_batch(store, _df(spark, [(1, A), (2, B)]))
     # simulate the crash window: extra incidence rows land, counts
@@ -183,16 +199,17 @@ def test_orphan_bands_files_adopted_and_healed(spark, store, monkeypatch):
 
 
 def test_first_batch_skips_noop_compaction(spark, store):
-    """ADVICE r10: with no sync sidecar, base defaulted to 1, so any
+    """ADVICE r10: with no sync state, base defaulted to 1, so any
     first batch with >4 buckets immediately rewrote the COUNTS table it
     had just created.  The creating overwrite must now be the ONLY
-    commit, with the baseline recorded at the written row count."""
+    commit, and its sync mark records the baseline at the written row
+    count."""
     corpus.ingest_batch(store, _df(spark, [(1, A), (2, B), (3, C)]))
     assert store.count(corpus.COUNTS) > corpus._COUNTS_COMPACT_FACTOR
     assert store.current_version(corpus.COUNTS) == 1  # one commit only
-    sync = corpus._read_counts_sync(store)
-    assert sync["base_rows"] == store.count(corpus.COUNTS)
-    assert sync["appends"] == 0
+    assert corpus._sync_state(store) == (
+        store.current_version(corpus.BANDS), store.count(corpus.COUNTS), 0
+    )
 
 
 def test_counts_log_compacts_on_append_count(spark, store, monkeypatch):
@@ -209,7 +226,7 @@ def test_counts_log_compacts_on_append_count(spark, store, monkeypatch):
     )
     assert store.count(corpus.COUNTS) == distinct_buckets
     assert _counts_rows(store) == _recount_rows(store)
-    assert corpus._read_counts_sync(store)["appends"] == 0
+    assert corpus._sync_state(store)[2] == 0  # appends since compaction
 
 
 def test_counts_log_appends_then_compacts(spark, store, monkeypatch):
@@ -232,21 +249,82 @@ def test_counts_log_appends_then_compacts(spark, store, monkeypatch):
     assert _counts_rows(store) == _recount_rows(store)
 
 
-def test_missing_sync_sidecar_forces_recount(spark, store):
-    """A deleted/lost sync sidecar (e.g. a pre-sidecar store, or a
-    partial restore) must force a recount on the next ingest rather
-    than trusting the existing COUNTS log blindly."""
-    import os
+def test_counts_head_without_sync_mark_forces_one_recount(
+    spark, store, monkeypatch
+):
+    """A COUNTS head that carries no sync mark (a store written before
+    the mark existed, or a partial restore) must force ONE recount on
+    the next ingest rather than trusting the existing COUNTS log
+    blindly."""
+    import shutil
 
     corpus.ingest_batch(store, _df(spark, [(1, A), (2, B)]))
-    os.remove(corpus._counts_sync_path(store))
-    # poison the log so only a recount can restore the invariant
-    store.append(
-        corpus.COUNTS,
-        store.read(corpus.COUNTS).limit(1).select(
+    counts = store.read(corpus.COUNTS)
+    # re-create the log without the mark, poisoned so only a recount
+    # can restore the invariant
+    poisoned = spark.createDataFrame(
+        counts.select(
             "bucket", (F.col("n_docs") + 500).cast("bigint").alias("n_docs")
-        ),
+        ).collect(),
+        counts.schema,
     )
+    for suffix in ("", ".__log__", ".__v__"):
+        shutil.rmtree(store.path(corpus.COUNTS) + suffix, ignore_errors=True)
+    store.overwrite(corpus.COUNTS, poisoned)
+    assert corpus._sync_state(store) is None
     assert _counts_rows(store) != _recount_rows(store)
+    reads = _bands_reads(store, monkeypatch)
     corpus.ingest_batch(store, _df(spark, [(11, C)]))
+    assert len(reads) == 2  # the candidate join and ONE recount
     assert _counts_rows(store) == _recount_rows(store)
+
+
+def test_crash_right_after_the_counts_commit_needs_no_recount(
+    spark, store, monkeypatch
+):
+    """The sync state commits atomically with the counts it describes:
+    a batch that dies right after its COUNTS append commit leaves a log
+    the next batch trusts — no O(corpus) recount from the incidence
+    list."""
+    corpus.ingest_batch(store, _df(spark, [(1, A), (2, B)]))
+    real_append = store.append
+
+    def append(name, df, **kwargs):
+        n = real_append(name, df, **kwargs)
+        if name == corpus.COUNTS:
+            raise RuntimeError("injected crash after the COUNTS commit")
+        return n
+
+    monkeypatch.setattr(store, "append", append)
+    with pytest.raises(RuntimeError, match="injected"):
+        corpus.ingest_batch(store, _df(spark, [(11, C)]))
+    monkeypatch.undo()
+    assert _counts_rows(store) == _recount_rows(store)
+    reads = _bands_reads(store, monkeypatch)
+    corpus.ingest_batch(store, _df(spark, [(21, D)]))
+    assert len(reads) == 1  # the candidate join only
+    assert _counts_rows(store) == _recount_rows(store)
+
+
+def test_no_bookkeeping_file_outside_the_logs(spark, store, monkeypatch):
+    """All COUNTS bookkeeping lives in its commits: after several
+    batches, a compaction and ``vacuum()``, the store root holds no
+    JSON file outside a ``__log__`` dir."""
+    import glob
+    import os
+
+    monkeypatch.setattr(corpus, "_COUNTS_COMPACT_APPENDS", 2)
+    for i, text in enumerate((A, B, C, D)):
+        corpus.ingest_batch(store, _df(spark, [(10 * i + 1, text)]))
+    ops = [v["op"] for v in store.versions(corpus.COUNTS)]
+    assert "append" in ops and "replace" in ops[1:]  # compacted
+    assert _counts_rows(store) == _recount_rows(store)
+    store.vacuum()
+    stray = [
+        p
+        for p in glob.glob(
+            os.path.join(store.root, "**", "*.json"), recursive=True
+        )
+        if ".__log__" not in p
+    ]
+    assert stray == []

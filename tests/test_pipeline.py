@@ -923,3 +923,72 @@ def test_concurrent_gold_tier_with_pruned_merges(
     assert _watermark_mismatches(store) == {}
     leaked = _persistent_rdd_ids(spark) - pre
     assert leaked == set(), f"checkpoints leaked: {leaked}"
+
+
+def _staging_aggregate(store) -> tuple:
+    """load_bronze's watermark and row count as one aggregation over
+    bronze staging: the stand-alone job the stage ran before it
+    observed them on its own MERGE."""
+    row = store.read("bronze.transactions_staging").agg(
+        F.date_format(
+            F.greatest(F.max("transaction_timestamp"), F.max("updated_at")),
+            "yyyy-MM-dd HH:mm:ss",
+        ).alias("wm"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    return row.wm, row.n
+
+
+@pytest.mark.parametrize("pruned", [False, True])
+def test_load_bronze_observes_what_the_aggregation_computed(
+    spark, store, pruned
+):
+    """On a day batch, load_bronze's watermark and ``merged`` (observed
+    on the MERGE source) equal the aggregation over staging — on the
+    table-creating first load and on a MERGE into an existing table,
+    whether that MERGE takes the full path (which reads its source
+    twice) or the file-pruned one."""
+    if pruned:
+        store.prune_min_table_bytes = 0
+    for day, batch_id in ((1, "BATCH_D1"), (2, "BATCH_D2")):
+        raw, _ = _day(spark, day)
+        medallion.validate_bronze(
+            store, raw, batch_id,
+            watermark=medallion.read_watermark(store, "bronze"),
+        )
+        wm, n = _staging_aggregate(store)
+        assert n > 0
+        r = medallion.load_bronze(store, batch_id)
+        assert (r["watermark"], r["merged"]) == (wm, n)
+        assert medallion.read_watermark(store, "bronze") == wm
+
+
+def test_load_bronze_replay_runs_no_spark_job(spark, store):
+    """A replay leaves bronze staging empty: load_bronze then answers
+    from the log alone — no MERGE, no aggregation, no Spark job in its
+    job group — and records the NULL watermark."""
+    import uuid
+
+    raw, _ = _day(spark, 1)
+    medallion.validate_bronze(store, raw, "BATCH_D1")
+    medallion.load_bronze(store, "BATCH_D1")
+    medallion.validate_bronze(
+        store, raw, "BATCH_RP",
+        watermark=medallion.read_watermark(store, "bronze"),
+    )
+    assert store.count("bronze.transactions_staging") == 0
+    n_bronze = store.count("bronze.transactions")
+    sc = spark.sparkContext
+    group = f"load-bronze-replay-{uuid.uuid4().hex[:8]}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        r = medallion.load_bronze(store, "BATCH_RP")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert r == {
+        "merged": 0, "records_inserted": 0, "records_updated": 0,
+        "watermark": None,
+    }
+    assert store.count("bronze.transactions") == n_bronze

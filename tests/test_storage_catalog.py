@@ -358,20 +358,11 @@ def test_vacuum_removes_only_orphans(spark, store):
     # a write that died before claiming a version leaves its stage dir
     stale_stage = store.path("bronze.vac_probe") + ".__stage__deadbeef"
     os.makedirs(stale_stage)
-    # ADVICE r10: any sidecar kind (the corpus counts-sync marker) is
-    # swept when its table dir is gone
-    orphan_sync = store.path("bronze.gone_table") + ".__sync__.json"
-    with open(orphan_sync, "w") as f:
-        f.write('{"bands_version": 3}')
-    live_sync = store.path("bronze.vac_probe") + ".__sync__.json"
-    with open(live_sync, "w") as f:
-        f.write('{"bands_version": 1}')
     removed = store.vacuum()
-    assert stale_stage in removed and orphan_sync in removed
-    # live table, its sidecars, and its data are untouched
+    assert stale_stage in removed
+    # live table and its data are untouched
     assert store.count("bronze.vac_probe") == 1
     assert store.read("bronze.vac_probe").count() == 1
-    assert os.path.exists(live_sync)
 
 
 def test_adopt_uncommitted_folds_orphan_files_into_committed_state(
@@ -1437,3 +1428,34 @@ def test_mixed_job_control_files_read_back_identically_non_utc_process(
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert "MIXED_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-4000:]
+
+
+def test_empty_and_partitioned_heads_register_in_the_catalog(
+    spark, tmp_path
+):
+    """The catalog table is created with the log's schema (and a
+    write_partitioned table's partition columns), so nothing is
+    inferred from the files: a table whose head holds no data file
+    registers on its first write and when a new store re-attaches it,
+    its next non-empty write is visible, and a partitioned table reads
+    its rows through spark.sql."""
+    from delta_lake_gcp_implementation_spark.pipeline import maintenance
+
+    root = str(tmp_path / "wh_register")
+    store = TableStore(spark, root)
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], ["k", "p"])
+    store.overwrite("reg.empty", df.limit(0))
+    maintenance.write_partitioned(store, "reg.parted", df, ["p"])
+    assert spark.catalog.tableExists("reg.empty")
+    assert spark.table("reg.empty").columns == ["k", "p"]
+    assert spark.sql("SELECT * FROM reg.empty").count() == 0
+    assert spark.sql(
+        "SELECT count(*) FROM reg.parted WHERE p = 'a'"
+    ).first()[0] == 2
+    for t in ("reg.empty", "reg.parted"):
+        spark.sql(f"DROP TABLE {t}")
+    reopened = TableStore(spark, root)
+    assert spark.catalog.tableExists("reg.empty")
+    assert spark.sql("SELECT count(*) FROM reg.parted").first()[0] == 3
+    reopened.overwrite("reg.empty", df)
+    assert spark.sql("SELECT count(*) FROM reg.empty").first()[0] == 3
